@@ -22,9 +22,12 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
   On a real deployment B=2048 and the table is Iceberg-partitioned by
   ``(days(warc_ts), bucket(url))``; here the extracted output is parquet
   ``partitionBy(bucket)`` with identical layout semantics.
-- The Arrow UDF uses the iterator form: per-python-worker init happens
-  once before the batch loop (the reference's load-model-once pattern,
-  ocr.py:59-79 / SURVEY.md §4 X1), then every Arrow batch reuses it.
+- The Arrow UDF uses the iterator form: per-task init happens once before
+  the batch loop (the reference's load-model-once pattern, ocr.py:59-79 /
+  SURVEY.md §4 X1), then every Arrow batch reuses it.
+- The extraction ``mapInArrow`` tasks are the ONLY Python tasks of a
+  commit group: the driver-built metrics and lineage frames are Arrow-
+  built (``session.arrow_frame``), never PythonRDD-backed lists.
 """
 
 from __future__ import annotations
@@ -45,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from manga_ocr_spark.jobs.session import arrow_frame
 
 PAGES_SCHEMA = StructType(
     [
@@ -99,6 +104,16 @@ EXTRACTED_DEBUG_SCHEMA = StructType(
     EXTRACTED_SCHEMA.fields + [StructField("blocks", ArrayType(BLOCK_STRUCT))]
 )
 
+METRICS_SCHEMA = StructType(
+    [
+        StructField("lang", StringType()),
+        StructField("blocks_kept", LongType()),
+        StructField("blocks_dropped", LongType()),
+        StructField("count", LongType()),
+        StructField("partition_id", StringType()),
+    ]
+)
+
 LINEAGE_SCHEMA = StructType(
     [
         StructField("partition_id", StringType()),
@@ -144,8 +159,13 @@ def _make_extract_map(debug_blocks: bool = False):
     Arrow RecordBatches end-to-end: the html binaries come straight off the
     Arrow buffers and results go back as Arrow arrays — measured ~30%
     faster than the equivalent mapInPandas (no pandas object-Series
-    round-trip for MB-scale binary columns). One-time per-python-worker
-    init happens before the batch loop (X1); the extraction core is pure
+    round-trip for MB-scale binary columns). The body runs once per TASK
+    (X1): its own init — the core import below, cached by a reused
+    worker — is cheap; the fixed cost each task pays (~0.25 CPU-s) is the
+    worker's per-task setup in PySpark itself (worker_util
+    setup_spark_files -> importlib.invalidate_caches, which re-reads
+    pyspark.zip once per cached zipimporter), so the number of extraction
+    tasks, not this closure, sets it. The extraction core is pure
     Python, imported here (not at module top) so the task closure stays
     tiny and the spark-submit --py-files layout is exercised.
 
@@ -409,11 +429,9 @@ class ExtractJob:
                  int(r["count"]), f"bucket={int(r['bucket'])}")
                 for r in per_bl
             ]
-            self.spark.createDataFrame(
-                metrics_rows,
-                "lang string, blocks_kept bigint, blocks_dropped bigint, "
-                "count bigint, partition_id string",
-            ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            arrow_frame(self.spark, metrics_rows, METRICS_SCHEMA).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(
                 "partition_id"
             ).parquet(f"{self.out_dir}/metrics")
             stats: dict[int, dict] = {}
@@ -439,7 +457,7 @@ class ExtractJob:
             ]
             # lineage commit is the *last* write of the group: its presence
             # certifies the group's extracted+metrics rows are durable.
-            self.spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).write.mode(
+            arrow_frame(self.spark, lineage_rows, LINEAGE_SCHEMA).write.mode(
                 "append"
             ).parquet(f"{self.out_dir}/lineage")
             committed.extend(group)

@@ -17,10 +17,18 @@ run.py:29-51 (skipped/duplicate accounting) applied at corpus scale.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from manga_ocr_spark.jobs.session import arrow_frame
 from manga_ocr_spark.operators import dedup as D
 
-METRICS_SCHEMA = "metric string, band int, value bigint"
+METRICS_SCHEMA = StructType(
+    [
+        StructField("metric", StringType()),
+        StructField("band", IntegerType()),
+        StructField("value", LongType()),
+    ]
+)
 
 
 def neardedup_keep_ids(
@@ -130,7 +138,7 @@ def run_neardedup(
     for r in sorted(drops_by_band, key=lambda r: int(r["band"])):
         rows.append(("capped_buckets", int(r["band"]), int(r["n_buckets"])))
         rows.append(("capped_bucket_rows", int(r["band"]), int(r["n_rows"])))
-    spark.createDataFrame(rows, METRICS_SCHEMA).write.mode("overwrite").parquet(
+    arrow_frame(spark, rows, METRICS_SCHEMA).write.mode("overwrite").parquet(
         f"{out_dir}/metrics"
     )
     return {"docs_in": n_in, "docs_kept": n_kept, "docs_dropped": n_in - n_kept}

@@ -21,8 +21,10 @@ sandbox scale:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _resolve_master(master: str | None, env: dict, cpus: int) -> str | None:
@@ -58,6 +60,54 @@ def _java_opts(cpus: int | None = None) -> str:
     return f"-XX:+UseParallelGC {apc}{extra}".strip()
 
 
+def _default_driver_memory(cpus: int, phys_bytes: int | None) -> str:
+    """Default ``spark.driver.memory`` when $SPARK_DRIVER_MEMORY is unset.
+
+    The per-slot rule (~1.5 GB per slot, floor 16 GB) is the ceiling:
+    local mode concentrates ALL task buffers (shuffle, dynamic-partition
+    parquet writers, Arrow feeds) in the one driver JVM — measured: 60 KB-
+    page extraction at local[32] OOMs a 16g heap but completes in 48g.
+    Half of physical memory caps it, so the heap plus the Python workers
+    and off-heap Arrow/netty buffers fit in RAM on a small host (a 16 GB
+    floor on a 15 GB swapless host is a heap the OS cannot back). Floor
+    1 GB; ``phys_bytes=None`` (no sysconf) keeps the per-slot rule."""
+    per_slot_mb = max(16, int(cpus * 1.5)) * 1024
+    if phys_bytes is None:
+        return f"{per_slot_mb}m"
+    return f"{max(1024, min(per_slot_mb, phys_bytes // 2 // (1 << 20)))}m"
+
+
+def _phys_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def arrow_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
+    """Driver-built rows -> DataFrame through one ``pyarrow.Table``.
+
+    ``spark.createDataFrame(<list>, schema)`` goes parallelize ->
+    PythonRDD: every write of a few driver rows then runs
+    ``spark.default.parallelism`` Python-worker tasks, each paying a
+    fixed ~0.25 CPU-s before doing any work. The Arrow-table path ships
+    the batches straight to the JVM instead — one partition per Arrow
+    batch (one for a few rows), no Python tasks. Columns use the schema's Arrow form, so
+    TimestampType is a UTC instant and a naive ``datetime`` is read as
+    UTC wall time, never in the driver's local zone (the list path's
+    ``time.mktime`` reads it as local time). ``rows`` may be empty: the
+    frame still carries ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "manga-ocr-spark",
@@ -66,7 +116,7 @@ def get_spark(
 ) -> SparkSession:
     # Python workers are separate processes spawned by the JVM; they inherit
     # the env, not the driver's sys.path. Exporting the package root on
-    # PYTHONPATH makes `import manga_ocr_spark` work inside mapInPandas
+    # PYTHONPATH makes `import manga_ocr_spark` work inside mapInArrow
     # regardless of the driver's cwd (on a cluster, spark-submit --py-files
     # plays this role).
     pkg_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -120,17 +170,19 @@ def get_spark(
         # setting — executed plans compared identical, so no local win
         # is claimed); the setting matters where a dimension side
         # exceeds broadcast but fits a per-partition hash map, i.e. at
-        # cluster scale.
+        # cluster scale. Caveat: the planner's "fits a hash map" test
+        # reads size ESTIMATES, and frames derived from UDF output
+        # (mapInArrow / pandas_udf results) can carry estimates far from
+        # their real size — size-check (or materialize) such a frame
+        # before joining it, or a misjudged build side can OOM a task.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # heap scales with task slots: local mode concentrates ALL task
-        # buffers (shuffle, dynamic-partition parquet writers, Arrow
-        # feeds) in the one driver JVM — measured: 60 KB-page extraction
-        # at local[32] OOMs a 16g heap but completes in 48g. ~1.5 GB per
-        # slot, floor 16g; on a real cluster this is per-EXECUTOR memory
-        # and spark-submit's --driver-memory/--executor-memory govern.
+        # heap scales with task slots, capped by physical memory (see
+        # _default_driver_memory); on a real cluster this is per-EXECUTOR
+        # memory and spark-submit's --driver-memory/--executor-memory govern
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", f"{max(16, int(cpus * 1.5))}g"),
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or _default_driver_memory(cpus, _phys_bytes()),
         )
         # throughput GC for batch work: G1's pause-time tuning throttled the
         # allocation-heavy parquet-binary scan at high core counts (measured

@@ -5,7 +5,7 @@ The reference's CLI daemon polls a directory, keys seen work by
 (/root/reference/manga_ocr/run.py:93-107,166-214). The Spark-native
 equivalent is a Structured Streaming file source — its checkpointed
 seen-files log IS the (path, mtime) set, made durable and exactly-once —
-feeding the same extraction mapInPandas and an append sink via
+feeding the same extraction mapInArrow and an append sink via
 foreachBatch.
 
 ``trigger(availableNow=True)`` gives catch-up batch semantics (process

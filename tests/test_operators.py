@@ -79,6 +79,31 @@ def test_minhash_vectorized_matches_reference_per_row(spark):
     assert got == want
 
 
+def test_minhash_degenerate_doc_window_dedup_matches_reference(spark):
+    # a doc with > 65,536 5-gram windows takes the per-doc window-dedup
+    # branch (memory bound for multi-MB repetitive pages); its signature
+    # — and its batch neighbours' segment boundaries — must stay
+    # bit-identical to minhash_signature_py
+    texts = [
+        "the quick brown fox",
+        "buy cheap pills now " * 5000,  # 100k chars, 20 distinct windows
+        "jumps over the lazy dog",
+        "".join(f"spam {i % 97} " for i in range(12000)),
+    ]
+    assert all(len(t) - 4 > 65536 for t in texts[1::2])
+    # one partition -> one Arrow batch holding all four docs
+    df = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(texts)], "doc_id int, text string"
+    ).coalesce(1)
+    got = {
+        r.doc_id: r.sig
+        for r in df.select(
+            "doc_id", D.minhash_signature(F.col("text")).alias("sig")
+        ).collect()
+    }
+    assert got == {i: D.minhash_signature_py(t) for i, t in enumerate(texts)}
+
+
 def test_minhash_different_num_hashes_share_one_session(spark):
     # the worker-side gram cache stores FULL-width vectors and slices per
     # call — mixing num_hashes values over the same grams must not

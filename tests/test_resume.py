@@ -175,3 +175,69 @@ def test_committed_buckets_ignores_inflight_committer_files(spark, tmp_path):
     )
     with pytest.raises(Exception):
         job.committed_buckets()
+
+
+def test_commit_frames_start_no_python_workers(spark, pages_df, tmp_path, capture_arrow_frames):
+    # metrics + lineage rows are driver-built; a list-built frame is a
+    # PythonRDD whose write runs spark.default.parallelism Python tasks.
+    # The Arrow-built frames must plan no PythonRDD at all.
+    import manga_ocr_spark.jobs.extract as X
+
+    frames = capture_arrow_frames(X)
+    ExtractJob(spark, str(tmp_path / "out"), num_buckets=4, commit_group_size=2).run(pages_df)
+    assert [f.schema for f in frames] == [X.METRICS_SCHEMA, X.LINEAGE_SCHEMA] * 2
+    for f in frames:
+        assert "PythonRDD" not in f._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_lineage_timestamps_are_utc_instants_in_any_driver_tz(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    # the recorded epoch must survive the trip to parquet whatever the
+    # driver's local zone is (a list-built frame reads the naive UTC
+    # datetime in local time: 5 h late under America/New_York)
+    import time
+    import types
+
+    import manga_ocr_spark.jobs.extract as X
+
+    epoch = 1700000000
+    monkeypatch.setattr(X, "time", types.SimpleNamespace(time=lambda: float(epoch)))
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        out = str(tmp_path / "out")
+        ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages_df, max_groups=1)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    got = spark.read.parquet(f"{out}/lineage").select(
+        F.unix_timestamp("t_start").alias("s"), F.unix_timestamp("t_end").alias("e")
+    ).collect()
+    assert len(got) == 2
+    assert all(r.s == epoch and r.e == epoch for r in got)
+
+
+def test_empty_commit_group_writes_lineage_and_readable_metrics(spark, pages_df, tmp_path):
+    # a group whose buckets hold no pages has metrics_rows == []: the
+    # group still commits zero-count lineage rows, and the metrics sink
+    # stays readable with its declared types
+    from manga_ocr_spark.jobs.extract import LINEAGE_SCHEMA, METRICS_SCHEMA, with_bucket
+
+    only_b0 = with_bucket(pages_df, 4).filter(F.col("bucket") == 0).drop("bucket")
+    n = only_b0.count()
+    out = str(tmp_path / "out")
+    committed = ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(only_b0)
+    assert committed == [0, 1, 2, 3]
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.schema == LINEAGE_SCHEMA
+    rows = {r.partition_id: r.input_rows for r in lineage.collect()}
+    assert rows == {"bucket=0": n, "bucket=1": 0, "bucket=2": 0, "bucket=3": 0}
+    metrics = spark.read.parquet(f"{out}/metrics")
+    assert {f.name: f.dataType for f in metrics.schema} == {
+        f.name: f.dataType for f in METRICS_SCHEMA
+    }
+    assert {r.partition_id for r in metrics.select("partition_id").distinct().collect()} == {
+        "bucket=0"
+    }
+    assert metrics.agg(F.sum("count")).collect()[0][0] == n
