@@ -324,7 +324,7 @@ def _q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full filter-stage feature vector in one query."""
     # every column is a pure expression — one scan, ZERO shuffles/joins
     # (plan-pinned), incl. the repetition fractions (sort + longest-
-    # equal-run fold, operators/text.py::top_gram_frac)
+    # equal-run fold, operators/text.py::_top_run_best)
     return T.quality_panel(_t(spark, sf_dir, "documents"))
 
 
@@ -350,7 +350,7 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs_with_dups(spark, sf_dir).filter(
         (F.col("doc_id") < 50) | (F.col("doc_id") >= 100000)
     )
-    pairs, rep_map = D.lsh_guarded_candidates(d, max_bucket_size=D.LSH_MAX_BUCKET)
+    pairs, rep_map, _ = D.lsh_guarded_with_drops(d, max_bucket_size=D.LSH_MAX_BUCKET)
     return D.expand_rep_pairs(pairs, rep_map)
 
 
@@ -377,7 +377,7 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs_with_dups(spark, sf_dir).filter(
         (F.col("doc_id") < 100) | (F.col("doc_id") >= 100000)
     )
-    pairs, rep_map = D.simhash_guarded_candidates(
+    pairs, rep_map, _ = D.simhash_guarded_with_drops(
         d, bands=4, max_hamming=3, max_bucket_size=D.LSH_MAX_BUCKET
     )
     return D.expand_rep_pairs(pairs, rep_map, carry={"hamming": F.lit(0)})
@@ -995,7 +995,7 @@ with docs_dups as (
   select doc_id + 100000 as doc_id, text from documents where doc_id < 50
 )"""
 
-    # GUARDED-path mirror (operators/dedup.py::lsh_guarded_candidates):
+    # GUARDED-path mirror (operators/dedup.py::lsh_guarded_with_drops):
     # exact-fingerprint collapse to min-id representatives, MinHash over
     # reps only, per-(band, band_key) size cap, rep self-join, then
     # expansion back to member-level pairs (within-group + cross-group).
@@ -1042,8 +1042,9 @@ from repmap a join repmap b on a.rep = b.rep and a.doc_id < b.doc_id"""
 
     # generated from T.SCRIPT_LANG_RULES/T.SCRIPT_RANGES (tier 1) and
     # T.LANG_MARKERS (tier 2) so adding a script rule or a language
-    # updates BOTH the Spark expression (operators/text.py::lang_id) and
-    # this oracle in lockstep; WHEN order mirrors lang_id exactly (script
+    # updates BOTH the Spark expression (operators/text.py::
+    # _lang_from_counts, behind quality_panel and lang_id_frame) and this
+    # oracle in lockstep; WHEN order mirrors _lang_from_counts exactly (script
     # rules first match wins, then marker ties break earlier-wins).
     # Script counts/thresholds run over the PROBE WINDOW (substr +
     # least), mirroring T.SCRIPT_PREFIX_CHARS; the oracle keeps the
@@ -1085,7 +1086,7 @@ from repmap a join repmap b on a.rep = b.rep and a.doc_id < b.doc_id"""
         _simhash_sql_ctes("select doc_id, text from documents where doc_id < 100")
         + "\nselect doc_id, simhash from sim"
     )
-    # GUARDED-path mirror (operators/dedup.py::simhash_guarded_candidates):
+    # GUARDED-path mirror (operators/dedup.py::simhash_guarded_with_drops):
     # the same collapse+cap+expand as the MinHash mirror above, with the
     # SimHash banding in the middle. Within-group pairs are hamming 0
     # (identical content); cross pairs inherit the rep pair's distance

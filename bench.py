@@ -160,11 +160,10 @@ def _timed_extract(spark, sf_dir: str, fanout: int, salt_partitions: int) -> dic
     }
 
 
-def _headline_queries(
-    spark, sf_dir: str
-) -> tuple[dict[str, float], dict[str, dict[str, float]]]:
-    """Full-size variants of the operator inventory (no oracle-subsetting).
-    Returns (median per query, {min, med, max} spread per query)."""
+def build_headline_queries(spark, sf_dir: str, cpus: int) -> dict:
+    """The headline query builders: full-size variants of the operator
+    inventory (no oracle-subsetting), name -> zero-argument builder. The
+    one table that bench_extra.py and tools/dump_plans_r07.py also use."""
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
@@ -175,10 +174,10 @@ def _headline_queries(
     # the sf parquet files are single-split small; CPU-bound UDF stages
     # (minhash/simhash) need rows spread over cores — at 100 TB the scan
     # itself provides ~800k splits, here an explicit repartition stands in
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(CPUS)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(CPUS)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
 
-    qs = {
+    return {
         "q1_pricing_summary": lambda: E._q1_pricing(spark, sf_dir),
         "q3_top_revenue": lambda: E._q3_top_revenue(spark, sf_dir),
         "q5_region_revenue": lambda: E._q5_region_revenue(spark, sf_dir),
@@ -187,16 +186,15 @@ def _headline_queries(
         "dedup_exact_keep": lambda: D.exact_dedup(docs),
         # the GUARDED production shape (r6 fused: ONE text pass computes
         # fingerprint + signature; banding/cap over reps from the single
-        # materialized base) — the same path the driver query runs;
-        # benching the unguarded form would hide regressions in the
-        # scale-critical collapse/cap stages
+        # materialized base) — the same path the driver query runs,
+        # scale-critical collapse/cap stages included
         "minhash_candidate_pairs": lambda: D.expand_rep_pairs(
-            *D.lsh_guarded_candidates(docs, max_bucket_size=D.LSH_MAX_BUCKET)
+            *D.lsh_guarded_with_drops(docs, max_bucket_size=D.LSH_MAX_BUCKET)[:2]
         ),
         "simhash_docs": lambda: D.simhash64(docs),
         # guarded SimHash (r6): same fused posture as the MinHash tier
         "simhash_candidate_pairs": lambda: D.expand_rep_pairs(
-            *D.simhash_guarded_candidates(docs, max_bucket_size=D.LSH_MAX_BUCKET),
+            *D.simhash_guarded_with_drops(docs, max_bucket_size=D.LSH_MAX_BUCKET)[:2],
             carry={"hamming": F.lit(0)},
         ),
         "cosine_topk": lambda: S.cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=10),
@@ -218,6 +216,14 @@ def _headline_queries(
         "lang_id": lambda: T.lang_id_frame(docs),
         "media_meta": lambda: E._q_media_meta(spark, sf_dir),
     }
+
+
+def _headline_queries(
+    spark, sf_dir: str
+) -> tuple[dict[str, float], dict[str, dict[str, float]]]:
+    """Times every :func:`build_headline_queries` entry. Returns (median
+    per query, {min, med, max} spread per query)."""
+    qs = build_headline_queries(spark, sf_dir, CPUS)
     # median-of-N per query: round 2's apparent regressions
     # (dedup_exact_keep +21%, media_meta 6x) were single cold samples on a
     # shared noisy host — re-measured 5x they sit at/below round-1 levels

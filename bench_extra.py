@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Focused benchmark harness for optimization work (guide §1.4).
 
-bench.py is FROZEN for driver measurement; this file exists so individual
-queries can be re-timed in isolation during optimization without touching
-it. Reuses bench.py's own query builders (same shapes the driver times),
+bench.py times the whole headline suite; this file re-times individual
+queries in isolation during optimization. Reuses bench.py's query table
+(``bench.build_headline_queries``, the shapes the driver times),
 noop-sink forcing, and quiet-gate probe.
 
 Usage:
@@ -30,46 +30,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def build_headline_queries(spark, sf_dir: str, cpus: int) -> dict:
-    """The headline query builders, ONE copy shared by bench_extra and
-    tools/dump_plans_r07.py (bench.py keeps its own frozen copy — the
-    driver contract; keep this dict in lockstep with it)."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as E
-    from manga_ocr_spark.operators import dedup as D
-    from manga_ocr_spark.operators import similarity as S
-    from manga_ocr_spark.operators import text as T
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
-    SF_DIR = sf_dir
-    return {
-        "q1_pricing_summary": lambda: E._q1_pricing(spark, SF_DIR),
-        "q3_top_revenue": lambda: E._q3_top_revenue(spark, SF_DIR),
-        "q5_region_revenue": lambda: E._q5_region_revenue(spark, SF_DIR),
-        "window_rank_orders": lambda: E._q_window_rank(spark, SF_DIR),
-        "events_hourly": lambda: E._q_events_hourly(spark, SF_DIR),
-        "dedup_exact_keep": lambda: D.exact_dedup(docs),
-        "minhash_candidate_pairs": lambda: D.expand_rep_pairs(
-            *D.lsh_guarded_candidates(docs, max_bucket_size=D.LSH_MAX_BUCKET)
-        ),
-        "simhash_docs": lambda: D.simhash64(docs),
-        "simhash_candidate_pairs": lambda: D.expand_rep_pairs(
-            *D.simhash_guarded_candidates(docs, max_bucket_size=D.LSH_MAX_BUCKET),
-            carry={"hamming": F.lit(0)},
-        ),
-        "cosine_topk": lambda: S.cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=10),
-        "ann_lsh_topk": lambda: S.lsh_bucket_topk(
-            emb.filter(F.col("vec_id") < 20), emb, k=10, dim=64, bits=4, bands=16
-        ),
-        "token_stats": lambda: E._q_token_stats(spark, SF_DIR),
-        "quality_scores": lambda: T.quality_panel(docs),
-        "lang_id": lambda: T.lang_id_frame(docs),
-        "media_meta": lambda: E._q_media_meta(spark, SF_DIR),
-    }
-
-
 def main() -> None:
     only = set(sys.argv[1:])
     from manga_ocr_spark.jobs.session import get_spark
@@ -82,7 +42,7 @@ def main() -> None:
     spark = get_spark(master=f"local[{CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
     canary = B._noise_canary(spark)
-    qs = build_headline_queries(spark, SF_DIR, CPUS)
+    qs = B.build_headline_queries(spark, SF_DIR, CPUS)
     unknown = only - qs.keys()
     if unknown:
         sys.exit(f"unknown query name(s): {sorted(unknown)} — valid: {sorted(qs)}")

@@ -21,11 +21,14 @@ Layers
   salted repartition, per-bucket lineage commit + resume, metrics,
   spark-submit entrypoint (``run_extract.py``).
 - ``operators/`` — large-scale training-data-pipeline operators: dedup
-  (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding-cosine /
-  connected-components clustering), similarity search (cosine top-k,
-  hyperplane-LSH ANN), text analysis (lang-id, quality, tokens,
-  fingerprints, rolling hash), eval metrics (exact-match, CER), as-of
-  join, skew-safe aggregation, multimodal binary-payload plumbing.
+  (exact / guarded MinHash-LSH and SimHash near-dup tiers / n-gram
+  Jaccard / embedding-cosine / connected-components clustering),
+  similarity search (cosine top-k, hyperplane-LSH ANN), text analysis
+  (the one-pass ``quality_panel`` and the layered ``lang_id_frame``, token
+  counts, fingerprints, rolling hash), eval metrics (exact-match, CER),
+  as-of join, skew-safe aggregation, multimodal binary-payload plumbing,
+  and ``memo``, the driver-side construction cache the wide builders
+  share.
 - ``sources/``   — XML annotation exploder and other format adapters.
 - ``streaming/`` — Structured Streaming ingestion (availableNow catch-up
   and daemon mode) + stateful per-host counters

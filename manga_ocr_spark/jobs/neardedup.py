@@ -4,7 +4,7 @@ keep-set write, with the guard's capped-bucket drops aggregated into the
 metrics sink.
 
 The guard (operators/dedup.py::lsh_guarded_with_drops) trades a little
-recall on degenerate mega-buckets for a bounded self-join — and lost
+recall on degenerate mega-buckets for a bounded pair expansion — and lost
 recall MUST be a counter, never silence. This job is the consumer of that
 side channel: per-band (n_buckets, n_rows) capped-drop aggregates land in
 ``<out_dir>/metrics`` next to the kept/dropped counters, so a production

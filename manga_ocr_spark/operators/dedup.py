@@ -4,14 +4,15 @@ Scale design notes (the point of each operator at 100 TB):
 
 - **exact**: one shuffle on a 32-byte fingerprint — the cheapest possible
   grouping key; map-side partial aggregation applies.
-- **MinHash+LSH**: signatures are computed map-side (no shuffle); the only
-  shuffle is the band-bucket groupBy, whose keys are small longs. Candidate
-  pairs are generated per-bucket, so the cross product never materializes
+- **MinHash+LSH**: signatures are computed map-side (no shuffle), fused
+  with the exact-dup collapse; the band-bucket groupBy runs over
+  representatives only, with a per-bucket size cap. Candidate pairs are
+  generated per-bucket, so the cross product never materializes
   globally — this is what makes near-dedup feasible at 10^12 docs where a
   naive pairwise join (10^24 pairs) cannot exist.
 - **SimHash**: 64-bit signature per doc via one Arrow-batched pandas UDF;
-  near-dup candidates = equal signature (or banded prefixes), again a
-  cheap long-key shuffle.
+  the same guarded skeleton bands bit-slices of it, again a cheap
+  long-key shuffle.
 - **n-gram Jaccard**: exact verification for candidate pairs — used
   *after* LSH banding at scale; the standalone pairwise form here is for
   small refinement sets and oracle checking.
@@ -29,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from manga_ocr_spark.operators.memo import memo
 from manga_ocr_spark.operators.text import fingerprint
 
 # -- exact ---------------------------------------------------------------
@@ -206,13 +208,13 @@ def minhash_signature(col: Column, num_hashes: int = 16) -> Column:
     scatter). Bit-identical to :func:`minhash_signature_py` (pinned by
     test) and portable to the DuckDB oracle.
     """
-    from pyspark.sql.types import ArrayType, LongType
-
     if num_hashes > len(MINHASH_AB):
         raise ValueError(f"num_hashes={num_hashes} exceeds {len(MINHASH_AB)} constants")
-    cached = _UDF_CACHE.get(("minhash", num_hashes, _ctx_key()))
-    if cached is not None:
-        return cached(col)
+    return memo(("minhash", num_hashes), lambda: _minhash_udf(num_hashes))(col)
+
+
+def _minhash_udf(num_hashes: int):
+    from pyspark.sql.types import ArrayType, LongType
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sig(texts: pd.Series) -> pd.Series:
@@ -260,18 +262,17 @@ def minhash_signature(col: Column, num_hashes: int = 16) -> Column:
         o = out.astype(np.int64)
         return pd.Series([row.tolist() for row in o])
 
-    _UDF_CACHE[("minhash", num_hashes, _ctx_key())] = _sig
-    return _sig(col)
+    return _sig
 
 
 # Default per-(band, band_key) size cap for the guarded LSH tier. A
 # degenerate bucket — m pages sharing a band key — expands to O(m^2)
-# candidate pairs ON ONE REDUCER KEY in the self-join; at 10^12 docs the
-# empty/boilerplate shells and parked-domain clones that survive exact
-# collapse can still make m millions. A bucket with more than this many
-# DISTINCT contents is near-useless for dedup (standard MinHashLSH
+# candidate pairs ON ONE REDUCER KEY in the pair expansion; at 10^12 docs
+# the empty/boilerplate shells and parked-domain clones that survive
+# exact collapse can still make m millions. A bucket with more than this
+# many DISTINCT contents is near-useless for dedup (standard MinHashLSH
 # posture: such buckets are noise, not signal) and is dropped, trading
-# a little recall on mega-clusters for a bounded join.
+# a little recall on mega-clusters for a bounded expansion.
 LSH_MAX_BUCKET = 64
 
 
@@ -280,47 +281,14 @@ LSH_MAX_BUCKET = 64
 # those rows from rep_map (they'd vanish from the fold-back). Coalescing
 # to a non-hex sentinel makes all content-less rows ONE exact-dup group —
 # the same grouping the SQL oracle's `partition by md5(...)` applies
-# (window PARTITION BY puts NULL keys in one partition), and consistent
-# with the unguarded tier, where every NULL/empty doc shares the
+# (window PARTITION BY puts NULL keys in one partition), and the pairing
+# that banding the raw signatures gives: every NULL/empty doc shares the
 # empty-gram signature and therefore every band.
 _NULL_FP = "__null__"
-
-# memoized pandas-UDF wrappers (keyed by their closure parameters): a
-# @pandas_udf declaration costs driver-side py4j round trips per call
-# site, and the wrapped function is parameter-identical across calls —
-# construction caching only, execution is untouched. UDF keys include
-# the active SparkContext's identity (r7 review): a cached wrapper's
-# lazily-created _judf binds that context's accumulator server, so
-# reusing it after spark.stop()+restart would target a dead accumulator.
-# Pure Column/expression entries (band explodes, pair expressions) carry
-# no context state and are cached without it.
-_UDF_CACHE: dict[tuple, object] = {}
-
-
-def _ctx_key() -> int:
-    """Identity of the active SparkContext (0 when none yet) — cache-key
-    component for context-bound cached objects."""
-    from pyspark import SparkContext
-
-    return id(SparkContext._active_spark_context)
 
 
 def _fingerprint_nn(col: Column) -> Column:
     return F.coalesce(fingerprint(col), F.lit(_NULL_FP))
-
-
-def exact_rep_map(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, rep_id) where rep_id = min id among rows with identical
-    content fingerprint — the exact-duplicate collapse of the guarded
-    near-dup tiers, which keeps m byte-identical docs from contributing
-    m^2 candidate pairs per band. NULL-text rows form one group via a
-    sentinel fingerprint (they'd otherwise vanish through the
-    null-rejecting join). Same shuffle profile as :func:`exact_dedup`
-    (fingerprint groupBy with partial_min + one fingerprint-keyed join
-    back)."""
-    w = df.select(F.col(id_col), _fingerprint_nn(F.col(text_col)).alias("fingerprint"))
-    reps = w.groupBy("fingerprint").agg(F.min(id_col).alias("rep_id"))
-    return w.join(reps, "fingerprint").select(id_col, "rep_id")
 
 
 # -- fused guarded-tier skeleton (shared by MinHash and SimHash) -------------
@@ -353,8 +321,10 @@ def exact_rep_map(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 def _fused_rep_base(
-    df: DataFrame, text_col: str, id_col: str, sig: Column, sig_name: str, materialize: bool
+    df: DataFrame, text_col: str, id_col: str, sig: Column, sig_name: str
 ) -> DataFrame:
+    """The lazy (id, rep_id, sig) frame; the guarded tiers checkpoint it,
+    and that checkpoint is the ONLY job that touches text."""
     from pyspark.sql import Window
 
     base = df.select(
@@ -363,60 +333,14 @@ def _fused_rep_base(
         sig.alias(sig_name),
     )
     w = Window.partitionBy("fingerprint")
-    wbase = base.select(
+    return base.select(
         F.col(id_col), F.min(id_col).over(w).alias("rep_id"), F.col(sig_name)
     )
-    # the ONLY job that touches text; everything downstream reads this
-    return wbase.localCheckpoint() if materialize else wbase
 
 
-def minhash_lsh_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    materialize: bool = True,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Docs -> (band, band_key, id) bucket assignments.
-
-    Two docs are near-dup *candidates* iff they share (band, band_key) for
-    any band. rows_per_band = num_hashes / bands.
-
-    ``materialize`` localCheckpoints the signature frame: the downstream
-    self-join re-aliases one side, which defeats ReuseExchange, so WITHOUT
-    materialization the signature UDF runs twice over the corpus
-    (measured: both join branches carried their own ArrowEvalPython).
-    On a cluster the equivalent is staging the signature table to parquet
-    before the join — same idea, fault-tolerant storage.
-
-    ``max_bucket_size`` is the hot-bucket guard: (band, band_key) groups
-    with more members are removed BEFORE the self-join (see
-    :data:`LSH_MAX_BUCKET`). The size scan is one cheap count over small
-    key/id rows; dropped buckets can be observed via
-    :func:`oversized_buckets` for a metrics sink.
-    """
-    if num_hashes % bands != 0:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
-    # name the UDF output first — a Python UDF cannot be referenced
-    # inside a higher-order-function lambda (UNSUPPORTED_FEATURE), and a
-    # named column also guarantees the signature is computed exactly once
-    sig = df.select(
-        F.col(id_col), minhash_signature(F.col(text_col), num_hashes).alias("sig")
-    )
-    if materialize:
-        sig = sig.localCheckpoint()
-    out = _minhash_band_explode(sig, id_col, num_hashes, bands)
-    if max_bucket_size is not None:
-        out = _cap_buckets(out, max_bucket_size)
-        if materialize:
-            # the downstream pair self-join re-aliases one side, which
-            # defeats ReuseExchange (same measured fact as the signature
-            # checkpoint above) — without this cut the cap's count
-            # aggregate + semi-join would run once PER BRANCH
-            out = out.localCheckpoint()
-    return out
+def _check_cap(max_bucket_size: int) -> None:
+    if not isinstance(max_bucket_size, int) or max_bucket_size < 1:
+        raise ValueError(f"max_bucket_size must be a positive int, got {max_bucket_size!r}")
 
 
 def _minhash_band_explode(
@@ -424,9 +348,8 @@ def _minhash_band_explode(
 ) -> DataFrame:
     """(id, sig) -> (id, band, band_key): md5 over each of ``bands`` equal
     signature slices. Pure codegen expressions — no UDF, no shuffle."""
-    key = ("mh_bands", num_hashes, bands)
-    exploded = _UDF_CACHE.get(key)
-    if exploded is None:
+
+    def build() -> Column:
         rows = num_hashes // bands
         bands_expr = F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -443,24 +366,12 @@ def _minhash_band_explode(
                 ).alias("band_key"),
             ),
         )
-        exploded = _UDF_CACHE[key] = F.explode(bands_expr).alias("bk")
+        return F.explode(bands_expr).alias("bk")
+
+    exploded = memo(("mh_bands", num_hashes, bands), build)
     return sig.select(F.col(id_col), exploded).select(
         id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
     )
-
-
-def _cap_buckets(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Drop (band, band_key) groups larger than ``max_bucket_size`` via a
-    count + left-semi back-join on the bucket key — both sides shuffle on
-    the SAME key, so AQE/ReuseExchange co-partitions them, and the count
-    side carries only (band, band_key, n)."""
-    keep = (
-        buckets.groupBy("band", "band_key")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") <= max_bucket_size)
-        .drop("__n")
-    )
-    return buckets.join(keep, ["band", "band_key"], "left_semi")
 
 
 def oversized_buckets(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
@@ -476,8 +387,7 @@ def oversized_buckets(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
 
 def _drop_oversized(buckets: DataFrame, dropped: DataFrame) -> DataFrame:
     """Remove capped buckets via a left-anti join against the oversized
-    list. r7 replacement for the keep-side semi join of
-    :func:`_cap_buckets` on the guarded tiers: at 10^12 docs the
+    list, not a semi join against the kept list: at 10^12 docs the
     keep-list is essentially EVERY bucket key (billions of rows — a semi
     join degrades to shuffling the bucket rows a second time), while the
     capped list is the exception tail the cap exists for — so ship the
@@ -490,50 +400,12 @@ def _drop_oversized(buckets: DataFrame, dropped: DataFrame) -> DataFrame:
     The count aggregate feeding ``dropped`` still runs with map-side
     partial aggregation over narrow (band, band_key) rows, so a
     mega-bucket never concentrates rows anywhere before it is counted.
-    Same kept set: n <= cap vs n > cap partition the bucket keys, and
-    band keys are never NULL (md5 of a non-null string / a bit-slice of
-    a non-null long)."""
+    Band keys are never NULL (md5 of a non-null string / a bit-slice of
+    a non-null long), so the anti join keeps exactly the n <= cap
+    buckets."""
     return buckets.join(
         dropped.select("band", "band_key"), ["band", "band_key"], "left_anti"
     )
-
-
-def lsh_guarded_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    max_bucket_size: int = LSH_MAX_BUCKET,
-    materialize: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """The production near-dup candidate generator: one fused pass
-    computes the exact-dup fingerprint AND the MinHash signature (see the
-    skeleton notes above), then banding runs over each fingerprint
-    group's min-id REPRESENTATIVE only, with a per-bucket size cap,
-    yielding candidate pairs among representatives.
-
-    Returns ``(rep_pairs, rep_map)`` — pairs are between representative
-    ids; ``rep_map`` (id, rep_id) folds every member back onto its
-    representative. Downstream dedup never needs member-level pairs:
-    clustering runs on reps and members inherit their rep's cluster
-    (identical content IS the strongest near-dup relation). For
-    small-scale verification/oracles, :func:`expand_rep_pairs`
-    reconstructs the exact member-level pair set of the unguarded form.
-    For the capped-drop metrics side channel use
-    :func:`lsh_guarded_with_drops`.
-
-    Why this shape at 10^12 docs: byte-identical shells (empty pages,
-    parked domains, error boilerplate) are the worst skew — m copies
-    share EVERY band key, making one bucket's pair expansion O(m^2) on a
-    single reducer key. Banding reps only makes them one bucket row; the
-    bucket cap bounds whatever degenerate near-identical (not identical)
-    clusters remain. Reference analogue: the content-dedup semantics of
-    run.py:29-51 applied at scale."""
-    pairs, rep_map, _ = lsh_guarded_with_drops(
-        df, text_col, id_col, num_hashes, bands, max_bucket_size, materialize
-    )
-    return pairs, rep_map
 
 
 def lsh_guarded_with_drops(
@@ -543,32 +415,47 @@ def lsh_guarded_with_drops(
     num_hashes: int = 16,
     bands: int = 4,
     max_bucket_size: int = LSH_MAX_BUCKET,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """:func:`lsh_guarded_candidates` plus the guard's drop side channel:
-    returns ``(rep_pairs, rep_map, dropped)`` where ``dropped`` is the
-    (band, band_key, n) frame of buckets the cap removed (empty when
-    nothing was capped). Jobs MUST aggregate ``dropped`` into their
-    metrics sink (see jobs/neardedup.py) — a capped mega-cluster is lost
-    recall, and lost recall has to be a counter, never silence. Derived
-    from the fused rep base, so observing it re-scans only narrow
-    checkpointed rows. ``max_bucket_size=None`` (uncapped) is a TEST-ONLY
-    escape hatch for equivalence pins: it routes unbounded buckets into
-    the in-array pair expansion, so production callers must keep
-    :data:`LSH_MAX_BUCKET` (or tighter) as the floor (jobs/neardedup.py
-    cannot pass None)."""
+    """The production near-dup candidate generator: one fused pass
+    computes the exact-dup fingerprint AND the MinHash signature (see the
+    skeleton notes above), then banding (``bands`` md5 keys over equal
+    signature slices; ``num_hashes`` must divide evenly) runs over each
+    fingerprint group's min-id REPRESENTATIVE only, with a per-bucket
+    size cap, yielding candidate pairs among representatives.
+
+    Returns ``(rep_pairs, rep_map, dropped)``. Pairs are between
+    representative ids; ``rep_map`` (id, rep_id) folds every member back
+    onto its representative. Downstream dedup never needs member-level
+    pairs: clustering runs on reps and members inherit their rep's
+    cluster (identical content IS the strongest near-dup relation). For
+    small-scale verification/oracles, :func:`expand_rep_pairs`
+    reconstructs the member-level pair set that banding every doc would
+    give. ``dropped`` is the (band, band_key, n) frame of buckets the
+    cap removed (empty when nothing was capped); jobs MUST aggregate it
+    into their metrics sink (see jobs/neardedup.py) — a capped
+    mega-cluster is lost recall, and lost recall has to be a counter,
+    never silence. It derives from the checkpointed rep base, so
+    observing it re-scans only narrow rows.
+
+    Why this shape at 10^12 docs: byte-identical shells (empty pages,
+    parked domains, error boilerplate) are the worst skew — m copies
+    share EVERY band key, making one bucket's pair expansion O(m^2) on a
+    single reducer key. Banding reps only makes them one bucket row; the
+    bucket cap (``max_bucket_size``, at least 1) bounds whatever
+    degenerate near-identical (not identical) clusters remain. Reference
+    analogue: the content-dedup semantics of run.py:29-51 applied at
+    scale."""
+    if num_hashes % bands != 0:
+        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
+    _check_cap(max_bucket_size)
     wbase = _fused_rep_base(
-        df, text_col, id_col, minhash_signature(F.col(text_col), num_hashes), "sig", materialize
-    )
+        df, text_col, id_col, minhash_signature(F.col(text_col), num_hashes), "sig"
+    ).localCheckpoint()
     rep_map = wbase.select(F.col(id_col), F.col("rep_id"))
     rep_rows = wbase.filter(F.col(id_col) == F.col("rep_id")).select(F.col(id_col), "sig")
     raw_buckets = _minhash_band_explode(rep_rows, id_col, num_hashes, bands)
-    if max_bucket_size is not None:
-        dropped = oversized_buckets(raw_buckets, max_bucket_size)
-        kept = _drop_oversized(raw_buckets, dropped)
-    else:
-        kept = raw_buckets
-        dropped = oversized_buckets(raw_buckets.limit(0), 0)
+    dropped = oversized_buckets(raw_buckets, max_bucket_size)
+    kept = _drop_oversized(raw_buckets, dropped)
     return _pairs_within_buckets(kept, id_col), rep_map, dropped
 
 
@@ -578,11 +465,10 @@ def _pairs_within_buckets(
     """Distinct candidate pairs generated INSIDE each kept bucket via a
     bounded collect_list + in-array expansion — no self-join at all.
 
-    Why this replaces the bucket self-join of the r5 tier: the self-join
-    re-aliases one side, which defeats ReuseExchange, forcing a
-    localCheckpoint of the buckets (an extra eager job) to avoid
-    per-branch recomputation. A grouped in-array expansion is a
-    straight-line plan — evaluated once, checkpoint-free — and the
+    A bucket self-join re-aliases one side, which defeats ReuseExchange
+    and would force a localCheckpoint of the buckets (an extra eager
+    job) to avoid per-branch recomputation. A grouped in-array expansion
+    is a straight-line plan — evaluated once, checkpoint-free — and the
     arrays are SAFE because they exist only for buckets that already
     passed the size cap (<= max_bucket_size rows each; the cap's count
     runs with map-side partial aggregation, so an uncapped mega-bucket
@@ -594,9 +480,8 @@ def _pairs_within_buckets(
     verify); without it pairs are bare (id_a, id_b) (the MinHash tier —
     Jaccard verification happens downstream on text).
     """
-    key = ("pairs_expr", id_col, sig_col)
-    cached = _UDF_CACHE.get(key)
-    if cached is None:
+
+    def build() -> tuple:
         if sig_col is None:
             agg = F.sort_array(F.collect_list(F.col(id_col))).alias("ms")
             make = lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
@@ -620,8 +505,9 @@ def _pairs_within_buckets(
                 ),
             )
         )
-        cached = _UDF_CACHE[key] = (agg, F.explode(pair_arr).alias("p"), out_cols)
-    agg, exploded, out_cols = cached
+        return agg, F.explode(pair_arr).alias("p"), out_cols
+
+    agg, exploded, out_cols = memo(("pairs_expr", id_col, sig_col), build)
     return (
         kept.groupBy("band", "band_key")
         .agg(agg)
@@ -641,9 +527,11 @@ def expand_rep_pairs(
     """Member-level (id_a < id_b) pairs from representative pairs: every
     cross-group pair between members of two paired rep groups, plus every
     within-group pair of each multi-member group. When no bucket was
-    capped this is EXACTLY the unguarded candidate set (identical docs
-    share all band keys with their rep), which is what lets the driver
-    oracle keep checking the guarded path value-for-value. Verification/
+    capped this is EXACTLY the pair set that banding every doc's
+    signature would give (identical docs share all band keys with their
+    rep; pinned against the pure-Python banding reference), which is
+    what lets the driver oracle keep checking the guarded path
+    value-for-value. Verification/
     small-set form: its output is inherently quadratic in group size —
     at scale consume (rep_pairs, rep_map) directly.
 
@@ -695,25 +583,6 @@ def expand_rep_pairs(
     return within.unionByName(cross)
 
 
-def minhash_candidate_pairs(buckets: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Self-join bucket assignments -> distinct candidate (id_a < id_b) pairs.
-
-    The join key (band, band_key) keeps the blow-up local to buckets.
-    """
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.band") == F.col(f"b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-
-
 # -- n-gram Jaccard ---------------------------------------------------------
 
 
@@ -727,7 +596,7 @@ def ngram_jaccard_pairs(
     """All-pairs n-gram Jaccard >= threshold (id_a < id_b).
 
     O(N^2): refinement/verification step — at scale, feed it LSH candidate
-    pairs instead of the full cross join (see minhash_candidate_pairs).
+    pairs instead of the full cross join (see lsh_guarded_with_drops).
     """
     g = df.select(F.col(id_col), char_shingles(F.col(text_col), n).alias("grams"))
     a, b = g.alias("a"), g.alias("b")
@@ -897,13 +766,13 @@ def simhash_col(col: Column) -> Column:
     ``np.add.at``. No per-token Python inner loop survives; the only
     interpreted work is one md5 per previously-unseen vocabulary word.
     Near-dups = small Hamming distance; equal-signature grouping is the
-    degenerate (fast) case — see simhash_candidate_pairs for banding.
+    degenerate (fast) case — see simhash_guarded_with_drops for banding.
     """
-    from pyspark.sql.types import LongType
+    return memo(("simhash",), _simhash_udf)(col)
 
-    cached = _UDF_CACHE.get(("simhash", _ctx_key()))
-    if cached is not None:
-        return cached(col)
+
+def _simhash_udf():
+    from pyspark.sql.types import LongType
 
     @F.pandas_udf(LongType())
     def _simhash(texts: pd.Series) -> pd.Series:
@@ -939,8 +808,7 @@ def simhash_col(col: Column) -> Column:
         sigs = np.packbits(bits, axis=1).view(">u8").astype(np.uint64).reshape(n)
         return pd.Series(sigs.view(np.int64))
 
-    _UDF_CACHE[("simhash", _ctx_key())] = _simhash
-    return _simhash(col)
+    return _simhash
 
 
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -952,9 +820,8 @@ def _simhash_band_explode(sig: DataFrame, id_col: str, bands: int) -> DataFrame:
     """(id, simhash) -> (id, simhash, band, band_key): ``bands`` equal
     bit-slices of the signature, band 0 the MOST significant. Bands are
     unrolled in Python — shift amounts must be literals."""
-    key = ("sh_bands", bands)
-    exploded = _UDF_CACHE.get(key)
-    if exploded is None:
+
+    def build() -> Column:
         width = 64 // bands
         bands_expr = F.array(
             *[
@@ -967,64 +834,14 @@ def _simhash_band_explode(sig: DataFrame, id_col: str, bands: int) -> DataFrame:
                 for i in range(bands)
             ]
         )
-        exploded = _UDF_CACHE[key] = F.explode(bands_expr).alias("bk")
+        return F.explode(bands_expr).alias("bk")
+
+    exploded = memo(("sh_bands", bands), build)
     return sig.select(
         F.col(id_col), F.col("simhash"), exploded
     ).select(
         id_col, "simhash", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
     )
-
-
-def _simhash_pairs_from_buckets(
-    buckets: DataFrame, id_col: str, max_hamming: int
-) -> DataFrame:
-    """Bucket self-join -> distinct (id_a, id_b, hamming) pairs with
-    hamming <= max_hamming, via JVM ``bit_count(xor)``."""
-    a, b = buckets.alias("a"), buckets.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def simhash_guarded_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket_size: int = LSH_MAX_BUCKET,
-    materialize: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """The SimHash tier with the full guarded posture of
-    :func:`lsh_guarded_candidates`: one fused pass computes the exact-dup
-    fingerprint AND the SimHash signature, banding runs over min-id
-    representatives only, hot buckets are capped, and the returned
-    ``(rep_pairs, rep_map)`` folds members back through
-    :func:`expand_rep_pairs` (pass ``carry={"hamming": F.lit(0)}`` —
-    identical content is Hamming distance 0, and a cross-group member
-    pair's distance equals its rep pair's exactly, because identical text
-    yields an identical signature). Same skeleton, same scale argument:
-    byte-identical shells become one bucket row instead of an O(m^2)
-    reducer key, and the text is scanned once and never shuffled.
-    For the capped-drop metrics side channel use
-    :func:`simhash_guarded_with_drops`."""
-    pairs, rep_map, _ = simhash_guarded_with_drops(
-        df, text_col, id_col, bands, max_hamming, max_bucket_size, materialize
-    )
-    return pairs, rep_map
 
 
 def simhash_guarded_with_drops(
@@ -1034,82 +851,42 @@ def simhash_guarded_with_drops(
     bands: int = 4,
     max_hamming: int = 3,
     max_bucket_size: int = LSH_MAX_BUCKET,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """:func:`simhash_guarded_candidates` plus the guard's drop side
-    channel, mirroring :func:`lsh_guarded_with_drops`: returns
-    ``(rep_pairs, rep_map, dropped)`` where ``dropped`` is the (band,
-    band_key, n) frame of buckets the cap removed. The rule is the same
-    on every guarded tier: a capped mega-cluster is lost recall, and lost
-    recall has to be a counter, never silence — jobs aggregate ``dropped``
-    into their metrics sink. ``max_bucket_size=None`` (uncapped) is a
-    TEST-ONLY escape hatch for equivalence pins: it routes unbounded
-    buckets into the in-array pair expansion, so production callers must
-    keep :data:`LSH_MAX_BUCKET` (or tighter) as the floor
-    (jobs/neardedup.py cannot pass None)."""
+    """SimHash near-dup candidates with the guarded posture of
+    :func:`lsh_guarded_with_drops`: one fused pass computes the exact-dup
+    fingerprint AND the SimHash signature, banding runs over min-id
+    representatives only, hot buckets are capped, and exact Hamming
+    distance (JVM ``bit_count(xor)``) verifies ``<= max_hamming``.
+
+    Banding splits the 64-bit signature into ``bands`` equal bit-slices
+    (``bands`` must divide 64); reps sharing ANY slice are candidates.
+    Pigeonhole guarantee: a pair with hamming < ``bands`` differs in
+    fewer bits than there are slices, so at least one slice is identical
+    — banding finds EVERY such pair without an all-pairs join, the same
+    candidate->verify shape as MinHash LSH -> Jaccard at a cheaper
+    (token-level) signature.
+
+    Returns ``(rep_pairs, rep_map, dropped)`` exactly as the MinHash tier
+    does, with ``hamming`` on each rep pair. Fold members back through
+    :func:`expand_rep_pairs` with ``carry={"hamming": F.lit(0)}``:
+    identical content is Hamming distance 0, and a cross-group member
+    pair's distance equals its rep pair's exactly, because identical
+    text yields an identical signature. Same scale argument as the
+    MinHash tier: byte-identical shells become one bucket row instead of
+    an O(m^2) reducer key, the text is scanned once and never shuffled,
+    and ``dropped`` must reach the job's metrics sink."""
     if 64 % bands != 0:
         raise ValueError(f"bands={bands} must divide 64")
+    _check_cap(max_bucket_size)
     wbase = _fused_rep_base(
-        df, text_col, id_col, simhash_col(F.col(text_col)), "simhash", materialize
-    )
+        df, text_col, id_col, simhash_col(F.col(text_col)), "simhash"
+    ).localCheckpoint()
     rep_map = wbase.select(F.col(id_col), F.col("rep_id"))
     rep_rows = wbase.filter(F.col(id_col) == F.col("rep_id")).select(F.col(id_col), "simhash")
     raw_buckets = _simhash_band_explode(rep_rows, id_col, bands)
-    if max_bucket_size is not None:
-        dropped = oversized_buckets(raw_buckets.drop("simhash"), max_bucket_size)
-        buckets = _drop_oversized(raw_buckets, dropped)
-    else:
-        buckets = raw_buckets
-        dropped = oversized_buckets(raw_buckets.drop("simhash").limit(0), 0)
+    dropped = oversized_buckets(raw_buckets.drop("simhash"), max_bucket_size)
+    buckets = _drop_oversized(raw_buckets, dropped)
     pairs = _pairs_within_buckets(buckets, id_col, sig_col="simhash").filter(
         F.col("hamming") <= max_hamming
     )
     return pairs, rep_map, dropped
-
-
-def simhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """SimHash near-dup pairs via banding: split the 64-bit signature into
-    ``bands`` equal bit-slices; docs sharing ANY slice are candidates;
-    exact Hamming distance (JVM ``bit_count(xor)``) verifies
-    ``<= max_hamming``.
-
-    Pigeonhole guarantee: a pair with hamming < ``bands`` differs in fewer
-    bits than there are slices, so at least one slice is identical — the
-    banding finds EVERY such pair without an all-pairs join. The only
-    shuffle is the (band, band_key) self-join on small int keys; this is
-    the same candidate->verify shape as MinHash LSH -> Jaccard, trading
-    shingling cost for a cheaper (token-level) signature.
-
-    ``max_bucket_size`` applies the same hot-bucket guard as the MinHash
-    tier (:data:`LSH_MAX_BUCKET`): band groups larger than the cap are
-    dropped before the self-join. This is the UNGUARDED/direct form (no
-    exact collapse); the production path with the full guarded posture is
-    :func:`simhash_guarded_candidates`. ``materialize`` gates the
-    localCheckpoints (lazy plans stay inspectable), at the cost of the
-    signature UDF running once per self-join branch.
-
-    Output: (id_a, id_b, hamming) with id_a < id_b.
-    """
-    if 64 % bands != 0:
-        raise ValueError(f"bands={bands} must divide 64")
-    sig = simhash64(df, text_col, id_col)
-    if materialize:
-        # the self-join would otherwise run the signature UDF per branch
-        sig = sig.localCheckpoint()
-    buckets = _simhash_band_explode(sig, id_col, bands)
-    if max_bucket_size is not None:
-        buckets = _cap_buckets(buckets, max_bucket_size)
-        if materialize:
-            # cut after the cap for the same reason the signature is cut:
-            # the re-aliased self-join would re-run the count+semi-join
-            # per branch
-            buckets = buckets.localCheckpoint()
-    return _simhash_pairs_from_buckets(buckets, id_col, max_hamming)

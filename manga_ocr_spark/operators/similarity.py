@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
 
+from manga_ocr_spark.operators.memo import memo
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -95,19 +97,6 @@ def cosine_topk(
 # batch. Deterministic, so a cached copy is identical by construction.
 _PLANES_CACHE: dict[tuple[int, int, int, int], "np.ndarray"] = {}
 
-# memoized pandas-UDF wrappers keyed by their closure parameters PLUS
-# the active SparkContext identity (a cached wrapper's lazily-created
-# _judf binds that context's accumulator server — see dedup._ctx_key) —
-# construction caching only (a @pandas_udf declaration costs driver-side
-# py4j round trips; the wrapped function is parameter-identical)
-_UDF_CACHE: dict[tuple, object] = {}
-
-
-def _ctx_key() -> int:
-    from pyspark import SparkContext
-
-    return id(SparkContext._active_spark_context)
-
 
 def _plane_matrix(seed: int, dim: int, bits: int, bands: int = 1) -> "np.ndarray":
     key = (seed, dim, bits, bands)
@@ -147,10 +136,12 @@ def hyperplane_signature(vec: Column, dim: int, bits: int = 16, seed: int = 42) 
     ~10x slower; sign tests over dense vectors are exactly what vectorized
     UDFs are for.
     """
-    cached = _UDF_CACHE.get(("sig", dim, bits, seed, _ctx_key()))
-    if cached is not None:
-        return cached(vec)
+    return memo(
+        ("hyperplane_sig", dim, bits, seed), lambda: _signature_udf(dim, bits, seed)
+    )(vec)
 
+
+def _signature_udf(dim: int, bits: int, seed: int):
     @F.pandas_udf(LongType())
     def _sig(vs: pd.Series) -> pd.Series:
         planes = _plane_matrix(seed, dim, bits)  # (bits, dim), worker-cached
@@ -159,8 +150,7 @@ def hyperplane_signature(vec: Column, dim: int, bits: int = 16, seed: int = 42) 
         weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
         return pd.Series(((dots > 0) @ weights).astype(np.int64))
 
-    _UDF_CACHE[("sig", dim, bits, seed, _ctx_key())] = _sig
-    return _sig(vec)
+    return _sig
 
 
 def hyperplane_signatures(
@@ -175,12 +165,13 @@ def hyperplane_signatures(
     Still ONE numpy matmul per Arrow batch: the (bands*bits x dim) plane
     matrix is built once per batch and the sign matrix is packed per band.
     """
+    return memo(
+        ("hyperplane_sigs", dim, bits, bands, seed), lambda: _signatures_udf(dim, bits, bands, seed)
+    )(vec)
 
+
+def _signatures_udf(dim: int, bits: int, bands: int, seed: int):
     from pyspark.sql.types import ArrayType
-
-    cached = _UDF_CACHE.get(("sigs", dim, bits, bands, seed, _ctx_key()))
-    if cached is not None:
-        return cached(vec)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sigs(vs: pd.Series) -> pd.Series:
@@ -191,8 +182,7 @@ def hyperplane_signatures(
         sigs = (signs @ weights).astype(np.int64)  # (n, bands)
         return pd.Series(list(sigs))
 
-    _UDF_CACHE[("sigs", dim, bits, bands, seed, _ctx_key())] = _sigs
-    return _sigs(vec)
+    return _sigs
 
 
 def _centroid_assign_udf(centroids: list[list[float]], n_probe: int = 1):

@@ -83,15 +83,18 @@ def test_rep_map_covers_null_text_rows(spark):
         Row(doc_id=2, text=None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    rm = {r.doc_id: r.rep_id for r in D.exact_rep_map(df).collect()}
+    _, rep_map, _ = D.lsh_guarded_with_drops(df)
+    rm = {r.doc_id: r.rep_id for r in rep_map.collect()}
     assert rm == {0: 0, 1: 1, 2: 1}
 
 
-def test_guarded_expansion_matches_unguarded_with_null_and_empty_text(spark):
+def test_guarded_expansion_matches_unguarded_with_null_and_empty_text(
+    spark, minhash_pairs_py, simhash_pairs_py
+):
     # the oracle-relied equivalence must hold on NULL/empty/whitespace
-    # text too: unguarded signatures of all content-less docs coincide
-    # (empty gram set), so they all pair; guarded must reproduce that via
-    # the sentinel group + rep-level cross pairs
+    # text too: the signatures of all content-less docs coincide (empty
+    # gram set), so banding every doc pairs them all; guarded must
+    # reproduce that via the sentinel group + rep-level cross pairs
     rows = [
         Row(doc_id=0, text=None),
         Row(doc_id=1, text=""),
@@ -99,34 +102,28 @@ def test_guarded_expansion_matches_unguarded_with_null_and_empty_text(spark):
         Row(doc_id=3, text=None),
         Row(doc_id=4, text="a normal document that stands alone entirely"),
     ]
+    texts = {r.doc_id: r.text for r in rows}
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    unguarded = {
-        (r.id_a, r.id_b)
-        for r in D.minhash_candidate_pairs(D.minhash_lsh_buckets(df)).collect()
-    }
-    pairs, rep_map = D.lsh_guarded_candidates(df)
+    pairs, rep_map, _ = D.lsh_guarded_with_drops(df, max_bucket_size=len(rows))
     expanded = {(r.id_a, r.id_b) for r in D.expand_rep_pairs(pairs, rep_map).collect()}
-    assert expanded == unguarded
+    assert expanded == minhash_pairs_py(texts)
     assert {(0, 3)}.issubset(expanded)  # the NULL group's within-pair
 
     # and the SimHash tier: content-less docs are all signature 0
-    sim_unguarded = {
-        (r.id_a, r.id_b, r.hamming) for r in D.simhash_candidate_pairs(df).collect()
-    }
-    spairs, srep_map = D.simhash_guarded_candidates(df)
+    spairs, srep_map, _ = D.simhash_guarded_with_drops(df, max_bucket_size=len(rows))
     sim_expanded = {
         (r.id_a, r.id_b, r.hamming)
         for r in D.expand_rep_pairs(
             spairs, srep_map, carry={"hamming": F.lit(0)}
         ).collect()
     }
-    assert sim_expanded == sim_unguarded
+    assert sim_expanded == simhash_pairs_py(texts)
 
 
-def test_simhash_guarded_matches_unguarded_on_mixed_corpus(spark):
-    # guarded SimHash == unguarded SimHash when no bucket caps (the
-    # equivalence the driver oracle checks value-for-value), on a corpus
-    # with exact clones AND a near pair
+def test_simhash_guarded_matches_unguarded_on_mixed_corpus(spark, simhash_pairs_py):
+    # guarded SimHash == banding every doc (the pure-Python reference)
+    # when no bucket caps (the equivalence the driver oracle checks
+    # value-for-value), on a corpus with exact clones AND a near pair
     base = [
         "the quick brown fox jumps over the lazy dog",
         "a completely different document about spark engines",
@@ -136,15 +133,13 @@ def test_simhash_guarded_matches_unguarded_on_mixed_corpus(spark):
         Row(doc_id=100 * i + c, text=t) for i, t in enumerate(base) for c in range(3)
     ]
     df = spark.createDataFrame(rows)
-    unguarded = {
-        (r.id_a, r.id_b, r.hamming) for r in D.simhash_candidate_pairs(df).collect()
-    }
-    pairs, rep_map = D.simhash_guarded_candidates(df)
+    pairs, rep_map, _ = D.simhash_guarded_with_drops(df, max_bucket_size=len(rows))
     expanded = {
         (r.id_a, r.id_b, r.hamming)
         for r in D.expand_rep_pairs(pairs, rep_map, carry={"hamming": F.lit(0)}).collect()
     }
-    assert expanded == unguarded and len(expanded) > 0
+    assert expanded == simhash_pairs_py({r.doc_id: r.text for r in rows})
+    assert len(expanded) > 0
 
 
 def test_simhash_guarded_with_drops_surfaces_capped_buckets(spark):
@@ -161,8 +156,8 @@ def test_simhash_guarded_with_drops_surfaces_capped_buckets(spark):
     assert d == {(0, 20), (1, 20), (2, 20), (3, 20)}
     assert pairs.count() == 0  # every bucket was capped away
     assert rep_map.count() == 20
-    # and with the cap off the channel is empty, pairs are back
-    pairs2, _, dropped2 = D.simhash_guarded_with_drops(docs, max_bucket_size=None)
+    # and with a cap no bucket reaches the channel is empty, pairs are back
+    pairs2, _, dropped2 = D.simhash_guarded_with_drops(docs, max_bucket_size=20)
     assert dropped2.count() == 0
     assert pairs2.count() > 0
 

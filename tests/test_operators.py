@@ -45,7 +45,10 @@ def test_exact_dup_groups(docs):
 
 
 def test_minhash_identical_docs_share_all_bands(docs):
-    buckets = D.minhash_lsh_buckets(docs.filter(F.col("doc_id").isin(1, 2)))
+    sig = docs.filter(F.col("doc_id").isin(1, 2)).select(
+        "doc_id", D.minhash_signature(F.col("text")).alias("sig")
+    )
+    buckets = D._minhash_band_explode(sig, "doc_id", 16, 4)
     per_band = (
         buckets.groupBy("band", "band_key").agg(F.count("*").alias("n")).collect()
     )
@@ -56,8 +59,8 @@ def test_minhash_identical_docs_share_all_bands(docs):
 
 
 def test_minhash_pairs_find_dup_not_unrelated(docs):
-    buckets = D.minhash_lsh_buckets(docs.filter(F.col("doc_id").isin(1, 2, 3)))
-    pairs = {(r.id_a, r.id_b) for r in D.minhash_candidate_pairs(buckets).collect()}
+    rep_pairs, rep_map, _ = D.lsh_guarded_with_drops(docs.filter(F.col("doc_id").isin(1, 2, 3)))
+    pairs = {(r.id_a, r.id_b) for r in D.expand_rep_pairs(rep_pairs, rep_map).collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
@@ -122,8 +125,17 @@ def test_minhash_rejects_num_hashes_beyond_constant_table():
 
 
 def test_minhash_buckets_reject_uneven_bands(docs):
+    # 16 hashes in 5 bands would silently band over only 15 of them
     with pytest.raises(ValueError, match="not divisible"):
-        D.minhash_lsh_buckets(docs, num_hashes=16, bands=5)
+        D.lsh_guarded_with_drops(docs, num_hashes=16, bands=5)
+
+
+def test_guarded_tiers_require_an_int_bucket_cap(docs):
+    # there is no uncapped mode: a bucket's pair expansion is only
+    # bounded because the cap is
+    for guarded in (D.lsh_guarded_with_drops, D.simhash_guarded_with_drops):
+        with pytest.raises(ValueError, match="max_bucket_size"):
+            guarded(docs, max_bucket_size=None)
 
 
 # -- jaccard -----------------------------------------------------------------
@@ -159,9 +171,10 @@ def test_simhash_candidate_pairs_banding(docs):
     # docs 1 and 2 tokenize identically (ws/case variants) -> hamming 0,
     # guaranteed found by pigeonhole; unrelated doc 3 must not pair with
     # anything at max_hamming=3
+    rep_pairs, rep_map, _ = D.simhash_guarded_with_drops(docs, max_hamming=3)
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in D.simhash_candidate_pairs(docs, max_hamming=3).collect()
+        for r in D.expand_rep_pairs(rep_pairs, rep_map, carry={"hamming": F.lit(0)}).collect()
     }
     assert pairs.get((1, 2)) == 0
     assert not any(3 in p for p in pairs)
@@ -190,7 +203,10 @@ def test_simhash_banding_finds_every_close_pair(spark):
         for j in range(i + 1, len(texts))
         if ham(sigs[i], sigs[j]) <= 3
     }
-    got = {(r.id_a, r.id_b) for r in D.simhash_candidate_pairs(df, max_hamming=3).collect()}
+    rep_pairs, rep_map, _ = D.simhash_guarded_with_drops(
+        df, max_hamming=3, max_bucket_size=len(texts)
+    )
+    got = {(r.id_a, r.id_b) for r in D.expand_rep_pairs(rep_pairs, rep_map).collect()}
     assert want, "fixture must contain close pairs"
     assert got == want
 
@@ -255,21 +271,21 @@ def test_lsh_bucket_topk_high_recall_on_clustered_vectors(spark):
 
 def test_text_functions(spark):
     df = spark.createDataFrame(
-        [Row(t="the cat and the dog"), Row(t="der Hund und die Katze liefen"), Row(t="")]
+        [(0, "the cat and the dog"), (1, "der Hund und die Katze liefen"), (2, "")],
+        "doc_id int, t string",
     )
+    panel = {r.doc_id: r for r in T.quality_panel(df, text_col="t").collect()}
     out = df.select(
+        "doc_id",
         T.token_count(F.col("t")).alias("n"),
-        T.stopword_ratio(F.col("t")).alias("sr"),
-        T.mean_token_len(F.col("t")).alias("mtl"),
-        T.alpha_ratio(F.col("t")).alias("ar"),
-        T.lang_id(F.col("t")).alias("lang"),
         T.fingerprint(F.col("t")).alias("fp"),
     ).collect()
-    en, de, empty = out
+    en, de, empty = sorted(out)
     assert en.n == 5 and de.n == 6 and empty.n == 0
-    assert en.sr == pytest.approx(3 / 5)  # the, and, the
-    assert en.mtl == pytest.approx(15 / 5)
-    assert en.lang == "en" and de.lang == "de" and empty.lang == "und"
+    assert [panel[i].n_tokens for i in range(3)] == [5, 6, 0]
+    assert panel[0].stopword_ratio == pytest.approx(3 / 5)  # the, and, the
+    assert panel[0].mean_token_len == pytest.approx(15 / 5)
+    assert [panel[i].lang_pred for i in range(3)] == ["en", "de", "und"]
     assert len(en.fp) == 32
 
 
@@ -282,8 +298,8 @@ def test_fingerprint_ws_case_invariant(spark):
 def test_quality_score_ordering(spark):
     good = "The quick brown fox jumps over the lazy dog and keeps running through a field of tall grass. " * 3
     junk = "@@@ ### !!! ***"
-    df = spark.createDataFrame([Row(t=good), Row(t=junk)])
-    scores = [r.q for r in df.select(T.quality_score(F.col("t")).alias("q")).collect()]
+    df = spark.createDataFrame([(0, good), (1, junk)], "doc_id int, text string")
+    scores = {r.doc_id: r.quality for r in T.quality_panel(df).collect()}
     assert scores[0] > scores[1]
 
 
@@ -440,7 +456,7 @@ def test_repetition_stats_handcomputed(spark):
     df = spark.createDataFrame(
         [Row(doc_id=k, text=v) for k, v in texts.items()], "doc_id int, text string"
     )
-    out = {r.doc_id: r for r in T.repetition_stats(df).collect()}
+    out = {r.doc_id: r for r in T.quality_panel(df).collect()}
     assert out[0].top_unigram_frac == round(3 / 6, 6)
     assert out[0].top_bigram_frac == round(2 / 5, 6)
     assert out[1].top_unigram_frac == 1.0 and out[1].top_bigram_frac == 0.0
@@ -462,7 +478,7 @@ def test_lang_id_extended_languages(spark):
     df = spark.createDataFrame(
         [Row(doc_id=k, text=v) for k, v in texts.items()], "doc_id int, text string"
     )
-    out = {r.doc_id: r.lang for r in df.select("doc_id", T.lang_id(F.col("text")).alias("lang")).collect()}
+    out = {r.doc_id: r.lang_pred for r in T.lang_id_frame(df).collect()}
     assert out == {0: "it", 1: "pt", 2: "nl", 3: "sv", 4: "en", 5: "und"}
 
 
@@ -496,43 +512,20 @@ def test_lang_id_script_tier_cjk_and_alphabets(spark):
     df = spark.createDataFrame(
         [Row(doc_id=k, text=v) for k, v in texts.items()], "doc_id int, text string"
     )
-    out = {r.doc_id: r.lang for r in df.select("doc_id", T.lang_id(F.col("text")).alias("lang")).collect()}
+    out = {r.doc_id: r.lang_pred for r in T.lang_id_frame(df).collect()}
     assert out == {0: "ja", 1: "ja", 2: "ja", 3: "zh", 4: "ko", 5: "ru",
                    6: "el", 7: "en", 8: "de", 9: "und", 10: "en", 11: "ja",
                    12: "ar", 13: "he", 14: "hi", 15: "th"}
 
 
-def test_quality_panel_duckdb_oracle_matches_on_multilingual_corpus(spark):
-    # input-independent equivalence: run the ACTUAL generated oracle SQL
-    # (script-tier CASE + script fraction columns included) in DuckDB over
-    # a multilingual corpus and compare with the Spark quality_panel —
-    # the generated pair must agree on ANY input, not just the synthetic
-    # ASCII documents table.
-    import math
-
+def _assert_panel_matches_oracle(spark, rows: list[tuple[int, str]]) -> dict:
+    """Run the ACTUAL generated quality_scores oracle SQL in DuckDB over
+    ``rows`` and assert the Spark quality_panel equals it (floats to
+    1e-9); returns the panel rows by doc_id."""
     import duckdb
 
     from __spark_entry__ import oracle_sql
-    from manga_ocr_spark.fixtures.pages import _CJK_SENT
 
-    texts = [
-        _CJK_SENT,
-        "これはテストです",
-        "汉字文本没有假名只有中文内容",
-        "한국어 텍스트 감사합니다",
-        "русский текст для проверки",
-        "ελληνικό κείμενο εδώ",
-        "النص العربي هنا للاختبار",
-        "טקסט בעברית לבדיקה",
-        "यह हिन्दी में लिखा गया पाठ है",
-        "ข้อความภาษาไทยสำหรับทดสอบ",
-        "the cat and the dog of mine",
-        "mixed english with 日本語 inside それ and more",
-        "",
-        " \t\n ",
-        "à la carte déjà vu française",  # accented latin
-    ]
-    rows = [(i, t) for i, t in enumerate(texts)]
     con = duckdb.connect()
     con.execute("create table documents(doc_id int, text varchar)")
     con.executemany("insert into documents values (?, ?)", rows)
@@ -553,6 +546,35 @@ def test_quality_panel_duckdb_oracle_matches_on_multilingual_corpus(spark):
                 ), (k, got[k], want[k])
             else:
                 assert a == b, (k, got[k], want[k])
+    return got
+
+
+def test_quality_panel_duckdb_oracle_matches_on_multilingual_corpus(spark):
+    # input-independent equivalence: run the ACTUAL generated oracle SQL
+    # (script-tier CASE + script fraction columns included) in DuckDB over
+    # a multilingual corpus and compare with the Spark quality_panel —
+    # the generated pair must agree on ANY input, not just the synthetic
+    # ASCII documents table.
+    from manga_ocr_spark.fixtures.pages import _CJK_SENT
+
+    texts = [
+        _CJK_SENT,
+        "これはテストです",
+        "汉字文本没有假名只有中文内容",
+        "한국어 텍스트 감사합니다",
+        "русский текст для проверки",
+        "ελληνικό κείμενο εδώ",
+        "النص العربي هنا للاختبار",
+        "טקסט בעברית לבדיקה",
+        "यह हिन्दी में लिखा गया पाठ है",
+        "ข้อความภาษาไทยสำหรับทดสอบ",
+        "the cat and the dog of mine",
+        "mixed english with 日本語 inside それ and more",
+        "",
+        " \t\n ",
+        "à la carte déjà vu française",  # accented latin
+    ]
+    _assert_panel_matches_oracle(spark, list(enumerate(texts)))
 
 
 # -- hot-bucket guard (r5) ----------------------------------------------------
@@ -572,7 +594,7 @@ def test_guarded_candidates_stay_linear_on_1k_identical_docs(spark):
         Row(doc_id=2001, text="The  quick brown fox jumps over the lazy dog "),
     ]
     df = spark.createDataFrame(rows)
-    pairs, rep_map = D.lsh_guarded_candidates(df)
+    pairs, rep_map, _ = D.lsh_guarded_with_drops(df)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert got == set()  # both groups collapse to single reps; no shared band
     reps = df.join(
@@ -582,7 +604,8 @@ def test_guarded_candidates_stay_linear_on_1k_identical_docs(spark):
     )
     assert reps.count() == 2
     # 1000 clones -> ONE rep -> exactly `bands` bucket assignments
-    buckets = D.minhash_lsh_buckets(reps)
+    sig = reps.select("doc_id", D.minhash_signature(F.col("text")).alias("sig"))
+    buckets = D._minhash_band_explode(sig, "doc_id", 16, 4)
     assert buckets.filter(F.col("doc_id") < 1000).count() == 4
     # and the member-level pair set is reconstructed by expansion, linear
     # join work: 1000-choose-2 within-group pairs + zero cross pairs
@@ -590,9 +613,10 @@ def test_guarded_candidates_stay_linear_on_1k_identical_docs(spark):
     assert expanded.count() == (1000 * 999) // 2 + 1  # + the (2000, 2001) pair
 
 
-def test_expand_rep_pairs_equals_unguarded_candidates(spark):
-    # collapse -> rep pairs -> expand must reproduce the UNGUARDED pair
-    # set exactly (identical docs share all bands with their rep) — the
+def test_expand_rep_pairs_equals_unguarded_candidates(spark, minhash_pairs_py):
+    # collapse -> rep pairs -> expand must reproduce the pair set of
+    # banding EVERY doc (the pure-Python reference) exactly when nothing
+    # is capped (identical docs share all bands with their rep) — the
     # equivalence the driver oracle relies on
     base = [
         "the quick brown fox jumps over the lazy dog",
@@ -605,44 +629,46 @@ def test_expand_rep_pairs_equals_unguarded_candidates(spark):
         for c in range(4)
     ]
     df = spark.createDataFrame(rows)
-    unguarded = {
-        (r.id_a, r.id_b)
-        for r in D.minhash_candidate_pairs(D.minhash_lsh_buckets(df)).collect()
-    }
-    pairs, rep_map = D.lsh_guarded_candidates(df)
+    want = minhash_pairs_py({r.doc_id: r.text for r in rows})
+    pairs, rep_map, _ = D.lsh_guarded_with_drops(df, max_bucket_size=len(rows))
     expanded = {(r.id_a, r.id_b) for r in D.expand_rep_pairs(pairs, rep_map).collect()}
-    assert expanded == unguarded and len(expanded) > 0
+    assert expanded == want and len(expanded) > 0
+
+
+def _distinct_shells() -> list[Row]:
+    """20 DISTINCT texts (no exact collapse) with one MinHash signature and
+    one SimHash: 'spark ' * k has the same six 5-gram rotations and the
+    single token 'spark' for every k >= 2 — near-identical-but-distinct
+    shells, the population the bucket cap exists for."""
+    return [Row(doc_id=i, text="spark " * (i + 2)) for i in range(20)]
 
 
 def test_bucket_cap_drops_hot_buckets_and_reports(spark):
-    # a hot bucket that survives exact collapse (here: uncollapsed clones
-    # stand in for m near-identical-but-distinct shells) is dropped by the
-    # size cap BEFORE the self-join, and oversized_buckets reports it for
-    # the metrics sink — capped recall loss is observable, never silent
-    rows = [Row(doc_id=i, text="boilerplate shell page") for i in range(20)]
-    rows += [
+    # a hot bucket that survives exact collapse is dropped by the size cap
+    # BEFORE pair expansion, and the drop side channel reports it for the
+    # metrics sink — capped recall loss is observable, never silent
+    rows = _distinct_shells() + [
         Row(doc_id=100, text="the quick brown fox jumps over the lazy dog"),
         Row(doc_id=101, text="The  quick brown fox jumps over the lazy dog "),
     ]
     df = spark.createDataFrame(rows)
-    raw = D.minhash_lsh_buckets(df)
-    over = D.oversized_buckets(raw, 10).collect()
+    pairs, rep_map, dropped = D.lsh_guarded_with_drops(df, max_bucket_size=10)
+    over = dropped.collect()
     assert len(over) == 4 and all(r.n == 20 for r in over)
-    capped = D.minhash_lsh_buckets(df, max_bucket_size=10)
-    pairs = {(r.id_a, r.id_b) for r in D.minhash_candidate_pairs(capped).collect()}
-    assert pairs == {(100, 101)}
+    got = {(r.id_a, r.id_b) for r in D.expand_rep_pairs(pairs, rep_map).collect()}
+    assert got == {(100, 101)}
 
 
 def test_simhash_cap_drops_hot_buckets(spark):
-    rows = [Row(doc_id=i, text="boilerplate shell page") for i in range(20)]
-    rows += [
+    rows = _distinct_shells() + [
         Row(doc_id=100, text="the quick brown fox"),
         Row(doc_id=101, text="the quick brown Fox"),  # same lowercased tokens
     ]
     df = spark.createDataFrame(rows)
+    pairs, rep_map, _ = D.simhash_guarded_with_drops(df, max_bucket_size=10)
     got = {
         (r.id_a, r.id_b, r.hamming)
-        for r in D.simhash_candidate_pairs(df, max_bucket_size=10).collect()
+        for r in D.expand_rep_pairs(pairs, rep_map, carry={"hamming": F.lit(0)}).collect()
     }
     assert got == {(100, 101, 0)}
 
@@ -666,16 +692,11 @@ def test_lang_id_widened_latin_marker_languages(spark):
     df = spark.createDataFrame(
         [Row(doc_id=k, text=v) for k, v in texts.items()], "doc_id int, text string"
     )
-    out = {
-        r.doc_id: r.lang
-        for r in df.select(
-            "doc_id", T.lang_id(F.col("text")).alias("lang")
-        ).collect()
-    }
+    out = {r.doc_id: r.lang_pred for r in T.lang_id_frame(df).collect()}
     assert out == {0: "pl", 1: "tr", 2: "id", 3: "cs", 4: "ro", 5: "en", 6: "und"}
-    # the layered frame form agrees
-    frame = {r.doc_id: r.lang_pred for r in T.lang_id_frame(df).collect()}
-    assert frame == out
+    # the panel's lang column (all scripts counted) agrees
+    panel = {r.doc_id: r.lang_pred for r in T.quality_panel(df).collect()}
+    assert panel == out
 
 
 def test_astral_scripts_fall_through_to_marker_tier(spark):
@@ -696,12 +717,7 @@ def test_astral_scripts_fall_through_to_marker_tier(spark):
     df = spark.createDataFrame(
         [Row(doc_id=k, text=v) for k, v in texts.items()], "doc_id int, text string"
     )
-    out = {
-        r.doc_id: r.lang
-        for r in df.select(
-            "doc_id", T.lang_id(F.col("text")).alias("lang")
-        ).collect()
-    }
+    out = {r.doc_id: r.lang_pred for r in T.lang_id_frame(df).collect()}
     assert out[0] == "und"
     assert out[1] == "en"
     # BMP han fraction over the probe: 20 han chars vs 20 + 16 UTF-16
@@ -752,3 +768,73 @@ def test_layered_marker_counts_match_marker_count(spark):
     assert got_old == got_new
     # sanity: the hostile rows actually exercise non-zero counts
     assert any(any(v) for v in got_old.values())
+
+
+# -- construction memo ---------------------------------------------------------
+
+
+def test_memo_rebuilds_when_the_context_changes_but_its_id_does_not(monkeypatch):
+    # spark.stop() + a new session can give the new SparkContext the freed
+    # one's address; an id()-keyed entry would then hand back a pandas-UDF
+    # wrapper bound to the dead context's accumulator server
+    from pyspark import SparkContext
+
+    from manga_ocr_spark.operators import memo as M
+
+    class StubContext:
+        applicationId = "local-1"
+        startTime = 1000
+
+    stub = StubContext()
+    monkeypatch.setattr(SparkContext, "_active_spark_context", stub)
+    monkeypatch.setattr(M, "_CACHE", {})
+    builds: list[object] = []
+
+    def build() -> object:
+        builds.append(object())
+        return builds[-1]
+
+    first = M.memo(("probe", 1), build)
+    assert M.memo(("probe", 1), build) is first and len(builds) == 1
+    ident = id(stub)
+    stub.applicationId, stub.startTime = "local-2", 2000
+    assert id(stub) == ident
+    assert M.memo(("probe", 1), build) is not first and len(builds) == 2
+
+
+def test_memo_keys_hold_only_builder_parameters(spark, minhash_pairs_py, simhash_pairs_py):
+    # the memoization boundary: cached builders are keyed on parameters
+    # only, so two different frames through the same cached builders each
+    # get their OWN results, never the first frame's
+    from manga_ocr_spark.operators import memo as M
+
+    corpora = [
+        ["the cat and the dog", "der Hund und die Katze", "the  cat and the DOG", "これはテストです"],
+        ["het is een mooie dag niet waar", "русский текст для проверки", "", "het is een mooie dag"],
+    ]
+    seen = []
+    for texts in corpora:
+        rows = list(enumerate(texts))
+        df = spark.createDataFrame(rows, "doc_id int, text string")
+        panel = _assert_panel_matches_oracle(spark, rows)
+        langs = {r.doc_id: r.lang_pred for r in T.lang_id_frame(df).collect()}
+        assert langs == {k: v[5] for k, v in panel.items()}  # lang_pred column
+        mh = D.expand_rep_pairs(*D.lsh_guarded_with_drops(df, max_bucket_size=len(rows))[:2])
+        assert {(r.id_a, r.id_b) for r in mh.collect()} == minhash_pairs_py(dict(rows))
+        sh = D.expand_rep_pairs(
+            *D.simhash_guarded_with_drops(df, max_bucket_size=len(rows))[:2],
+            carry={"hamming": F.lit(0)},
+        )
+        assert {tuple(r) for r in sh.collect()} == simhash_pairs_py(dict(rows))
+        seen.append((panel, langs))
+    assert seen[0] != seen[1]
+
+    def plain(v) -> bool:
+        if isinstance(v, tuple):
+            return all(plain(x) for x in v)
+        return v is None or isinstance(v, (str, int, bool))
+
+    assert all(plain(k) for k in M._CACHE), [k for k in M._CACHE if not plain(k)]
+    names = {k[1] for k in M._CACHE}
+    assert {"quality_panel", "lang_id_frame", "minhash", "mh_bands", "simhash"} <= names
+    assert {"sh_bands", "pairs_expr"} <= names

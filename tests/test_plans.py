@@ -95,27 +95,6 @@ def test_anti_join_resume_shape(spark):
     assert "LeftAnti" in plan
 
 
-def test_candidate_pair_self_joins_scan_materialized_signatures(spark):
-    # the self-join re-aliases one side, defeating ReuseExchange — without
-    # materialization the signature UDF runs once PER BRANCH over the
-    # whole corpus. Pin: both join inputs are scans of the checkpointed
-    # signature RDD; zero Python-UDF evals remain in the pair plan.
-    from manga_ocr_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        minhash_lsh_buckets,
-        simhash_candidate_pairs,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
-    for pairs in (
-        minhash_candidate_pairs(minhash_lsh_buckets(docs)),
-        simhash_candidate_pairs(docs),
-    ):
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan  # UDF already ran at checkpoint time
-        assert "Scan ExistingRDD" in plan
-
-
 def test_neardedup_pipeline_never_builds_a_cross_join(spark):
     # the end-to-end near-dedup query must stay candidate-driven: LSH
     # buckets -> equi-joins only. A cartesian/nested-loop join anywhere
@@ -220,20 +199,22 @@ def test_guarded_candidates_fused_base_and_materialized_join(spark):
     # fingerprint AND the signature side by side (text scanned once,
     # never shuffled), ONE window shuffle collapses exact-dup groups to
     # rep_id, and the materialized pair plan scans only that checkpointed
-    # (id, rep_id, sig) frame.
+    # (id, rep_id, sig) frame — the fused base is the only job that
+    # touches text.
     from manga_ocr_spark.operators.dedup import (
         _fused_rep_base,
-        lsh_guarded_candidates,
+        lsh_guarded_with_drops,
         minhash_signature,
-        simhash_guarded_candidates,
+        simhash_guarded_with_drops,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
 
-    for guarded in (lsh_guarded_candidates, simhash_guarded_candidates):
-        pairs, _ = guarded(docs)
+    for guarded in (lsh_guarded_with_drops, simhash_guarded_with_drops):
+        pairs, _, _ = guarded(docs)
         plan = _plan(pairs)
         assert "EvalPython" not in plan  # signatures ran at checkpoint time
+        assert "FileScan" not in plan  # the text is never read again
         assert "Scan ExistingRDD" in plan
         # pairs come from a bounded in-bucket collect_list expansion, not
         # a bucket self-join. The cap's count aggregate runs INSIDE this
@@ -256,9 +237,7 @@ def test_guarded_candidates_fused_base_and_materialized_join(spark):
     # the text, then EXACTLY ONE Exchange (the fingerprint window that
     # attaches rep_id) — the r6 form spent three shuffled scans (rep_map
     # groupBy + join back, rep_rows groupBy) on the same collapse
-    base = _fused_rep_base(
-        docs, "text", "doc_id", minhash_signature(F.col("text")), "sig", False
-    )
+    base = _fused_rep_base(docs, "text", "doc_id", minhash_signature(F.col("text")), "sig")
     bplan = _plan(base)
     assert bplan.count("Exchange") == 1
     assert "Window" in bplan
@@ -266,10 +245,3 @@ def test_guarded_candidates_fused_base_and_materialized_join(spark):
     # single exchange — one pass over the text (no per-line split: the
     # whitespace-class literal embeds a real newline in the plan print)
     assert "ArrowEvalPython" in bplan and "md5" in bplan
-
-    # lazy form still exposes the full lineage (UDF + window collapse
-    # both present). materialize=True remains the production form: the
-    # checkpoint realizes the shared pass for every downstream branch.
-    pairs_lazy, _ = lsh_guarded_candidates(docs, materialize=False)
-    plan2 = _plan(pairs_lazy)
-    assert "ArrowEvalPython" in plan2 and "Window" in plan2

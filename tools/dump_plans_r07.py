@@ -3,11 +3,11 @@
 plans/r07/<query>_<tag>.txt (tag = before|after|..., argv[1]; remaining
 argv = optional query-name filter).
 
-Query builders come from bench_extra.build_headline_queries — ONE copy
-shared with the focused timing harness (bench.py keeps its own frozen
-driver-contract copy). Eager localCheckpoints inside the guarded tiers
-run at build time — that is the production plan shape; the dumped plan
-is what the timed query executes.
+Query builders come from bench.build_headline_queries — the ONE table
+the headline bench and the focused timing harness also use. Eager
+localCheckpoints inside the guarded tiers run at build time — that is
+the production plan shape; the dumped plan is what the timed query
+executes.
 """
 
 from __future__ import annotations
@@ -28,8 +28,7 @@ ONLY = set(sys.argv[2:])
 
 
 def main() -> None:
-    from bench import _fanned_pages
-    from bench_extra import build_headline_queries
+    from bench import _fanned_pages, build_headline_queries
     from manga_ocr_spark.jobs.extract import extract_pages
     from manga_ocr_spark.jobs.session import get_spark
 

@@ -117,8 +117,8 @@ def main() -> None:
     from manga_ocr_spark.operators.dedup import (
         LSH_MAX_BUCKET,
         exact_dedup,
-        lsh_guarded_candidates,
-        simhash_guarded_candidates,
+        lsh_guarded_with_drops,
+        simhash_guarded_with_drops,
     )
     from manga_ocr_spark.operators.similarity import cosine_topk
 
@@ -133,10 +133,10 @@ def main() -> None:
         "q3_top_revenue": E._q3_top_revenue(spark, SF_DIR),
         "q5_region_revenue": E._q5_region_revenue(spark, SF_DIR),
         "exact_dedup": exact_dedup(docs),
-        "minhash_candidate_pairs": lsh_guarded_candidates(
+        "minhash_candidate_pairs": lsh_guarded_with_drops(
             docs, max_bucket_size=LSH_MAX_BUCKET
         )[0],
-        "simhash_candidate_pairs": simhash_guarded_candidates(
+        "simhash_candidate_pairs": simhash_guarded_with_drops(
             docs, max_bucket_size=LSH_MAX_BUCKET
         )[0],
         "cosine_topk": cosine_topk(emb.filter("vec_id < 5"), emb),
