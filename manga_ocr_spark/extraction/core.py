@@ -8,7 +8,7 @@ feature-extract, beam decode, post-process) as:
     -> join + (already applied) byte-stable normalization
 
 This module is pure Python, deterministic, and Spark-free; the Spark job
-(jobs/extract.py) calls :func:`extract` from inside a ``mapInPandas``
+(jobs/extract.py) calls :func:`extract` from inside a ``mapInArrow``
 iterator. Failures never raise: a hostile payload yields
 ``ExtractResult(text=None, ...)`` and is counted, matching the reference's
 per-item try/except-warn-continue (run.py:207-212).

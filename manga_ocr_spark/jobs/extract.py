@@ -28,6 +28,15 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
 - The extraction ``mapInArrow`` tasks are the ONLY Python tasks of a
   commit group: the driver-built metrics and lineage frames are Arrow-
   built (``session.arrow_frame``), never PythonRDD-backed lists.
+
+Spark jobs per commit group (pinned by tests/test_resume.py; every job
+and task has a fixed cost that can exceed the extraction's own):
+
+  1. write extracted/ — the extraction tasks;
+  2. the stats aggregate's shuffle-map stage (AQE runs it as its own job);
+  3. the aggregate's result stage, collected to the driver;
+  4. write metrics/ — one task;
+  5. write lineage/ — one task.
 """
 
 from __future__ import annotations
@@ -76,6 +85,9 @@ EXTRACTED_SCHEMA = StructType(
         StructField("ok", IntegerType()),
     ]
 )
+
+# the layout the stats scan reads back: a schema-less read runs a footer job
+STATS_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [StructField("bucket", IntegerType())])
 
 # columns the post-commit stats scan reads — everything EXCEPT the text
 STATS_COLUMNS = ["bucket", "lang", "n_blocks_kept", "n_blocks_dropped", "bytes_in", "ok"]
@@ -301,11 +313,15 @@ class ExtractJob:
         failure — permissions, corrupt footers, unreadable rows — must
         surface, because silently answering set() here would recompute
         and overwrite every bucket (this is the resume correctness
-        boundary)."""
+        boundary). Read with LINEAGE_SCHEMA (no footer-inference job): an
+        empty or marker-only dir, left by a kill during the first lineage
+        write, reads as no rows; a missing column reads as null, so a null
+        ``partition_id`` or ``status`` is not lineage and raises. One job:
+        lineage is about one row per bucket, deduplicated by the set."""
         from pyspark.errors import AnalysisException
 
         try:
-            lineage = self.spark.read.parquet(f"{self.out_dir}/lineage")
+            lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(f"{self.out_dir}/lineage")
         except AnalysisException as e:
             # error CLASS only, never free-text message matching: a
             # differently-worded future error must not silently read as
@@ -319,49 +335,22 @@ class ExtractJob:
             )
             if klass == "PATH_NOT_FOUND":
                 return set()
-            if klass == "UNABLE_TO_INFER_SCHEMA" and not self._lineage_has_data_files():
-                # a kill during the very first lineage write can leave an
-                # empty dir (or only _temporary/_SUCCESS) — no data file
-                # means provably nothing committed; but the same error
-                # over a dir that DOES hold data files (corrupt footers)
-                # must still surface
-                return set()
             raise
-        rows = (
-            lineage.filter(F.col("status") == "ok")
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-        return {int(r.partition_id.split("=", 1)[1]) for r in rows}
-
-    def _lineage_has_data_files(self) -> bool:
-        """True if the lineage dir holds any VISIBLE data file (Hadoop FS,
-        so it works for any scheme). Visibility mirrors Spark's
-        InMemoryFileIndex rule: a file is hidden if ANY path segment below
-        the lineage root starts with '_' or '.' — a part file inside
-        _temporary/ (an in-flight committer task the kill stranded) is
-        invisible to the reader and must not count as committed data."""
-        from manga_ocr_spark.jobs.upsert import _hadoop_fs
-
-        fs, path = _hadoop_fs(self.spark, f"{self.out_dir}/lineage")
-        if not fs.exists(path):
-            return False
-        base = fs.makeQualified(path).toString().rstrip("/") + "/"
-        it = fs.listFiles(path, True)
-        while it.hasNext():
-            full = it.next().getPath().toString()
-            rel = full[len(base):] if full.startswith(base) else full.rsplit("/", 1)[-1]
-            if not any(seg.startswith(("_", ".")) for seg in rel.split("/")):
-                return True
-        return False
+        rows = lineage.select("partition_id", "status").collect()
+        if any(r.partition_id is None or r.status is None for r in rows):
+            raise ValueError(
+                f"{self.out_dir}/lineage holds rows without partition_id or status: "
+                "not readable as lineage"
+            )
+        return {int(r.partition_id.split("=", 1)[1]) for r in rows if r.status == "ok"}
 
     def stats_scan(self, buckets: list[int]) -> DataFrame:
         """Pruned re-read of committed extracted/ partitions: partition-
         pruned to ``buckets``, column-pruned to STATS_COLUMNS — the
         extracted_text column is never read by metrics/lineage."""
         return (
-            self.spark.read.parquet(f"{self.out_dir}/extracted")
+            self.spark.read.schema(STATS_SCHEMA)
+            .parquet(f"{self.out_dir}/extracted")
             .filter(F.col("bucket").isin(buckets))
             .select(*STATS_COLUMNS)
         )

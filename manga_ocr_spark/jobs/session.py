@@ -91,8 +91,9 @@ def arrow_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) 
     PythonRDD: every write of a few driver rows then runs
     ``spark.default.parallelism`` Python-worker tasks, each paying a
     fixed ~0.25 CPU-s before doing any work. The Arrow-table path ships
-    the batches straight to the JVM instead — one partition per Arrow
-    batch (one for a few rows), no Python tasks. Columns use the schema's Arrow form, so
+    the batches straight to the JVM instead, as a ``LocalRelation`` that
+    scans in ``min(rows, spark.default.parallelism)`` tasks; ``coalesce(1)``
+    (no shuffle) writes it in one task. Columns use the schema's Arrow form, so
     TimestampType is a UTC instant and a naive ``datetime`` is read as
     UTC wall time, never in the driver's local zone (the list path's
     ``time.mktime`` reads it as local time). ``rows`` may be empty: the
@@ -105,7 +106,7 @@ def arrow_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) 
     table = pa.Table.from_arrays(
         [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
     )
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def get_spark(

@@ -144,8 +144,9 @@ def test_committed_buckets_missing_vs_corrupt_lineage(spark, tmp_path):
 def test_committed_buckets_empty_lineage_dir_is_fresh_start(spark, tmp_path):
     # second review cycle: a kill during the very FIRST lineage write can
     # leave an empty dir (or only committer markers) — provably nothing
-    # committed, must NOT abort the rerun (UNABLE_TO_INFER_SCHEMA), while
-    # a dir with an unreadable DATA file must still raise
+    # committed, must NOT abort the rerun: read with LINEAGE_SCHEMA, such a
+    # dir holds no visible data file and reads as no rows, while a dir
+    # with an unreadable DATA file must still raise
     out = str(tmp_path / "out")
     lineage = tmp_path / "out" / "lineage"
     lineage.mkdir(parents=True)
@@ -160,7 +161,8 @@ def test_committed_buckets_ignores_inflight_committer_files(spark, tmp_path):
     # second review cycle (repro'd): a kill during the first lineage write
     # leaves lineage/_temporary/.../part-*.parquet — the file is invisible
     # to Spark's reader (hidden ancestor dir), so it must not count as
-    # committed data; a VISIBLE unreadable part file must still raise.
+    # committed data; a VISIBLE unreadable part file must still raise when
+    # its rows are collected.
     import pytest
 
     out = str(tmp_path / "out")
@@ -175,6 +177,116 @@ def test_committed_buckets_ignores_inflight_committer_files(spark, tmp_path):
     )
     with pytest.raises(Exception):
         job.committed_buckets()
+
+
+def test_committed_buckets_rejects_a_foreign_parquet_file(spark, tmp_path):
+    # the read carries LINEAGE_SCHEMA, and a user schema reads a column the
+    # file lacks as null: a VALID parquet file without partition_id or
+    # status is not lineage and must raise, never read as "nothing
+    # committed" (which would recompute and overwrite every bucket)
+    import pytest
+
+    foreign = {
+        "no lineage columns": spark.range(3).withColumnRenamed("id", "bucket"),
+        "no status": spark.range(3).selectExpr("concat('bucket=', id) AS partition_id"),
+    }
+    for name, df in foreign.items():
+        out = str(tmp_path / name.replace(" ", "_"))
+        df.coalesce(1).write.parquet(f"{out}/lineage")
+        with pytest.raises(Exception):
+            ExtractJob(spark, out, num_buckets=4).committed_buckets()
+
+
+def _job_tasks(spark, group: str) -> list[int]:
+    """Tasks run by every Spark job of job group ``group``, in job order
+    (a stage skipped because an earlier job ran it completes none)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    counts = []
+    for jid in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds]
+        counts.append(sum(st.numCompletedTasks for st in stages if st is not None))
+    return counts
+
+
+def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
+    # the fixed Spark cost of a commit group is its job and task count:
+    # the stats re-read and the lineage read carry their schemas (no
+    # footer-inference job), committed_buckets collects without a
+    # distinct (no shuffle), and driver-built frames write in one task
+    import manga_ocr_spark.jobs.extract as X
+
+    sc = spark.sparkContext
+    tag = f"budget-{tmp_path.name}"
+    groups: list[str] = []
+    real = X.extract_pages
+
+    def start_group(*args, **kwargs):
+        # extract_pages is called once at the start of each commit group
+        groups.append(f"{tag}-group{len(groups)}")
+        sc.setJobGroup(groups[-1], groups[-1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(X, "extract_pages", start_group)
+    job = ExtractJob(spark, str(tmp_path / "out"), num_buckets=4, commit_group_size=2)
+    try:
+        assert sorted(job.run(pages_df)) == [0, 1, 2, 3]
+        sc.setJobGroup(f"{tag}-rerun", "rerun")
+        assert job.committed_buckets() == {0, 1, 2, 3}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(groups) == 2
+    for g in groups:
+        tasks = _job_tasks(spark, g)
+        assert len(tasks) <= 5, (g, tasks)
+        # a group's last two jobs write the metrics and lineage frames
+        assert tasks[-2:] == [1, 1], (g, tasks)
+    assert len(_job_tasks(spark, f"{tag}-rerun")) == 1
+
+
+def test_commit_outputs_match_a_direct_aggregate(spark, pages_df, tmp_path):
+    # metrics and lineage values come from the committed parquet, read
+    # back with the job's schema: they must equal an aggregate of the
+    # extraction computed straight from the pages, and each group's
+    # driver-built lineage rows land in one file
+    import glob
+
+    from manga_ocr_spark.jobs.extract import extract_pages, with_bucket
+
+    out = str(tmp_path / "out")
+    ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages_df)
+    ext = with_bucket(extract_pages(pages_df), 4)
+    per_bl = ext.groupBy("bucket", "lang").agg(
+        F.sum("n_blocks_kept").alias("kept"),
+        F.sum("n_blocks_dropped").alias("dropped"),
+        F.count("*").alias("n"),
+        F.sum("ok").alias("ok"),
+        F.sum("bytes_in").alias("bytes_in"),
+    ).collect()
+    want_metrics = sorted(
+        (r.lang, r.kept, r.dropped, r.n, f"bucket={r.bucket}") for r in per_bl
+    )
+    got_metrics = sorted(
+        tuple(r) for r in spark.read.parquet(f"{out}/metrics").select(
+            "lang", "blocks_kept", "blocks_dropped", "count", "partition_id"
+        ).collect()
+    )
+    assert got_metrics == want_metrics
+    want_lineage = {}
+    for r in per_bl:
+        n, ok, b = want_lineage.get(r.bucket, (0, 0, 0))
+        want_lineage[r.bucket] = (n + r.n, ok + r.ok, b + r.bytes_in)
+    got_lineage = sorted(
+        tuple(r) for r in spark.read.parquet(f"{out}/lineage").select(
+            "partition_id", "input_rows", "output_rows", "bytes_in", "status"
+        ).collect()
+    )
+    assert got_lineage == sorted(
+        (f"bucket={k}", *v, "ok") for k, v in want_lineage.items()
+    )
+    assert len(glob.glob(f"{out}/lineage/part-*.parquet")) == 2
 
 
 def test_commit_frames_start_no_python_workers(spark, pages_df, tmp_path, capture_arrow_frames):

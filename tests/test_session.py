@@ -79,6 +79,13 @@ def test_arrow_frame_keeps_schema_and_starts_no_python_workers(spark):
     assert [tuple(r) for r in got] == [("a", 1, None, 1700000000), ("b", 2, 3, None)]
 
 
+def test_arrow_frame_is_one_partition(spark):
+    # a LocalRelation scans in min(rows, default.parallelism) tasks; a
+    # driver-built frame of a few rows must write in one task
+    rows = [(str(i), i, i, None) for i in range(20)]
+    assert arrow_frame(spark, rows, SCHEMA).rdd.getNumPartitions() == 1
+
+
 def test_arrow_frame_empty_rows_write_a_typed_frame(spark, tmp_path):
     df = arrow_frame(spark, [], SCHEMA)
     assert df.schema == SCHEMA and df.count() == 0
