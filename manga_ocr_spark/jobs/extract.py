@@ -58,7 +58,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import arrow_frame
+from manga_ocr_spark.jobs.session import arrow_frame, error_class
 
 PAGES_SCHEMA = StructType(
     [
@@ -323,17 +323,7 @@ class ExtractJob:
         try:
             lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(f"{self.out_dir}/lineage")
         except AnalysisException as e:
-            # error CLASS only, never free-text message matching: a
-            # differently-worded future error must not silently read as
-            # "nothing committed" at this resume correctness boundary.
-            # getCondition is the PySpark-4 name; getErrorClass the
-            # pre-4 legacy one — both return the stable class id.
-            klass = (
-                e.getCondition()
-                if hasattr(e, "getCondition")
-                else e.getErrorClass() if hasattr(e, "getErrorClass") else None
-            )
-            if klass == "PATH_NOT_FOUND":
+            if error_class(e) == "PATH_NOT_FOUND":
                 return set()
             raise
         rows = lineage.select("partition_id", "status").collect()

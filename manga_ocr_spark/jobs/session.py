@@ -109,6 +109,17 @@ def arrow_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) 
     return spark.createDataFrame(table, schema).coalesce(1)
 
 
+def error_class(e: Exception) -> str | None:
+    """The stable error class id of a PySpark exception, never its
+    message: a differently-worded future error must not be mistaken for
+    a known one. ``getCondition`` is the PySpark-4 name, ``getErrorClass``
+    the pre-4 legacy one."""
+    for attr in ("getCondition", "getErrorClass"):
+        if hasattr(e, attr):
+            return getattr(e, attr)()
+    return None
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "manga-ocr-spark",
@@ -148,13 +159,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # byte-based cap composes with the row cap (a batch closes when
         # EITHER is hit, SQLConf: spark.sql.execution.arrow.maxBytesPerBatch)
-        # — bounds batch MEMORY directly, so 60 KB pages stop riding in
-        # ~60 MB batches while 2 KB docs keep their 1024-row batches; A/B
-        # hook via $SPARK_GRAFT_ARROW_MAX_BYTES, inert when unset
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAX_BYTES", str(1 << 30)),
-        )
+        # — 1 GiB leaves the row cap in charge for ordinary pages: a 16 MB
+        # byte cap measured neutral-to-negative on 60 KB pages
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(1 << 30))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

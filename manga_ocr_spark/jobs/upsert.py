@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from manga_ocr_spark.jobs.session import error_class
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works for
@@ -48,19 +50,7 @@ def table_exists(spark: SparkSession, path: str) -> bool:
         spark.read.parquet(path).schema
         return True
     except AnalysisException as e:
-        cond = ""
-        for attr in ("getCondition", "getErrorClass"):
-            fn = getattr(e, attr, None)
-            if fn is not None:
-                try:
-                    cond = fn() or ""
-                    break
-                except Exception:
-                    continue
-        if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return False
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
+        if error_class(e) in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return False
         raise
 

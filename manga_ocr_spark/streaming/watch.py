@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from manga_ocr_spark.jobs.extract import PAGES_SCHEMA, extract_pages
+from manga_ocr_spark.jobs.extract import PAGES_SCHEMA, extract_pages, with_bucket
 
 
 def run_stream(
@@ -84,8 +84,6 @@ def run_upsert_stream(
     next call — a replayed microbatch re-enters recovery, so every crash
     window converges (see jobs/upsert.merge_upsert's protocol docstring).
     """
-    from pyspark.sql import functions as F
-
     from manga_ocr_spark.jobs.upsert import (
         merge_upsert,
         recover_staging,
@@ -105,10 +103,9 @@ def run_upsert_stream(
         # stale staging to clobber the fresh table on the NEXT merge
         recover_staging(spark, table)
         if not table_exists(spark, table):
-            deduped = reduce_latest(extracted, ["url"], "warc_ts")
-            bucketed = deduped.withColumn(
-                "bucket", F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("int")
-            )
+            # the same bucket rule merge_upsert applies on url, or a
+            # re-saved page would land in a second bucket
+            bucketed = with_bucket(reduce_latest(extracted, ["url"], "warc_ts"), num_buckets)
             bucketed.write.mode("overwrite").partitionBy("bucket").parquet(table)
         else:
             merge_upsert(

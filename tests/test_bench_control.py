@@ -1,7 +1,10 @@
-"""The scaling capture's host-ceiling control (bench.py) claims to feed
-the pure extraction core THE SAME page HTML the engine legs extract —
-that byte-identity is what makes its throughput a ceiling for the engine
-rather than a different workload. Pin it against the real Spark path."""
+"""bench.py's capture controls.
+
+The scaling capture's host-ceiling control claims to feed the pure
+extraction core THE SAME page HTML the engine legs extract — that
+byte-identity is what makes its throughput a ceiling for the engine
+rather than a different workload. Pin it against the real Spark path.
+The quiet gate's verdict and fan count are pinned with stubbed probes."""
 
 from __future__ import annotations
 
@@ -31,3 +34,50 @@ def test_control_payloads_byte_identical_to_engine_pages(spark):
     # engine in Spark partition order
     assert sorted(got) == sorted(bytes(r.html) for r in rows)
     assert len(got) == 500 * fanout
+
+
+# The quiet gate judges each probe against itself: no Spark, no sleeping.
+QUIET = {"t1": 0.7, "tp": 0.8, "load1": 0.3}
+
+
+def test_quiet_gate_accepts_a_quiet_reading():
+    assert bench._is_quiet(QUIET, nproc=4)
+    assert bench._is_quiet({**QUIET, "tp": 1.5 * QUIET["t1"]}, nproc=4)
+
+
+def test_quiet_gate_rejects_a_storm_or_a_loaded_host():
+    assert not bench._is_quiet({**QUIET, "tp": 2 * QUIET["t1"]}, nproc=4)
+    assert not bench._is_quiet({**QUIET, "load1": 2.0}, nproc=4)
+    # a scaling leg's post-leg probe allows for the leg's own load
+    assert bench._is_quiet({**QUIET, "load1": 9.0}, nproc=4, load_allowance=8 + 3)
+    assert not bench._is_quiet({**QUIET, "tp": 2 * QUIET["t1"]}, nproc=4, load_allowance=11)
+
+
+def _stub_gate(monkeypatch, nproc: int, reading: dict) -> list[int]:
+    fans: list[int] = []
+
+    def probe(procs):
+        fans.append(procs)
+        return dict(reading)
+
+    def no_sleep(sec):
+        raise AssertionError(f"gate slept {sec}s")
+
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: nproc)
+    monkeypatch.setattr(bench, "_load_probe", probe)
+    monkeypatch.setattr(bench.time, "sleep", no_sleep)
+    return fans
+
+
+def test_quiet_gate_fans_over_min_8_nproc_and_passes_on_the_first_probe(monkeypatch):
+    for nproc, fan in ((4, 4), (32, 8), (1, 1)):
+        fans = _stub_gate(monkeypatch, nproc, QUIET)
+        assert bench._wait_quiet(540) == (QUIET, True)
+        assert fans == [fan]
+
+
+def test_quiet_gate_records_a_busy_probe_at_the_deadline(monkeypatch):
+    busy = {**QUIET, "tp": 2 * QUIET["t1"]}
+    fans = _stub_gate(monkeypatch, 4, busy)
+    assert bench._wait_quiet(0) == (busy, False)
+    assert fans == [4]

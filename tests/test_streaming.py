@@ -54,7 +54,7 @@ def test_streaming_upsert_replaces_resaved_page(spark, tmp_path):
     # REPLACES the old row — reader sees exactly the new text, no dups
     import datetime as dt
 
-    from manga_ocr_spark.jobs.extract import PAGES_SCHEMA
+    from manga_ocr_spark.jobs.extract import PAGES_SCHEMA, with_bucket
     from manga_ocr_spark.streaming.watch import run_upsert_stream
 
     indir = str(tmp_path / "in")
@@ -115,6 +115,12 @@ def test_streaming_upsert_replaces_resaved_page(spark, tmp_path):
     assert out.count() == 10
     (r5,) = out.filter("url = 'https://x/5'").collect()
     assert "FINAL" in r5.extracted_text
+
+    # the bootstrap write and every merge place a url by the one bucket
+    # rule, so a re-saved page can never land in a second bucket
+    placed = out.select("url", "bucket").collect()
+    expected = with_bucket(out.select("url"), 4).collect()
+    assert sorted(placed) == sorted(expected)
 
 
 def test_stateful_host_counters_accumulate_across_restarts(spark, tmp_path):
