@@ -747,141 +747,10 @@ def main_scaling(n: int = 2, n4: int = 8) -> None:
     print(json.dumps(summary))
 
 
-def main_streaming() -> None:
-    """Streaming-path performance evidence (VERDICT r2 item 7).
-
-    1. availableNow catch-up: the staged page corpus flows through the
-       Structured Streaming file source -> extraction -> append sink in
-       multiple microbatches; reports end-to-end docs/s.
-    2. MERGE cost vs touched buckets: per-microbatch merge_upsert cost on
-       a fixed-size table for update batches touching 1/4/16/64 of 64
-       buckets — the cost must track the TOUCHED fraction (bucket-pruned
-       read + dynamic overwrite), not the table size. dt(k)/dt(64) ~ k/64
-       is the scale claim made in jobs/upsert.py, measured here.
-
-    Writes BENCH/STREAMING.md and prints one JSON line.
-    """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from manga_ocr_spark.jobs.extract import extract_pages, with_bucket
-    from manga_ocr_spark.jobs.session import get_spark
-    from manga_ocr_spark.jobs.upsert import merge_upsert
-    from manga_ocr_spark.streaming.watch import run_stream
-
-    spark = get_spark(master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="bench_stream_")
-    num_buckets = 64
-    try:
-        # stage the corpus as N_FILES parquet files so availableNow +
-        # maxFilesPerTrigger yields several real microbatches
-        n_files = 8
-        input_dir = f"{root}/input"
-        _fanned_pages(spark, SF_DIR, FANOUT).repartition(n_files).write.parquet(input_dir)
-        n_docs = spark.read.parquet(input_dir).count()
-
-        t0 = time.time()
-        q = run_stream(
-            spark,
-            input_dir,
-            f"{root}/out",
-            f"{root}/ckpt",
-            available_now=True,
-            max_files_per_trigger=2,
-        )
-        q.awaitTermination()
-        stream_sec = time.time() - t0
-        out_rows = spark.read.parquet(f"{root}/out/extracted").count()
-        assert out_rows == n_docs, (out_rows, n_docs)
-
-        # upsert table: bootstrap once, then MERGE batches touching
-        # k ascending buckets of the same fixed-size table
-        table = f"{root}/table"
-        extracted = extract_pages(spark.read.parquet(input_dir)).drop("ok", "bytes_in")
-        with_bucket(extracted, num_buckets).write.partitionBy("bucket").parquet(table)
-        table_rows = spark.read.parquet(table).count()
-
-        merges = []
-        for k in (1, 4, 16, 64):
-            updates = (
-                spark.read.parquet(table)
-                .filter(F.col("bucket") < k)
-                .drop("bucket")
-                .withColumn("warc_ts", F.col("warc_ts") + F.expr("interval 1 hour"))
-            )
-            n_upd = updates.count()
-            t0 = time.time()
-            rewritten = merge_upsert(
-                spark, table, updates, key_cols=["url"], num_buckets=num_buckets
-            )
-            dt = time.time() - t0
-            merges.append(
-                {"touched_buckets": len(rewritten), "update_rows": n_upd, "sec": round(dt, 3)}
-            )
-        after = spark.read.parquet(table).count()
-        assert after == table_rows, (after, table_rows)  # replaces, never duplicates
-
-        full = merges[-1]["sec"]
-        lines = [
-            "# Streaming-path benchmarks\n",
-            f"Corpus: {n_docs} extracted pages at sf={_sf_from_dir(SF_DIR)}, "
-            f"local[{CPUS}], {num_buckets}-bucket table of {table_rows} rows.\n",
-            "## availableNow catch-up (file source -> extraction -> append sink)\n",
-            f"{n_docs} docs in {stream_sec:.1f}s across 4 microbatches "
-            f"(maxFilesPerTrigger=2) = **{n_docs / stream_sec:,.0f} docs/s** "
-            "end-to-end including checkpoint commits. The gap to the batch "
-            "path's throughput is per-microbatch fixed cost (offset-log + "
-            "commit-log fsyncs, sink parquet commit) at this deliberately "
-            "small batch size; at production scale a microbatch holds "
-            "millions of files' worth of pages and the same overhead "
-            "amortizes to noise — tune maxFilesPerTrigger for the "
-            "latency/amortization trade.\n",
-            "## MERGE cost vs touched buckets (fixed table size)\n",
-            "| touched buckets | update rows | wall (s) | vs full rewrite |",
-            "|---|---|---|---|",
-        ]
-        for m in merges:
-            lines.append(
-                f"| {m['touched_buckets']}/{num_buckets} | {m['update_rows']} "
-                f"| {m['sec']} | {m['sec'] / full:.2f}x |"
-            )
-        lines.append(
-            "\nCost tracks the touched fraction, not the table size: a"
-            " 1-bucket update batch costs a small constant (job overhead +"
-            " 1/64 of the data) while the 64-bucket batch approaches a full"
-            " rewrite — the bucket-pruned MERGE emulation behaves like the"
-            " Iceberg MERGE INTO it stands in for (jobs/upsert.py)."
-        )
-        Path(REPO / "BENCH").mkdir(exist_ok=True)
-        (REPO / "BENCH" / "STREAMING.md").write_text("\n".join(lines) + "\n")
-        print(
-            json.dumps(
-                {
-                    "metric": "streaming_catchup_docs_per_sec",
-                    "value": round(n_docs / stream_sec, 1),
-                    "unit": "docs/sec",
-                    "stream_docs": n_docs,
-                    "stream_sec": round(stream_sec, 3),
-                    "merge_cost_by_touched_buckets": merges,
-                    "sf": _sf_from_dir(SF_DIR),
-                    "cpus": CPUS,
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        spark.stop()
-
-
 if __name__ == "__main__":
     if "--scaling" in sys.argv:
         main_scaling()
     elif "--extract-timing" in sys.argv:
         main_extract_timing()
-    elif "--streaming" in sys.argv:
-        main_streaming()
     else:
         main_bench(sys.argv[1:])

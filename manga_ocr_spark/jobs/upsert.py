@@ -9,10 +9,12 @@ container has none, so the same semantics are emulated two ways:
 
 - :func:`merge_upsert` — the write-side MERGE: rewrite ONLY the bucket
   partitions that contain updated keys (partition-pruned read, anti-join
-  out the matched rows, union the updates, dynamic-partition-overwrite
-  those buckets). Cost scales with |touched buckets|, never table size —
-  at 2048 buckets over 100 TB, an update batch touching k buckets
-  rewrites ~k/2048 of the table.
+  out the matched rows, union the updates, stage those buckets, rename
+  each staged bucket dir into the live table). Cost scales with |touched
+  buckets|, never table size — at 2048 buckets over 100 TB, an update
+  batch touching k buckets rewrites ~k/2048 of the table. Rename is
+  atomic per directory on local FS and HDFS, not on object stores, where
+  a real deployment uses an Iceberg/Delta ``MERGE INTO``.
 - :func:`latest_wins` — the read-side view: when a table legitimately
   holds multiple versions per key (append-only ingest), readers take the
   max-``order_col`` row per key. One window shuffle on the key.
@@ -20,17 +22,82 @@ container has none, so the same semantics are emulated two ways:
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from manga_ocr_spark.jobs.session import error_class
 
 
+MANIFEST = "_manifest.json"
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works for
-    local paths in this sandbox and any DFS a real cluster mounts."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    local paths and any DFS a real cluster mounts."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _hadoop_fs(spark, path)
+    return fs.exists(p)
+
+
+def _delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` if it exists; raise if the FS refuses."""
+    fs, p = _hadoop_fs(spark, path)
+    if fs.exists(p) and not fs.delete(p, True):
+        raise RuntimeError(f"merge_upsert: could not delete {path}")
+
+
+def _rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to the absent ``dst``; raise if the FS refuses.
+    ``dst`` must not exist: a Hadoop rename onto an existing directory
+    returns True and nests ``src`` inside it (``dst/bucket=1/bucket=1``)."""
+    fs, s = _hadoop_fs(spark, src)
+    d = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    if fs.exists(d) or not fs.rename(s, d):
+        raise RuntimeError(f"merge_upsert: could not rename {src} to {dst}")
+
+
+def _listing(spark: SparkSession, path: str) -> dict[str, int | None]:
+    """{name: length, None for a directory} of the entries directly under
+    ``path``, skipping ``_``/``.`` names (markers, checksums, manifest);
+    empty if ``path`` is absent."""
+    fs, p = _hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return {}
+    named = [(st.getPath().getName(), st) for st in fs.listStatus(p)]
+    return {n: st.getLen() if st.isFile() else None for n, st in named if n[0] not in "_."}
+
+
+def _staged_manifest(spark: SparkSession, staging: str) -> dict[str, dict[str, int]]:
+    """{``bucket=b``: {data-file name: length}} of the staged buckets."""
+    return {b: _listing(spark, f"{staging}/{b}") for b in _listing(spark, staging)}
+
+
+def _read_manifest(spark: SparkSession, staging: str) -> dict | None:
+    fs, p = _hadoop_fs(spark, f"{staging}/{MANIFEST}")
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
+
+
+def _write_manifest(spark: SparkSession, staging: str, manifest: dict) -> None:
+    """Write the manifest atomically: a tmp file, then a rename."""
+    tmp = f"{staging}/{MANIFEST}.tmp"
+    fs, p = _hadoop_fs(spark, tmp)
+    stream = fs.create(p, True)
+    try:
+        stream.write(bytearray(json.dumps(manifest, sort_keys=True).encode()))
+    finally:
+        stream.close()
+    _rename(spark, tmp, f"{staging}/{MANIFEST}")
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
@@ -96,34 +163,34 @@ def merge_upsert(
     are replaced, new keys inserted. Returns the rewritten buckets.
 
     Only the affected bucket partitions are read (partition pruning) and
-    rewritten (dynamic partition overwrite); the rest of the table is
-    untouched on disk. The merged rows are staged to a sibling directory
-    first — Spark cannot overwrite a path it is lazily reading from — then
-    copied over in a second partition-pruned pass.
+    written, once, to a sibling staging dir (Spark cannot overwrite a
+    path it is lazily reading from); the rest of the table is untouched.
 
-    Crash safety (the commit itself is NOT atomic — dynamic partition
-    overwrite deletes-and-replaces each affected bucket): staging is the
-    write-ahead copy and is only discarded after the live table verifiably
-    holds its content. Protocol:
+    Commit protocol — staging is the write-ahead copy, dropped only after
+    the live table verifiably holds its files:
 
-    1. On entry, recover any leftover staging dir: if it is COMPLETE
-       (``_SUCCESS`` present), a previous merge died mid-commit — finish
-       the commit from staging (idempotent: staging holds the full merged
-       content of every affected bucket, so re-overwriting restores any
-       bucket the crash half-deleted). If incomplete, the table was never
-       touched — just drop the debris.
-    2. Write this merge's staging (now safe to ``overwrite``).
-    3. Commit: dynamic-partition-overwrite the affected buckets from a
-       read of staging.
-    4. Verify the read-back (row count of affected buckets in the live
-       table == staging count) BEFORE deleting staging — until then,
-       staging remains the only guaranteed-good copy.
+    1. Recover (:func:`recover_staging`): roll a complete leftover staging
+       dir (``_SUCCESS`` present) forward; drop an incomplete one as
+       debris — the table was never touched.
+    2. Stage the merged buckets.
+    3. Commit: atomically write ``{staging}/_manifest.json`` (tmp file,
+       then rename) mapping each staged bucket to its data-file names and
+       lengths; then, for each manifest bucket still under staging, delete
+       the live ``bucket=b`` dir and rename the staged one into place (a
+       Hadoop rename onto an existing dir would nest the source inside
+       it). Staging with ``_SUCCESS`` but no manifest has had no rename,
+       so its listing is its manifest.
+    4. Verify: the live listing of those buckets must equal the manifest,
+       else raise and keep staging.
+    5. Drop staging.
 
-    A replayed streaming batch re-enters at step 1, so every crash window
-    converges to the correct table + the merge applied exactly once.
-    Concurrent writers to one table are NOT supported (neither are they by
-    the reference's single daemon); a real Iceberg/Delta MERGE INTO — the
-    semantic this emulates — is the multi-writer answer.
+    Steps 3-5 are Hadoop FS calls only, no Spark job. A replayed streaming
+    batch re-enters at step 1, so every crash window converges to the
+    correct table with the merge applied exactly once. Rename is atomic
+    per directory (so the commit is atomic per bucket) on local FS and
+    HDFS, not on object stores, where a real deployment uses an
+    Iceberg/Delta ``MERGE INTO`` — also the answer for concurrent writers,
+    which this does not support (nor does the reference's single daemon).
 
     ``dedupe_order_col``: when the SAME key can appear more than once in
     one updates batch (a streaming microbatch holding a page's original
@@ -157,92 +224,61 @@ def merge_upsert(
 
 
 def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
-    """Dynamic-partition-overwrite the staged buckets into the live table."""
-    (
-        spark.read.parquet(staging)
-        .write.mode("overwrite")
-        # per-write option, not a session conf (would leak into later
-        # overwrite writes in the same session)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(table_dir)
-    )
-
-
-def _bucket_digest(df: DataFrame, cols: list[str]) -> dict[int, tuple[int, int]]:
-    """Per-bucket (row_count, order-independent content-hash sum) — one
-    map-side-combined aggregation, driver result is |buckets| rows. The
-    per-row hash is bounded to 2^31 so summing 2^29 rows/bucket stays far
-    inside int64 (no overflow-wrap ambiguity between engines/configs)."""
-    h = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(1 << 31))
-    rows = (
-        df.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("hs"))
-        .collect()
-    )
-    return {int(r["bucket"]): (int(r["n"]), int(r["hs"])) for r in rows}
+    """Write the manifest if absent, then swap every bucket directory
+    still under staging into the live table (delete live, rename staged).
+    Idempotent: a bucket already renamed is no longer under staging."""
+    manifest = _read_manifest(spark, staging)
+    if manifest is None:
+        # no rename has happened yet: every staged bucket is still there
+        manifest = _staged_manifest(spark, staging)
+        _write_manifest(spark, staging, manifest)
+    fs, p = _hadoop_fs(spark, table_dir)
+    fs.mkdirs(p)
+    staged = _listing(spark, staging)
+    for b in sorted(manifest):
+        if b in staged:
+            _delete(spark, f"{table_dir}/{b}")
+            _rename(spark, f"{staging}/{b}", f"{table_dir}/{b}")
 
 
 def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
-    """Read-back verification gate: staging is the only guaranteed-good
-    copy of the affected buckets until the live table provably holds their
-    CONTENT, so staging is deleted ONLY after the check passes — on
-    mismatch it raises and staging survives for the next recovery attempt.
-
-    The check compares, per affected bucket, the row count AND an
-    order-independent sum of a per-row content hash over every column —
-    so a commit that landed the right number of wrong rows, or a stale
-    bucket directory whose count happens to match, still fails loudly.
-    (Not a cryptographic proof — a colliding hash-sum is possible in
-    principle — but it is a content check, not a cardinality check.)
-    Shared by the merge commit and by :func:`recover_staging` (an
-    unverified recovery that deleted staging would turn a loud commit
-    failure into silent row loss)."""
-    staged = spark.read.parquet(staging)
-    cols = sorted(staged.columns)
-    staged_d = _bucket_digest(staged.select(*cols), cols)
-    buckets = list(staged_d)
-    live = spark.read.parquet(table_dir).filter(F.col("bucket").isin(buckets))
-    live_d = _bucket_digest(live.select(*cols), cols)
-    if staged_d != live_d:
-        bad = sorted(
-            b for b in set(staged_d) | set(live_d) if staged_d.get(b) != live_d.get(b)
-        )
+    """Delete staging ONLY once the live listing of every manifest bucket
+    equals the manifest (data-file names and lengths; the staged listing
+    when no commit has started); on mismatch raise and keep staging for
+    the next recovery. Shared by the merge commit and
+    :func:`recover_staging` (an unverified recovery that deleted staging
+    would turn a loud commit failure into silent row loss)."""
+    manifest = _read_manifest(spark, staging) or _staged_manifest(spark, staging)
+    bad = sorted(b for b in manifest if _listing(spark, f"{table_dir}/{b}") != manifest[b])
+    if bad:
         raise RuntimeError(
-            f"merge_upsert commit verification failed: buckets {bad} differ "
-            f"between staging and the live table (count, content-hash); staging "
-            f"at {staging} is preserved for recovery"
+            f"merge_upsert commit verification failed: live buckets {bad} differ from "
+            f"the manifest (file names, lengths); staging at {staging} is kept for recovery"
         )
-    fs, spath = _hadoop_fs(spark, staging)
-    fs.delete(spath, True)
+    _delete(spark, staging)
 
 
 def recover_staging(spark: SparkSession, table_dir: str, staging: str | None = None) -> bool:
-    """Restore an interrupted :func:`merge_upsert` commit, if any.
+    """Finish an interrupted :func:`merge_upsert` commit, if any.
 
-    Returns True when a completed staging dir was found and re-committed
-    into the table. Safe to call any time — merge_upsert calls it on every
-    entry, and run_upsert_stream calls it BEFORE its table-existence probe
-    (a mid-commit crash can leave the table empty/unreadable; without
-    recovery-first, the replayed batch would take the bootstrap branch,
-    overwrite the table with one batch's rows, and a later merge would
-    then commit the stale staging over it). A crash DURING recovery just
-    leaves staging in place for the next attempt; the staging delete is
-    gated on the same read-back verification as a live commit.
+    Returns True when a complete staging dir (``_SUCCESS``: the merge died
+    before or during its commit) was found and rolled forward. Safe to call
+    any time — merge_upsert calls it on every entry, and run_upsert_stream
+    calls it BEFORE its table-existence probe (a mid-commit crash can leave
+    the table empty/unreadable; without recovery-first, the replayed batch
+    would take the bootstrap branch, overwrite the table with one batch's
+    rows, and a later merge would then commit the stale staging over it).
+    A crash DURING recovery just leaves staging in place for the next
+    attempt; the staging delete is gated on the same verification as a
+    live commit.
     """
     staging = staging or f"{table_dir}__staging_merge"
-    fs, spath = _hadoop_fs(spark, staging)
-    if not fs.exists(spath):
+    if not _exists(spark, staging):
         return False
-    success = spark._jvm.org.apache.hadoop.fs.Path(f"{staging}/_SUCCESS")
-    if fs.exists(success):
-        # the previous merge finished writing staging but may have died
-        # mid-commit; re-committing is idempotent and restores any bucket
-        # the crash half-deleted. Staging is deleted only after the
-        # committed rows verifiably landed.
-        _commit_staging(spark, staging, table_dir)
-        _verify_and_drop_staging(spark, staging, table_dir)
-        return True
-    # incomplete staging (no _SUCCESS): the table was never touched
-    fs.delete(spath, True)
-    return False
+    if not _exists(spark, f"{staging}/_SUCCESS"):
+        # incomplete staging: the table was never touched
+        _delete(spark, staging)
+        return False
+    _commit_staging(spark, staging, table_dir)
+    _verify_and_drop_staging(spark, staging, table_dir)
+    return True

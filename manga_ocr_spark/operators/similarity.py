@@ -126,33 +126,6 @@ def _mix(seed: int, b: int, j: int) -> float:
     return (x / 2**63) - 1.0
 
 
-def hyperplane_signature(vec: Column, dim: int, bits: int = 16, seed: int = 42) -> Column:
-    """b-bit random-hyperplane sign signature as a long.
-
-    One Arrow-batched pandas UDF: the (bits x dim) hyperplane matrix is
-    rebuilt from ``_mix`` inside the worker (no broadcast needed), and the
-    whole batch reduces to a single numpy matmul. An earlier pure-codegen
-    variant unrolled bits*dim element_at terms — MB-sized task binaries and
-    ~10x slower; sign tests over dense vectors are exactly what vectorized
-    UDFs are for.
-    """
-    return memo(
-        ("hyperplane_sig", dim, bits, seed), lambda: _signature_udf(dim, bits, seed)
-    )(vec)
-
-
-def _signature_udf(dim: int, bits: int, seed: int):
-    @F.pandas_udf(LongType())
-    def _sig(vs: pd.Series) -> pd.Series:
-        planes = _plane_matrix(seed, dim, bits)  # (bits, dim), worker-cached
-        arr = np.stack([np.asarray(v, dtype=np.float64) for v in vs])  # (n, dim)
-        dots = arr @ planes.T  # (n, bits)
-        weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
-        return pd.Series(((dots > 0) @ weights).astype(np.int64))
-
-    return _sig
-
-
 def hyperplane_signatures(
     vec: Column, dim: int, bits: int, bands: int, seed: int = 42
 ) -> Column:
@@ -162,8 +135,10 @@ def hyperplane_signatures(
     ANY band. Recall per true neighbor with per-bit agreement p is
     1-(1-p^bits)^bands — bands multiply recall, bits shrink buckets.
 
-    Still ONE numpy matmul per Arrow batch: the (bands*bits x dim) plane
-    matrix is built once per batch and the sign matrix is packed per band.
+    One Arrow-batched pandas UDF, ONE numpy matmul per batch: the
+    (bands*bits x dim) plane matrix is cached per worker and the sign
+    matrix is packed per band (a codegen variant unrolling bits*dim
+    element_at terms was ~10x slower).
     """
     return memo(
         ("hyperplane_sigs", dim, bits, bands, seed), lambda: _signatures_udf(dim, bits, bands, seed)

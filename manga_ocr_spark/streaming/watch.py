@@ -27,16 +27,12 @@ def run_stream(
     checkpoint_dir: str,
     available_now: bool = True,
     processing_time: str = "10 seconds",
-    max_files_per_trigger: int | None = None,
 ):
     """Watch ``input_dir`` for new parquet page files; extract; append.
 
     Returns the StreamingQuery (caller awaits/stops it).
     """
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_dir)
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
     def _process(batch_df, batch_id: int) -> None:
         # foreachBatch = the reference's process_and_write_results
@@ -78,11 +74,14 @@ def run_upsert_stream(
     raises, failing the batch so the stream retries instead of letting the
     bootstrap branch's mode('overwrite') truncate the accumulated table.
 
-    Exactly-once across restarts: the MERGE commit itself (dynamic
-    partition overwrite) is not atomic, but merge_upsert stages the merged
-    buckets first and recovers an interrupted commit from staging on the
-    next call — a replayed microbatch re-enters recovery, so every crash
-    window converges (see jobs/upsert.merge_upsert's protocol docstring).
+    Exactly-once across restarts: merge_upsert stages the merged buckets,
+    writes a commit manifest, then renames each staged bucket directory
+    into the table; the next call rolls an interrupted commit forward from
+    the manifest — a replayed microbatch re-enters recovery, so every
+    crash window converges (see jobs/upsert.merge_upsert's protocol
+    docstring). Rename is atomic per directory on local FS and HDFS, not
+    on object stores, where a real deployment uses an Iceberg/Delta
+    ``MERGE INTO``.
     """
     from manga_ocr_spark.jobs.upsert import (
         merge_upsert,

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -406,19 +407,19 @@ def test_simhash_duckdb_oracle_matches_on_hostile_whitespace():
 
 def test_hyperplane_signatures_band0_equals_single_signature(spark):
     # contract: band i of the multi-table signatures uses seed base+i, so
-    # band 0 must equal the single-table signature at the base seed — the
-    # multi-band operator is a strict superset of the single-band one
+    # band 0 must equal the single-table signature at the base seed: the
+    # sign pattern over _plane_matrix(seed, dim, bits), packed low bit first
     rows = [Row(vec_id=i, embedding=[float((i * 7 + j) % 5 - 2) for j in range(8)]) for i in range(20)]
     df = spark.createDataFrame(rows)
     v = F.col("embedding").cast("array<double>")
     out = df.select(
-        "vec_id",
-        S.hyperplane_signature(v, dim=8, bits=6, seed=42).alias("single"),
-        S.hyperplane_signatures(v, dim=8, bits=6, bands=4, seed=42).alias("multi"),
+        "embedding", S.hyperplane_signatures(v, dim=8, bits=6, bands=4, seed=42).alias("multi")
     ).collect()
+    planes = S._plane_matrix(42, 8, 6)  # (bits, dim)
+    weights = np.int64(1) << np.arange(6, dtype=np.int64)
     for r in out:
         assert len(r.multi) == 4
-        assert r.multi[0] == r.single
+        assert r.multi[0] == int((np.asarray(r.embedding) @ planes.T > 0) @ weights)
     # different bands hash differently (not all degenerate-equal)
     assert any(len(set(r.multi)) > 1 for r in out)
 

@@ -1,0 +1,142 @@
+"""merge_upsert's rename commit (jobs/upsert.py): a crash at any step
+boundary of the commit converges to the last-write-wins model once the
+batch replays, and everything after the staging write is Hadoop FS calls
+that move the staged files into the table as they are."""
+
+from __future__ import annotations
+
+import glob
+import os
+import random
+
+import pytest
+from pyspark.sql import Row
+
+from manga_ocr_spark.jobs import upsert as U
+from manga_ocr_spark.jobs.upsert import merge_upsert, recover_staging
+from tests.test_resume import _job_tasks
+from tests.test_upsert import _write_table
+
+
+class Crash(Exception):
+    pass
+
+
+BOUNDARIES = [
+    "after_staging",  # staged, manifest tmp file written but not renamed
+    "after_manifest",  # manifest in place, no bucket touched
+    "after_1_of_n_buckets",
+    "after_2_of_n_buckets",
+    "between_delete_and_rename",  # first live bucket deleted, staged dir not moved
+    "after_last_rename",  # before verification
+    "after_verification",  # before the staging drop
+]
+
+
+def _inject_crash(monkeypatch, boundary: str, table: str, staging: str) -> None:
+    """Make the commit's FS calls raise Crash at ``boundary``."""
+    real_delete, real_rename = U._delete, U._rename
+    renamed: list[str] = []
+
+    def delete(spark, path):
+        live_bucket = path.startswith(f"{table}/bucket=")
+        crash = {
+            "after_manifest": live_bucket and not renamed,
+            "after_1_of_n_buckets": live_bucket and len(renamed) == 1,
+            "after_2_of_n_buckets": live_bucket and len(renamed) == 2,
+            "after_verification": path == staging,
+        }
+        if crash.get(boundary):
+            raise Crash(boundary)
+        real_delete(spark, path)
+
+    def rename(spark, src, dst):
+        crash = {
+            "after_staging": dst.endswith(U.MANIFEST),
+            "between_delete_and_rename": dst.startswith(f"{table}/bucket="),
+        }
+        if crash.get(boundary):
+            raise Crash(boundary)
+        real_rename(spark, src, dst)
+        if dst.startswith(f"{table}/bucket="):
+            renamed.append(dst)
+            if boundary == "after_last_rename" and not glob.glob(f"{staging}/bucket=*"):
+                raise Crash(boundary)
+
+    monkeypatch.setattr(U, "_delete", delete)
+    monkeypatch.setattr(U, "_rename", rename)
+
+
+def _table(spark, path: str) -> dict[str, str]:
+    rows = spark.read.parquet(path).collect()
+    got = {r.url: r.text for r in rows}
+    assert len(got) == len(rows), "duplicate keys in the table"
+    return got
+
+
+@pytest.mark.parametrize("boundary", BOUNDARIES)
+def test_merge_crash_at_commit_boundary_matches_dict_model(spark, tmp_path, monkeypatch, boundary):
+    # the crashed merge's staging is complete, so recovery alone rolls it
+    # forward to the merged table; the streaming replay of the same batch
+    # then applies it again as a no-op, and later merges carry on
+    rng = random.Random(11)
+    path = str(tmp_path / "tbl")
+    staging = f"{path}__staging_merge"
+    model = {f"u{i}": f"old{i}" for i in range(40)}
+    _write_table(spark, path, [Row(url=k, text=v) for k, v in model.items()])
+    for step in range(3):
+        batch = {f"u{rng.randrange(50)}": f"v{step}_{j}" for j in range(8)}
+        model.update(batch)
+        updates = spark.createDataFrame([Row(url=k, text=v) for k, v in batch.items()])
+        if step == 1:
+            _inject_crash(monkeypatch, boundary, path, staging)
+            with pytest.raises(Crash):
+                merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+            monkeypatch.undo()
+            assert os.path.exists(f"{staging}/_SUCCESS")
+            assert recover_staging(spark, path) is True
+            assert not os.path.exists(staging)
+            assert _table(spark, path) == model, f"recovery diverged at {boundary}"
+        merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+        assert _table(spark, path) == model, f"diverged at step {step} ({boundary})"
+
+
+def _data_files(d: str) -> dict[str, int]:
+    return {
+        f: os.path.getsize(os.path.join(d, f))
+        for f in os.listdir(d)
+        if not f.startswith(("_", "."))
+    }
+
+
+def test_commit_runs_no_spark_job_and_moves_the_staged_files(spark, tmp_path, monkeypatch):
+    # once staging is durable, commit, verification and the staging drop
+    # are Hadoop FS calls only: no Spark job, and the live files of each
+    # rewritten bucket are the staged files, same names and lengths
+    sc = spark.sparkContext
+    group = f"after-staging-{tmp_path.name}"
+    path = str(tmp_path / "tbl")
+    _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(40)])
+    staged: dict[str, dict[str, int]] = {}
+    real_commit = U._commit_staging
+
+    def commit(spark_, staging, table_dir):
+        for d in glob.glob(f"{staging}/bucket=*"):
+            staged[os.path.basename(d)] = _data_files(d)
+        sc.setJobGroup(group, group)
+        real_commit(spark_, staging, table_dir)
+
+    monkeypatch.setattr(U, "_commit_staging", commit)
+    updates = spark.createDataFrame(
+        [Row(url="u3", text="NEW3"), Row(url="u7", text="NEW7"), Row(url="u99", text="ins99")]
+    )
+    try:
+        rewritten = merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _job_tasks(spark, group) == []
+    assert sorted(staged) == [f"bucket={b}" for b in rewritten]
+    for b, files in staged.items():
+        assert files and _data_files(f"{path}/{b}") == files, b
+    assert _table(spark, path)["u3"] == "NEW3"
