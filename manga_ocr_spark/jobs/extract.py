@@ -32,7 +32,11 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
 Spark jobs per commit group (pinned by tests/test_resume.py; every job
 and task has a fixed cost that can exceed the extraction's own):
 
-  1. write extracted/ — the extraction tasks;
+  1. write extracted/ — the extraction tasks: ``ceil(n_in * |group| / B)``
+     of them for an input of ``n_in`` partitions (``_group_width``), not
+     one per input split; a salted run hash-partitions on url first (a
+     map-stage job of ``n_in`` tasks), then writes in
+     ``ceil(P * |group| / B)`` tasks;
   2. the stats aggregate's shuffle-map stage (AQE runs it as its own job);
   3. the aggregate's result stage, collected to the driver;
   4. write metrics/ — one task;
@@ -180,6 +184,9 @@ def _make_extract_map(debug_blocks: bool = False):
     tasks, not this closure, sets it. The extraction core is pure
     Python, imported here (not at module top) so the task closure stays
     tiny and the spark-submit --py-files layout is exercised.
+    ``ExtractJob.run`` sizes each commit group's stage by its share of
+    the input (``_group_width``) so that floor is paid per input split's
+    worth of rows, not per fragment of one.
 
     ``debug_blocks``: emit the per-block K6 debug column (every scored
     block with its features and keep decision). Debug tier only — the
@@ -253,14 +260,34 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
+def input_partitions(df: DataFrame) -> int | None:
+    """The partition count of ``df``'s planned scan, read without running
+    a Spark job, or None when it cannot be: under AQE a plan holding an
+    exchange or a subquery is an ``AdaptiveSparkPlanExec``, whose RDD
+    materializes the shuffle to count its partitions. Checking the
+    executed plan's class executes nothing."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return None
+    return qe.toRdd().getNumPartitions()
+
+
+def _group_width(total: int, group_size: int, num_buckets: int) -> int:
+    """A commit group's share of a whole-input partition count: a group
+    of ``group_size`` of ``num_buckets`` buckets holds about that
+    fraction of the rows."""
+    return max(1, -(-total * group_size // num_buckets))
+
+
 def extract_pages(
     df: DataFrame, salt_partitions: int | None = None, debug_blocks: bool = False
 ) -> DataFrame:
     """pages DF -> extracted DF (url, warc_ts, extracted_text, counters...).
 
-    ``salt_partitions``: when set, repartition on ``pmod(xxhash64(url), P)``
-    before the UDF so host-skewed inputs spread evenly over tasks (X11).
-    The hash is on the full url => uniform regardless of host skew.
+    ``salt_partitions``: when set, hash-partition on ``url`` into P
+    partitions before the UDF so host-skewed inputs spread evenly over
+    tasks (X11). The hash is on the full url => uniform regardless of
+    host skew, and independent of the url's commit bucket.
 
     ``debug_blocks``: K6 debug side output — append a ``blocks``
     ``array<struct>`` column (SURVEY §1.4 schema) holding every scored
@@ -276,7 +303,7 @@ def extract_pages(
     # parquet scan). Catalyst prunes the scan from this select.
     df = df.select("url", "warc_ts", "html", "lang")
     if salt_partitions:
-        df = df.repartition(salt_partitions, F.pmod(F.xxhash64("url"), F.lit(salt_partitions)))
+        df = df.repartition(salt_partitions, "url")
     schema = EXTRACTED_DEBUG_SCHEMA if debug_blocks else EXTRACTED_SCHEMA
     return df.mapInArrow(_make_extract_map(debug_blocks), schema)
 
@@ -301,6 +328,8 @@ class ExtractJob:
     out_dir: str
     num_buckets: int = 16
     commit_group_size: int = 8
+    # whole-input salt width: each commit group hash-partitions on url to
+    # its share of it, ceil(P * |group| / num_buckets), never to P itself
     salt_partitions: int | None = None
     # Iceberg-style layout (days(warc_ts), bucket(url)) from the north
     # rule: time pruning for incremental readers + stable url buckets for
@@ -348,7 +377,15 @@ class ExtractJob:
     def run(self, pages: DataFrame, max_groups: int | None = None) -> list[int]:
         """Extract all not-yet-committed buckets. Returns buckets committed
         this run. ``max_groups`` caps commit groups (used by the resume test
-        to simulate a mid-run kill)."""
+        to simulate a mid-run kill).
+
+        A filter on the computed ``bucket`` keeps the scan's partition
+        count, so each group's extraction stage would run one Python task
+        per input split, each holding |group|/B of its rows. Each group
+        is coalesced (no shuffle) to its share of the input's ``n_in``
+        partitions instead; ``n_in`` is read once, without a Spark job,
+        and an input whose count needs one keeps the scan's width."""
+        n_in = None if self.salt_partitions else input_partitions(pages)
         pages = with_bucket(pages, self.num_buckets)
         done = self.committed_buckets()
         todo = [b for b in range(self.num_buckets) if b not in done]
@@ -362,7 +399,14 @@ class ExtractJob:
         for group in groups:
             t_start = time.time()
             sub = pages.filter(F.col("bucket").isin(group))
-            ext = extract_pages(sub, salt_partitions=self.salt_partitions)
+            salt = None
+            if self.salt_partitions:
+                salt = _group_width(self.salt_partitions, len(group), self.num_buckets)
+            elif n_in is not None:
+                width = _group_width(n_in, len(group), self.num_buckets)
+                if width < n_in:
+                    sub = sub.coalesce(width)
+            ext = extract_pages(sub, salt_partitions=salt)
             ext = with_bucket(ext, self.num_buckets)
             # Scale-safe sink pattern: write extracted/ FIRST, then derive
             # metrics+lineage from a column-pruned re-read of the committed

@@ -15,6 +15,12 @@ Local smoke (what the sandbox runs):
 
 Resume semantics: rerunning with the same --output skips every bucket
 that already has an ok lineage row (ExtractJob, jobs/extract.py).
+
+Task widths: each commit group of G of the --buckets B runs its
+extraction in about G/B of the input's partitions. --salt P is a
+whole-input width too: each group repartitions to ceil(P * G / B)
+partitions, so `--buckets 2048 --commit-group 8 --salt 4096` runs 16
+extraction tasks per group, not 4096.
 """
 
 from __future__ import annotations
@@ -29,7 +35,8 @@ def main() -> None:
     p.add_argument("--output", required=True, help="output dir (extracted/ metrics/ lineage/)")
     p.add_argument("--buckets", type=int, default=16, help="commit/resume buckets (2048 at scale)")
     p.add_argument("--commit-group", type=int, default=8, help="buckets per lineage commit")
-    p.add_argument("--salt", type=int, default=None, help="salted repartition width (skewed hosts)")
+    p.add_argument("--salt", type=int, default=None, help="salted repartition width over the whole input (skewed hosts); "
+                   "each commit group uses its share, ceil(salt * group / buckets)")
     p.add_argument("--master", default=None, help="override master (defaults to spark-submit's)")
     args = p.parse_args()
 

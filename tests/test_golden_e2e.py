@@ -52,12 +52,12 @@ def test_counters_and_metadata_passthrough(spark, pages_df, pages_pdf):
 
 
 def test_salted_repartition_spreads_skewed_hosts(spark, pages_df):
-    # fixture hosts are Zipf-skewed; after the salt repartition no single
-    # task partition should hold a grossly dominant share of rows
+    # fixture hosts are Zipf-skewed; after the salt repartition every
+    # task partition holds rows and none a grossly dominant share
     from manga_ocr_spark.jobs.extract import with_bucket
 
     n_parts = 8
-    salted = pages_df.repartition(n_parts, F.pmod(F.xxhash64("url"), F.lit(n_parts)))
+    salted = extract_pages(pages_df, salt_partitions=n_parts)
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -66,6 +66,7 @@ def test_salted_repartition_spreads_skewed_hosts(spark, pages_df):
     )
     counts = [r["count"] for r in sizes]
     total = sum(counts)
+    assert len(counts) == n_parts, counts
     assert max(counts) / total < 0.5  # vs ~host-0 share >0.5 unsalted
     # bucketing is stable: same url -> same bucket on repeated evaluation
     b1 = with_bucket(pages_df, 16).select("url", "bucket").collect()

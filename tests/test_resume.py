@@ -8,6 +8,7 @@ the rest. A kill between commit groups loses at most the in-flight group.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from manga_ocr_spark.jobs.extract import ExtractJob
@@ -210,15 +211,12 @@ def _job_tasks(spark, group: str) -> list[int]:
     return counts
 
 
-def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
-    # the fixed Spark cost of a commit group is its job and task count:
-    # the stats re-read and the lineage read carry their schemas (no
-    # footer-inference job), committed_buckets collects without a
-    # distinct (no shuffle), and driver-built frames write in one task
+def _job_group_per_commit_group(spark, monkeypatch, tag: str) -> list[str]:
+    """Put each commit group's Spark jobs in a job group of its own;
+    returns the list the groups' ids are appended to."""
     import manga_ocr_spark.jobs.extract as X
 
     sc = spark.sparkContext
-    tag = f"budget-{tmp_path.name}"
     groups: list[str] = []
     real = X.extract_pages
 
@@ -229,14 +227,30 @@ def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(X, "extract_pages", start_group)
+    return groups
+
+
+def _clear_job_group(spark) -> None:
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
+def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
+    # the fixed Spark cost of a commit group is its job and task count:
+    # the stats re-read and the lineage read carry their schemas (no
+    # footer-inference job), committed_buckets collects without a
+    # distinct (no shuffle), and driver-built frames write in one task
+    sc = spark.sparkContext
+    tag = f"budget-{tmp_path.name}"
+    groups = _job_group_per_commit_group(spark, monkeypatch, tag)
     job = ExtractJob(spark, str(tmp_path / "out"), num_buckets=4, commit_group_size=2)
     try:
         assert sorted(job.run(pages_df)) == [0, 1, 2, 3]
         sc.setJobGroup(f"{tag}-rerun", "rerun")
         assert job.committed_buckets() == {0, 1, 2, 3}
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        _clear_job_group(spark)
     assert len(groups) == 2
     for g in groups:
         tasks = _job_tasks(spark, g)
@@ -244,6 +258,78 @@ def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
         # a group's last two jobs write the metrics and lineage frames
         assert tasks[-2:] == [1, 1], (g, tasks)
     assert len(_job_tasks(spark, f"{tag}-rerun")) == 1
+
+
+@pytest.mark.parametrize("salt", [None, 8])
+def test_commit_group_tasks_sized_to_its_share_of_the_input(
+    spark, pages_df, tmp_path, monkeypatch, salt
+):
+    # a filter on the computed bucket keeps the scan's partition count:
+    # unsized, each group's extraction runs one Python task (~0.25 CPU-s
+    # floor) per input split. Each of 2 groups of 4 buckets must run in
+    # ceil(n_in * 2 / 4) tasks and write at most that many files per
+    # bucket; a salted run writes in its share of the salt width
+    import glob
+    import math
+
+    from manga_ocr_spark.jobs.extract import input_partitions
+
+    src = str(tmp_path / "pages")
+    pages_df.repartition(6).write.parquet(src)
+    pages = spark.read.parquet(src)
+    n_in = input_partitions(pages)
+    assert n_in == 6
+    groups = _job_group_per_commit_group(spark, monkeypatch, f"width-{tmp_path.name}")
+    out = str(tmp_path / "out")
+    job = ExtractJob(spark, out, num_buckets=4, commit_group_size=2, salt_partitions=salt)
+    try:
+        assert sorted(job.run(pages)) == [0, 1, 2, 3]
+    finally:
+        _clear_job_group(spark)
+    assert len(groups) == 2
+    # the extraction write is the job before the stats aggregate's two
+    # and the two frame writes; a salted group's shuffle precedes it
+    writes = [_job_tasks(spark, g)[-5] for g in groups]
+    files = [len(glob.glob(f"{out}/extracted/bucket={b}/*.parquet")) for b in range(4)]
+    if salt is None:
+        width = math.ceil(n_in * 2 / 4)
+        assert writes == [width] * 2, writes
+        assert max(files) <= width, files
+    else:
+        assert writes == [math.ceil(salt * 2 / 4)] * 2, writes
+        # hash-partitioned on url, each bucket's rows spread over more
+        # than one of the group's tasks
+        assert all(1 < f <= 4 for f in files), files
+    assert spark.read.parquet(f"{out}/extracted").count() == pages_df.count()
+
+
+def test_input_partitions_runs_no_job(spark, pages_df, tmp_path):
+    # the width probe reads a planned scan's partition count and runs no
+    # Spark job: a parquet input and a driver LocalRelation answer, an
+    # input whose plan holds an exchange (AQE would materialize the
+    # shuffle to count) answers None
+    from manga_ocr_spark.jobs.extract import input_partitions
+
+    sc = spark.sparkContext
+    src = str(tmp_path / "pages")
+    pages_df.repartition(3).write.parquet(src)
+    tag = f"probe-{tmp_path.name}"
+    inputs = {
+        "parquet": spark.read.parquet(src),
+        "local": pages_df,
+        "exchange": pages_df.repartition(3),
+    }
+    sc.setJobGroup(tag, tag)
+    try:
+        got = {k: input_partitions(df) for k, df in inputs.items()}
+    finally:
+        _clear_job_group(spark)
+    assert _job_tasks(spark, tag) == []
+    assert got == {
+        "parquet": 3,
+        "local": pages_df.rdd.getNumPartitions(),
+        "exchange": None,
+    }
 
 
 def test_commit_outputs_match_a_direct_aggregate(spark, pages_df, tmp_path):

@@ -16,7 +16,8 @@ SF_DIR = "/root/testdata/sf0.001"
 NOTES = {
     "extract_flagship": (
         "The extraction job. ONE Exchange total — the deliberate salt "
-        "repartition that spreads skewed hosts (SURVEY §4 X11); everything "
+        "repartition, hashpartitioning on the url, that spreads skewed "
+        "hosts (SURVEY §4 X11); everything "
         "else is a scan -> filter -> prune-project -> MapInArrow map chain. "
         "The scan never reads the WET `text` column (pruned before the UDF "
         "boundary), and `html IS NOT NULL` sits JVM-side so Catalyst can "
