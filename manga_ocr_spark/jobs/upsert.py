@@ -1,23 +1,26 @@
 """Upsert (MERGE INTO) semantics over the bucket-partitioned parquet
-layout, plus the latest-wins dedup-on-read view.
+layout, plus the latest-wins view.
 
 The reference reprocesses a re-saved input when its mtime changes
 (/root/reference/manga_ocr/run.py:107,204-206) — i.e. new content under an
 existing key replaces the old output. Iceberg would express this as
 ``MERGE INTO ... WHEN MATCHED THEN UPDATE`` with the runtime jar; this
-container has none, so the same semantics are emulated two ways:
+container has none, so the same semantics are emulated:
 
-- :func:`merge_upsert` — the write-side MERGE: rewrite ONLY the bucket
-  partitions that contain updated keys (partition-pruned read, anti-join
-  out the matched rows, union the updates, stage those buckets, rename
-  each staged bucket dir into the live table). Cost scales with |touched
-  buckets|, never table size — at 2048 buckets over 100 TB, an update
-  batch touching k buckets rewrites ~k/2048 of the table. Rename is
-  atomic per directory on local FS and HDFS, not on object stores, where
-  a real deployment uses an Iceberg/Delta ``MERGE INTO``.
-- :func:`latest_wins` — the read-side view: when a table legitimately
-  holds multiple versions per key (append-only ingest), readers take the
-  max-``order_col`` row per key. One window shuffle on the key.
+- :func:`merge_upsert` — the write-side MERGE, and the only way rows
+  enter the table: the first batch into a missing table is a merge with
+  nothing to replace. The batch is reduced to one row per url and staged
+  once; only the live bucket partitions holding its urls are read
+  (anti-join out the matched rows, union the batch), staged, and each
+  staged bucket dir is renamed into the live table. Cost scales with
+  |touched buckets|, never table size — at 2048 buckets over 100 TB, an
+  update batch touching k buckets rewrites ~k/2048 of the table. Rename
+  is atomic per directory on local FS and HDFS, not on object stores,
+  where a real deployment uses an Iceberg/Delta ``MERGE INTO``.
+- :func:`latest_wins` — one row per key, the max-``order_col`` version
+  with a deterministic content-hash tie-break: merge_upsert's batch
+  reduction, and the read-side view over a table that legitimately holds
+  several versions per key. One window shuffle on the key.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from manga_ocr_spark.jobs.session import error_class
+from manga_ocr_spark.jobs.extract import with_bucket
 
 
 MANIFEST = "_manifest.json"
@@ -100,45 +103,10 @@ def _write_manifest(spark: SparkSession, staging: str, manifest: dict) -> None:
     _rename(spark, tmp, f"{staging}/{MANIFEST}")
 
 
-def table_exists(spark: SparkSession, path: str) -> bool:
-    """True iff a readable parquet table exists at ``path``.
-
-    Only the definitive "nothing there" AnalysisExceptions map to False
-    (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA — an empty directory).
-    Everything else — corrupt footers, permission errors, transient DFS
-    hiccups — RE-RAISES: a caller that treats "cannot read right now" as
-    "does not exist" would route into a bootstrap branch whose
-    mode('overwrite') replaces the whole accumulated table with one batch.
-    Failing the batch so the stream retries is the safe outcome.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except AnalysisException as e:
-        if error_class(e) in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return False
-        raise
-
-
 def latest_wins(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """One row per key: the max-``order_col`` version. ``order_col`` must
-    be unique per key (an ingest timestamp or monotone version number) so
-    row_number is deterministic."""
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .drop("__rk")
-    )
-
-
-def reduce_latest(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """One row per key: max ``order_col``, ties broken DETERMINISTICALLY
-    by a content hash over all columns (unlike :func:`latest_wins`, which
-    requires a unique order column). Used to pre-reduce update batches
-    that may carry several versions of one key."""
+    """One row per key: the max-``order_col`` version, ties broken
+    DETERMINISTICALLY by a content hash over all columns (a micro-batch
+    can hold two saves of one url with the same crawl time)."""
     w = Window.partitionBy(*key_cols).orderBy(
         F.desc(order_col), F.desc(F.xxhash64(*[F.col(c) for c in df.columns]))
     )
@@ -150,21 +118,23 @@ def reduce_latest(df: DataFrame, key_cols: list[str], order_col: str) -> DataFra
 
 
 def merge_upsert(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    num_buckets: int,
-    dedupe_order_col: str | None = None,
+    spark: SparkSession, table_dir: str, updates: DataFrame, num_buckets: int
 ) -> list[int]:
-    """MERGE the ``updates`` rows into the parquet table at ``table_dir``
-    (which must be ``partitionBy("bucket")`` with
-    ``bucket = pmod(xxhash64(key_cols...), num_buckets)``): matched keys
-    are replaced, new keys inserted. Returns the rewritten buckets.
+    """MERGE the ``updates`` rows into the parquet table at ``table_dir``,
+    ``partitionBy("bucket")`` under jobs/extract.py::with_bucket's rule on
+    url: matched urls are replaced, new urls inserted. The rows of
+    ``updates`` give the table its columns. A missing table reads as an
+    empty one, so the first batch creates it. Returns the rewritten buckets.
 
-    Only the affected bucket partitions are read (partition pruning) and
-    written, once, to a sibling staging dir (Spark cannot overwrite a
-    path it is lazily reading from); the rest of the table is untouched.
+    ``updates`` is evaluated once: reduced to one row per url (the latest
+    ``warc_ts``; a batch can hold a page's save and its re-save; ties, or a
+    batch without ``warc_ts``, fall to a content hash) and written to a
+    sibling ``__staging_updates`` dir, partitioned by bucket. Its listing
+    names the affected buckets; only those that exist live are read, and
+    the merged rows are written, once, to a sibling staging dir (Spark
+    cannot overwrite a path it is lazily reading from); the rest of the
+    table is untouched. A corrupt live bucket fails that write, before any
+    commit step.
 
     Commit protocol — staging is the write-ahead copy, dropped only after
     the live table verifiably holds its files:
@@ -178,8 +148,9 @@ def merge_upsert(
        lengths; then, for each manifest bucket still under staging, delete
        the live ``bucket=b`` dir and rename the staged one into place (a
        Hadoop rename onto an existing dir would nest the source inside
-       it). Staging with ``_SUCCESS`` but no manifest has had no rename,
-       so its listing is its manifest.
+       it), and mark the table ``_SUCCESS`` as a Spark write would. Staging
+       with ``_SUCCESS`` but no manifest has had no rename, so its listing
+       is its manifest.
     4. Verify: the live listing of those buckets must equal the manifest,
        else raise and keep staging.
     5. Drop staging.
@@ -191,42 +162,40 @@ def merge_upsert(
     HDFS, not on object stores, where a real deployment uses an
     Iceberg/Delta ``MERGE INTO`` — also the answer for concurrent writers,
     which this does not support (nor does the reference's single daemon).
-
-    ``dedupe_order_col``: when the SAME key can appear more than once in
-    one updates batch (a streaming microbatch holding a page's original
-    save AND its re-save), pass the version/timestamp column — updates
-    are pre-reduced to one row per key (max order value; ties broken by a
-    content hash, deterministically) so the merged table never holds
-    duplicates. Without it, duplicate keys in one batch are the caller's
-    bug and would both be inserted.
     """
     staging = f"{table_dir}__staging_merge"
+    staged_updates = f"{table_dir}__staging_updates"
     recover_staging(spark, table_dir, staging)
 
-    if dedupe_order_col is not None:
-        updates = reduce_latest(updates, key_cols, dedupe_order_col)
-    key_hash = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast(
-        "int"
-    )
-    updates = updates.withColumn("bucket", key_hash)
-    affected = sorted(r.bucket for r in updates.select("bucket").distinct().collect())
-    if not affected:
+    # without a crawl time the url itself orders the rows: the hash decides
+    order = "warc_ts" if "warc_ts" in updates.columns else "url"
+    updates = with_bucket(latest_wins(updates, ["url"], order), num_buckets)
+    updates.write.mode("overwrite").partitionBy("bucket").parquet(staged_updates)
+    touched = _listing(spark, staged_updates)
+    if not touched:
+        _delete(spark, staged_updates)
         return []
-    existing = spark.read.parquet(table_dir).filter(F.col("bucket").isin(affected))
-    merged = existing.join(
-        updates.select(*key_cols).distinct(), key_cols, "left_anti"
-    ).unionByName(updates.select(*existing.columns))
-
+    batch = spark.read.schema(updates.schema).parquet(staged_updates)
+    live = _listing(spark, table_dir)
+    live_touched = [f"{table_dir}/{b}" for b in touched if b in live]
+    merged = batch
+    if live_touched:
+        existing = (
+            spark.read.schema(updates.schema).option("basePath", table_dir).parquet(*live_touched)
+        )
+        merged = existing.join(batch.select("url"), "url", "left_anti").unionByName(batch)
     merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    _delete(spark, staged_updates)
     _commit_staging(spark, staging, table_dir)
     _verify_and_drop_staging(spark, staging, table_dir)
-    return affected
+    return sorted(int(b.split("=", 1)[1]) for b in touched)
 
 
 def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
     """Write the manifest if absent, then swap every bucket directory
-    still under staging into the live table (delete live, rename staged).
-    Idempotent: a bucket already renamed is no longer under staging."""
+    still under staging into the live table (delete live, rename staged),
+    then mark the table ``_SUCCESS``. Idempotent: a bucket already renamed
+    is no longer under staging."""
     manifest = _read_manifest(spark, staging)
     if manifest is None:
         # no rename has happened yet: every staged bucket is still there
@@ -239,6 +208,7 @@ def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
         if b in staged:
             _delete(spark, f"{table_dir}/{b}")
             _rename(spark, f"{staging}/{b}", f"{table_dir}/{b}")
+    fs.create(spark._jvm.org.apache.hadoop.fs.Path(f"{table_dir}/_SUCCESS"), True).close()
 
 
 def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
@@ -263,14 +233,11 @@ def recover_staging(spark: SparkSession, table_dir: str, staging: str | None = N
 
     Returns True when a complete staging dir (``_SUCCESS``: the merge died
     before or during its commit) was found and rolled forward. Safe to call
-    any time — merge_upsert calls it on every entry, and run_upsert_stream
-    calls it BEFORE its table-existence probe (a mid-commit crash can leave
-    the table empty/unreadable; without recovery-first, the replayed batch
-    would take the bootstrap branch, overwrite the table with one batch's
-    rows, and a later merge would then commit the stale staging over it).
-    A crash DURING recovery just leaves staging in place for the next
-    attempt; the staging delete is gated on the same verification as a
-    live commit.
+    any time; merge_upsert calls it on every entry, before it lists the
+    live table (a mid-commit crash can leave the table missing buckets, or
+    missing altogether, while staging holds the only good copy). A crash
+    DURING recovery just leaves staging in place for the next attempt; the
+    staging delete is gated on the same verification as a live commit.
     """
     staging = staging or f"{table_dir}__staging_merge"
     if not _exists(spark, staging):

@@ -337,7 +337,6 @@ def pages_from_warc_ranges(
     spark: SparkSession,
     index: DataFrame,
     lang: str | None = None,
-    sort_ranges: bool = True,
 ) -> DataFrame:
     """Indexed WARC reads: intra-file parallelism from a CDX-style offset
     index — the actual Common-Crawl scale path (the crawl publishes
@@ -353,10 +352,10 @@ def pages_from_warc_ranges(
     The range read goes through ``pyarrow.fs`` resolved per worker from
     the path, so local paths and any pyarrow-supported DFS (HDFS, S3)
     work unchanged. Partition the index (``index.repartition(n)``) to set
-    the task granularity; ``sort_ranges`` (default True) then sorts each
-    partition by (path, offset) — a NARROW per-partition sort, no
-    shuffle — so every task reads roughly-sequential byte spans and the
-    per-path filesystem/resolution memoization hits maximally.
+    the task granularity; each partition is then sorted by (path, offset)
+    — a NARROW per-partition sort, no shuffle — so every task reads
+    roughly-sequential byte spans and the per-path filesystem/resolution
+    memoization hits maximally.
     """
 
     def read_ranges(batches):
@@ -424,7 +423,5 @@ def pages_from_warc_ranges(
 
     from manga_ocr_spark.jobs.extract import PAGES_SCHEMA
 
-    index = index.select("path", "offset", "length")
-    if sort_ranges:
-        index = index.sortWithinPartitions("path", "offset")
+    index = index.select("path", "offset", "length").sortWithinPartitions("path", "offset")
     return index.mapInArrow(read_ranges, PAGES_SCHEMA)

@@ -127,36 +127,35 @@ def test_daemon_mode_processing_time_trigger(spark, tmp_path):
     import pandas as pd
 
     from manga_ocr_spark.fixtures.pages import generate_pages
-    from manga_ocr_spark.streaming.watch import run_stream
+    from manga_ocr_spark.streaming.watch import run_upsert_stream
 
     indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+
+    def poll(n: int) -> None:
+        # a commit swaps bucket dirs under a concurrent reader: retry
+        deadline = time.time() + 90
+        while time.time() < deadline:
+            try:
+                if spark.read.parquet(f"{outdir}/extracted").count() == n:
+                    return
+            except Exception:
+                pass
+            time.sleep(1)
+
     first = generate_pages(14, seed=3)
     spark.createDataFrame(first.drop(columns=["family"])).coalesce(1).write.mode(
         "append"
     ).parquet(indir)
-    q = run_stream(
-        spark, indir, outdir, ckpt, available_now=False, processing_time="1 seconds"
-    )
+    q = run_upsert_stream(spark, indir, outdir, ckpt, processing_time="1 seconds")
     try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(f"{outdir}/extracted").count() == 14:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
+        poll(14)
         assert spark.read.parquet(f"{outdir}/extracted").count() == 14
         # drop more files in while the daemon runs
         second = generate_pages(28, seed=4).iloc[14:]
         spark.createDataFrame(second.drop(columns=["family"])).coalesce(1).write.mode(
             "append"
         ).parquet(indir)
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            if spark.read.parquet(f"{outdir}/extracted").count() == 28:
-                break
-            time.sleep(1)
+        poll(28)
         assert spark.read.parquet(f"{outdir}/extracted").count() == 28
     finally:
         q.stop()

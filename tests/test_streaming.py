@@ -10,7 +10,7 @@ from __future__ import annotations
 import pandas as pd
 
 from manga_ocr_spark.fixtures.pages import generate_pages
-from manga_ocr_spark.streaming.watch import run_stream
+from manga_ocr_spark.streaming.watch import run_upsert_stream
 
 
 def _write_batch(spark, pdf: pd.DataFrame, path: str) -> None:
@@ -28,14 +28,14 @@ def test_available_now_catchup_and_incremental(spark, tmp_path):
     first, second = all_pages.iloc[:21], all_pages.iloc[21:]
 
     _write_batch(spark, first, indir)
-    q = run_stream(spark, indir, outdir, ckpt, available_now=True)
+    q = run_upsert_stream(spark, indir, outdir, ckpt)
     q.awaitTermination(120)
     got1 = spark.read.parquet(f"{outdir}/extracted")
     assert got1.count() == 21
 
     # new files arrive; a second catch-up batch processes ONLY them
     _write_batch(spark, second, indir)
-    q2 = run_stream(spark, indir, outdir, ckpt, available_now=True)
+    q2 = run_upsert_stream(spark, indir, outdir, ckpt)
     q2.awaitTermination(120)
     got2 = spark.read.parquet(f"{outdir}/extracted")
     assert got2.count() == 42
@@ -43,7 +43,7 @@ def test_available_now_catchup_and_incremental(spark, tmp_path):
     assert got2.groupBy("url").count().filter("count > 1").count() == 0
 
     # restart with nothing new: no-op
-    q3 = run_stream(spark, indir, outdir, ckpt, available_now=True)
+    q3 = run_upsert_stream(spark, indir, outdir, ckpt)
     q3.awaitTermination(120)
     assert spark.read.parquet(f"{outdir}/extracted").count() == 42
 
@@ -55,7 +55,6 @@ def test_streaming_upsert_replaces_resaved_page(spark, tmp_path):
     import datetime as dt
 
     from manga_ocr_spark.jobs.extract import PAGES_SCHEMA, with_bucket
-    from manga_ocr_spark.streaming.watch import run_upsert_stream
 
     indir = str(tmp_path / "in")
     outdir = str(tmp_path / "out")
@@ -116,11 +115,60 @@ def test_streaming_upsert_replaces_resaved_page(spark, tmp_path):
     (r5,) = out.filter("url = 'https://x/5'").collect()
     assert "FINAL" in r5.extracted_text
 
-    # the bootstrap write and every merge place a url by the one bucket
+    # every merge, the first included, places a url by the one bucket
     # rule, so a re-saved page can never land in a second bucket
     placed = out.select("url", "bucket").collect()
     expected = with_bucket(out.select("url"), 4).collect()
     assert sorted(placed) == sorted(expected)
+
+
+def test_daemon_mode_replaces_resaved_page(spark, tmp_path):
+    # T1 + T4 in one running query: the processingTime daemon picks up a
+    # re-saved file while it stays up, and its extraction replaces the
+    # url's row — one row per url, holding the new text
+    import datetime as dt
+    import time
+
+    from manga_ocr_spark.jobs.extract import PAGES_SCHEMA
+
+    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    table = f"{outdir}/extracted"
+    ts = dt.datetime(2024, 3, 1)
+
+    def page(i: int, body: str, t=ts):
+        return (f"https://x/{i}", t, f"<html><body><p>{body}</p></body></html>".encode(), "t", "en")
+
+    def text_of(url: str):
+        # a commit swaps bucket dirs under a concurrent reader: retry
+        try:
+            return [r.extracted_text for r in spark.read.parquet(table).filter(f"url = '{url}'").collect()]
+        except Exception:
+            return None
+
+    def wait_for(cond) -> None:
+        deadline = time.time() + 90
+        while time.time() < deadline and not cond():
+            time.sleep(1)
+
+    spark.createDataFrame(
+        [page(i, f"original body text number {i}") for i in range(6)], PAGES_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(indir)
+    q = run_upsert_stream(spark, indir, outdir, ckpt, num_buckets=4, processing_time="1 seconds")
+    try:
+        wait_for(lambda: text_of("https://x/5") == ["original body text number 5"])
+        spark.createDataFrame(
+            [page(2, "REVISED body text after edit", ts + dt.timedelta(days=1))], PAGES_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(indir)
+        wait_for(lambda: text_of("https://x/2") == ["REVISED body text after edit"])
+    finally:
+        q.stop()
+    assert q.exception() is None
+    out = spark.read.parquet(table)
+    assert out.count() == 6
+    assert out.groupBy("url").count().filter("count > 1").count() == 0
+    assert [r.extracted_text for r in out.filter("url = 'https://x/2'").collect()] == [
+        "REVISED body text after edit"
+    ]
 
 
 def test_stateful_host_counters_accumulate_across_restarts(spark, tmp_path):
@@ -166,16 +214,15 @@ def test_stateful_host_counters_accumulate_across_restarts(spark, tmp_path):
 
 
 def test_upsert_stream_recovers_before_bootstrap_probe(spark, tmp_path):
-    # self-review r3 finding: a mid-commit crash can leave the TABLE
-    # empty/unreadable while the complete staging dir holds the only good
-    # copy. The replayed batch must recover from staging FIRST — probing
-    # existence first would route into the bootstrap overwrite (dropping
-    # every prior key) and leave stale staging to clobber the next merge.
+    # a mid-commit crash can leave the TABLE missing while the complete
+    # staging dir holds the only good copy. The replayed batch must
+    # recover from staging FIRST — listing the live table first would
+    # read it as empty (dropping every prior key from the merge) and
+    # leave stale staging to clobber the next merge.
     import datetime as dt
     import shutil
 
     from manga_ocr_spark.jobs.extract import PAGES_SCHEMA
-    from manga_ocr_spark.streaming.watch import run_upsert_stream
 
     indir = str(tmp_path / "in")
     outdir = str(tmp_path / "out")

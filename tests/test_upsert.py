@@ -30,7 +30,7 @@ def test_merge_replaces_matched_inserts_new(spark, tmp_path):
     updates = spark.createDataFrame(
         [Row(url="u3", text="NEW3"), Row(url="u7", text="NEW7"), Row(url="u99", text="ins99")]
     )
-    rewritten = merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+    rewritten = merge_upsert(spark, path, updates, num_buckets=4)
     assert rewritten  # at least one bucket touched
 
     out = {r.url: r.text for r in spark.read.parquet(path).collect()}
@@ -48,7 +48,7 @@ def test_merge_rewrites_only_affected_buckets(spark, tmp_path):
         for b in range(4)
     }
     updates = spark.createDataFrame([Row(url="u5", text="NEW5")])
-    rewritten = merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+    rewritten = merge_upsert(spark, path, updates, num_buckets=4)
     assert len(rewritten) == 1
     untouched = [b for b in range(4) if b not in rewritten]
     after = {
@@ -64,8 +64,8 @@ def test_merge_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(10)])
     updates = spark.createDataFrame([Row(url="u1", text="NEW1")])
-    merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
-    merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+    merge_upsert(spark, path, updates, num_buckets=4)
+    merge_upsert(spark, path, updates, num_buckets=4)
     rows = spark.read.parquet(path).filter("url = 'u1'").collect()
     assert len(rows) == 1 and rows[0].text == "NEW1"
 
@@ -88,7 +88,6 @@ def test_merge_random_sequence_matches_dict_model(spark, tmp_path):
             spark,
             path,
             spark.createDataFrame([Row(url=k, text=v) for k, v in batch.items()]),
-            key_cols=["url"],
             num_buckets=4,
         )
         got = {r.url: r.text for r in spark.read.parquet(path).collect()}
@@ -98,17 +97,23 @@ def test_merge_random_sequence_matches_dict_model(spark, tmp_path):
 def test_merge_batch_with_duplicate_keys_keeps_latest_only(spark, tmp_path):
     # one updates batch carrying BOTH versions of a key (a streaming
     # microbatch seeing a save and a re-save) must leave exactly one row:
-    # the max-order version
+    # the latest warc_ts
+    import datetime as dt
+
     path = str(tmp_path / "tbl")
-    _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(6)])
-    updates = spark.createDataFrame(
-        [Row(url="u2", text="v1", ver=1), Row(url="u2", text="v2", ver=2),
-         Row(url="u9", text="new9a", ver=1), Row(url="u9", text="new9b", ver=2)]
-    )
-    # ver orders the reduction; merge_upsert projects to the table schema
+    t0 = dt.datetime(2024, 3, 1)
+    later = t0 + dt.timedelta(hours=1)
     merge_upsert(
-        spark, path, updates, key_cols=["url"], num_buckets=4, dedupe_order_col="ver"
+        spark,
+        path,
+        spark.createDataFrame([Row(url=f"u{i}", text=f"old{i}", warc_ts=t0) for i in range(6)]),
+        num_buckets=4,
     )
+    updates = spark.createDataFrame(
+        [Row(url="u2", text="v2", warc_ts=later), Row(url="u2", text="v1", warc_ts=t0),
+         Row(url="u9", text="new9a", warc_ts=t0), Row(url="u9", text="new9b", warc_ts=later)]
+    )
+    merge_upsert(spark, path, updates, num_buckets=4)
     rows = {r.url: r.text for r in spark.read.parquet(path).collect()}
     assert rows["u2"] == "v2" and rows["u9"] == "new9b"
     assert spark.read.parquet(path).groupBy("url").count().filter("count > 1").count() == 0
@@ -126,28 +131,54 @@ def test_latest_wins_view(spark):
     assert out == {"a": ("v2", 2), "b": ("only", 1)}
 
 
-def test_table_exists_narrow_exception_contract(spark, tmp_path):
-    # only definitive "nothing there" maps to False; a corrupt/unreadable
-    # table must RAISE — returning False would route a streaming batch
-    # into the bootstrap branch whose overwrite truncates the real table
+def _live_files(path: str) -> dict[str, bytes]:
+    return {
+        os.path.relpath(f, path): open(f, "rb").read()
+        for f in glob.glob(f"{path}/**", recursive=True)
+        if os.path.isfile(f)
+    }
+
+
+def test_merge_over_a_corrupt_live_bucket_raises_and_leaves_the_table(spark, tmp_path):
+    # the live buckets a batch touches are read, never probed: a corrupt
+    # file there must fail the merge before any commit step, not read as
+    # "no rows" and let the staged bucket replace the live one
     import pytest
 
-    from manga_ocr_spark.jobs.upsert import table_exists
+    path = str(tmp_path / "tbl")
+    _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(20)])
+    (bucket,) = [r.bucket for r in spark.read.parquet(path).filter("url = 'u5'").collect()]
+    with open(f"{path}/bucket={bucket}/part-corrupt.parquet", "w") as f:
+        f.write("not parquet " * 10)
+    before = _live_files(path)
 
-    assert table_exists(spark, str(tmp_path / "missing")) is False
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert table_exists(spark, str(empty)) is False
-
-    real = str(tmp_path / "real")
-    _write_table(spark, real, [Row(url="u0", text="t0")])
-    assert table_exists(spark, real) is True
-
-    corrupt = tmp_path / "corrupt"
-    corrupt.mkdir()
-    (corrupt / "part-000.parquet").write_text("not parquet " * 10)
+    updates = spark.createDataFrame([Row(url="u5", text="NEW5")])
     with pytest.raises(Exception):
-        table_exists(spark, str(corrupt))
+        merge_upsert(spark, path, updates, num_buckets=4)
+    assert _live_files(path) == before
+    assert not os.path.exists(f"{path}__staging_merge/_SUCCESS")
+
+
+def test_merge_extracts_each_batch_once(spark, tmp_path):
+    # the batch's plan (extraction, in a stream) runs once per merge: the
+    # affected buckets, the matched keys and the inserted rows all come
+    # from one staged copy, not from re-evaluating the UDF per branch
+    path = str(tmp_path / "tbl")
+    _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(20)])
+    counted = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            counted.add(b.num_rows)
+            yield b
+
+    rows = [Row(url=f"u{i}", text=f"new{i}") for i in range(10, 25)]
+    src = spark.createDataFrame(rows)
+    updates = src.mapInArrow(count_rows, src.schema)
+    assert merge_upsert(spark, path, updates, num_buckets=4)
+    assert counted.value == len(rows)
+    out = {r.url: r.text for r in spark.read.parquet(path).collect()}
+    assert len(out) == 25 and out["u12"] == "new12" and out["u3"] == "old3"
 
 
 def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
@@ -177,12 +208,12 @@ def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(U, "_commit_staging", crash_mid_commit)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+        merge_upsert(spark, path, updates, num_buckets=4)
     monkeypatch.setattr(U, "_commit_staging", real_commit)
 
     # table is corrupted on disk right now (a whole bucket missing);
     # staging holds the only good copy. Replay of the SAME batch:
-    merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+    merge_upsert(spark, path, updates, num_buckets=4)
 
     out = {r.url: r.text for r in spark.read.parquet(path).collect()}
     assert len(out) == 40  # every original key survived the crash
@@ -203,7 +234,7 @@ def test_merge_ignores_incomplete_staging(spark, tmp_path):
         f.write("half-written debris")  # no _SUCCESS marker
 
     updates = spark.createDataFrame([Row(url="u1", text="NEW1")])
-    merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+    merge_upsert(spark, path, updates, num_buckets=4)
 
     out = {r.url: r.text for r in spark.read.parquet(path).collect()}
     assert len(out) == 10 and out["u1"] == "NEW1" and out["u0"] == "old0"

@@ -74,30 +74,39 @@ def _table(spark, path: str) -> dict[str, str]:
     return got
 
 
-@pytest.mark.parametrize("boundary", BOUNDARIES)
-def test_merge_crash_at_commit_boundary_matches_dict_model(spark, tmp_path, monkeypatch, boundary):
+@pytest.mark.parametrize(
+    "boundary,missing_table",
+    [pytest.param(b, False, id=b) for b in BOUNDARIES]
+    + [pytest.param(b, True, id=f"missing_table-{b}") for b in BOUNDARIES],
+)
+def test_merge_crash_at_commit_boundary_matches_dict_model(
+    spark, tmp_path, monkeypatch, boundary, missing_table
+):
     # the crashed merge's staging is complete, so recovery alone rolls it
     # forward to the merged table; the streaming replay of the same batch
-    # then applies it again as a no-op, and later merges carry on
+    # then applies it again as a no-op, and later merges carry on. With
+    # missing_table the crash hits the first batch, the one creating it.
     rng = random.Random(11)
     path = str(tmp_path / "tbl")
     staging = f"{path}__staging_merge"
-    model = {f"u{i}": f"old{i}" for i in range(40)}
-    _write_table(spark, path, [Row(url=k, text=v) for k, v in model.items()])
+    model = {} if missing_table else {f"u{i}": f"old{i}" for i in range(40)}
+    if model:
+        _write_table(spark, path, [Row(url=k, text=v) for k, v in model.items()])
+    crash_step = 0 if missing_table else 1
     for step in range(3):
         batch = {f"u{rng.randrange(50)}": f"v{step}_{j}" for j in range(8)}
         model.update(batch)
         updates = spark.createDataFrame([Row(url=k, text=v) for k, v in batch.items()])
-        if step == 1:
+        if step == crash_step:
             _inject_crash(monkeypatch, boundary, path, staging)
             with pytest.raises(Crash):
-                merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+                merge_upsert(spark, path, updates, num_buckets=4)
             monkeypatch.undo()
             assert os.path.exists(f"{staging}/_SUCCESS")
             assert recover_staging(spark, path) is True
             assert not os.path.exists(staging)
             assert _table(spark, path) == model, f"recovery diverged at {boundary}"
-        merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+        merge_upsert(spark, path, updates, num_buckets=4)
         assert _table(spark, path) == model, f"diverged at step {step} ({boundary})"
 
 
@@ -131,7 +140,7 @@ def test_commit_runs_no_spark_job_and_moves_the_staged_files(spark, tmp_path, mo
         [Row(url="u3", text="NEW3"), Row(url="u7", text="NEW7"), Row(url="u99", text="ins99")]
     )
     try:
-        rewritten = merge_upsert(spark, path, updates, key_cols=["url"], num_buckets=4)
+        rewritten = merge_upsert(spark, path, updates, num_buckets=4)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
