@@ -62,7 +62,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import arrow_frame, error_class
+from manga_ocr_spark.jobs.session import arrow_frame, error_class, read_text, write_text
 
 PAGES_SCHEMA = StructType(
     [
@@ -194,23 +194,9 @@ def _make_extract_map(debug_blocks: bool = False):
     off and the schema identical to EXTRACTED_SCHEMA.
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    block_type = pa.list_(
-        pa.struct(
-            [
-                pa.field("block_id", pa.int32()),
-                pa.field("tag", pa.string()),
-                pa.field("depth", pa.int32()),
-                pa.field("text", pa.string()),
-                pa.field("text_len", pa.int32()),
-                pa.field("link_text_len", pa.int32()),
-                pa.field("text_density", pa.float64()),
-                pa.field("link_density", pa.float64()),
-                pa.field("score", pa.float64()),
-                pa.field("keep", pa.bool_()),
-            ]
-        )
-    )
+    block_type = to_arrow_type(ArrayType(BLOCK_STRUCT))
     out_schema = EXTRACTED_DEBUG_SCHEMA if debug_blocks else EXTRACTED_SCHEMA
 
     def _extract_map(batches):
@@ -316,6 +302,7 @@ class ExtractJob:
       extracted/  parquet, partitionBy(bucket) — final per-url text
       metrics/    parquet — per (bucket, lang): blocks kept/dropped, counts
       lineage/    parquet — one row per committed bucket (FIXTURES.md §3)
+      _buckets    the ``num_buckets`` the first run recorded
 
     Buckets are committed in groups of ``commit_group_size``; a kill
     between group commits loses at most the in-flight group, and a rerun
@@ -363,6 +350,22 @@ class ExtractJob:
             )
         return {int(r.partition_id.split("=", 1)[1]) for r in rows if r.status == "ok"}
 
+    def _pin_num_buckets(self) -> None:
+        """Pin ``num_buckets`` to ``out_dir``: a bucket id names other urls
+        under another count, so a resume with one would read the lineage
+        of the first count's buckets as done. The first run records its
+        count in ``{out_dir}/_buckets`` (an ``out_dir`` without one takes
+        this job's); a later run with another count raises."""
+        marker = f"{self.out_dir}/_buckets"
+        recorded = read_text(self.spark, marker)
+        if recorded is None:
+            write_text(self.spark, marker, str(self.num_buckets))
+        elif int(recorded) != self.num_buckets:
+            raise ValueError(
+                f"{self.out_dir} holds output of num_buckets={int(recorded)}, "
+                f"but this job has num_buckets={self.num_buckets}"
+            )
+
     def stats_scan(self, buckets: list[int]) -> DataFrame:
         """Pruned re-read of committed extracted/ partitions: partition-
         pruned to ``buckets``, column-pruned to STATS_COLUMNS — the
@@ -377,7 +380,8 @@ class ExtractJob:
     def run(self, pages: DataFrame, max_groups: int | None = None) -> list[int]:
         """Extract all not-yet-committed buckets. Returns buckets committed
         this run. ``max_groups`` caps commit groups (used by the resume test
-        to simulate a mid-run kill).
+        to simulate a mid-run kill). Raises ValueError when ``out_dir``
+        holds output of another ``num_buckets``.
 
         A filter on the computed ``bucket`` keeps the scan's partition
         count, so each group's extraction stage would run one Python task
@@ -385,6 +389,7 @@ class ExtractJob:
         is coalesced (no shuffle) to its share of the input's ``n_in``
         partitions instead; ``n_in`` is read once, without a Spark job,
         and an input whose count needs one keeps the scan's width."""
+        self._pin_num_buckets()
         n_in = None if self.salt_partitions else input_partitions(pages)
         pages = with_bucket(pages, self.num_buckets)
         done = self.committed_buckets()

@@ -120,6 +120,35 @@ def error_class(e: Exception) -> str | None:
     return None
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works for
+    local paths and any DFS a real cluster mounts."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    """The UTF-8 text of the file at ``path``; None if it is absent."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create or replace the file at ``path``, holding ``text``."""
+    fs, p = hadoop_fs(spark, path)
+    stream = fs.create(p, True)
+    try:
+        stream.write(bytearray(text.encode()))
+    finally:
+        stream.close()
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "manga-ocr-spark",

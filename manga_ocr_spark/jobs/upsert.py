@@ -2,19 +2,20 @@
 layout, plus the latest-wins view.
 
 The reference reprocesses a re-saved input when its mtime changes
-(/root/reference/manga_ocr/run.py:107,204-206) — i.e. new content under an
+(the reference's ``manga_ocr/run.py:107,204-206``) — i.e. new content under an
 existing key replaces the old output. Iceberg would express this as
 ``MERGE INTO ... WHEN MATCHED THEN UPDATE`` with the runtime jar; this
 container has none, so the same semantics are emulated:
 
 - :func:`merge_upsert` — the write-side MERGE, and the only way rows
   enter the table: the first batch into a missing table is a merge with
-  nothing to replace. The batch is reduced to one row per url and staged
-  once; only the live bucket partitions holding its urls are read
-  (anti-join out the matched rows, union the batch), staged, and each
-  staged bucket dir is renamed into the live table. Cost scales with
-  |touched buckets|, never table size — at 2048 buckets over 100 TB, an
-  update batch touching k buckets rewrites ~k/2048 of the table. Rename
+  nothing to replace. The batch is reduced to one row per url and written
+  once, into the one staging dir; the unchanged rows of the live buckets
+  it touches are appended beside it, and :func:`recover_staging` — the
+  only commit code — renames each staged bucket dir into the live table.
+  Cost scales with |touched buckets|, never table size, while the bucket
+  count is well above a batch's url count: at 2048 buckets over 100 TB,
+  an update batch touching k buckets rewrites ~k/2048 of the table. Rename
   is atomic per directory on local FS and HDFS, not on object stores,
   where a real deployment uses an Iceberg/Delta ``MERGE INTO``.
 - :func:`latest_wins` — one row per key, the max-``order_col`` version
@@ -30,26 +31,20 @@ import json
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from manga_ocr_spark.jobs.extract import with_bucket
+from manga_ocr_spark.jobs.session import hadoop_fs, read_text, write_text
 
 
 MANIFEST = "_manifest.json"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works for
-    local paths and any DFS a real cluster mounts."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
 def _exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     return fs.exists(p)
 
 
 def _delete(spark: SparkSession, path: str) -> None:
     """Recursively delete ``path`` if it exists; raise if the FS refuses."""
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     if fs.exists(p) and not fs.delete(p, True):
         raise RuntimeError(f"merge_upsert: could not delete {path}")
 
@@ -58,7 +53,7 @@ def _rename(spark: SparkSession, src: str, dst: str) -> None:
     """Rename ``src`` to the absent ``dst``; raise if the FS refuses.
     ``dst`` must not exist: a Hadoop rename onto an existing directory
     returns True and nests ``src`` inside it (``dst/bucket=1/bucket=1``)."""
-    fs, s = _hadoop_fs(spark, src)
+    fs, s = hadoop_fs(spark, src)
     d = spark._jvm.org.apache.hadoop.fs.Path(dst)
     if fs.exists(d) or not fs.rename(s, d):
         raise RuntimeError(f"merge_upsert: could not rename {src} to {dst}")
@@ -68,7 +63,7 @@ def _listing(spark: SparkSession, path: str) -> dict[str, int | None]:
     """{name: length, None for a directory} of the entries directly under
     ``path``, skipping ``_``/``.`` names (markers, checksums, manifest);
     empty if ``path`` is absent."""
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return {}
     named = [(st.getPath().getName(), st) for st in fs.listStatus(p)]
@@ -81,26 +76,26 @@ def _staged_manifest(spark: SparkSession, staging: str) -> dict[str, dict[str, i
 
 
 def _read_manifest(spark: SparkSession, staging: str) -> dict | None:
-    fs, p = _hadoop_fs(spark, f"{staging}/{MANIFEST}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return json.loads(spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
+    text = read_text(spark, f"{staging}/{MANIFEST}")
+    return None if text is None else json.loads(text)
 
 
 def _write_manifest(spark: SparkSession, staging: str, manifest: dict) -> None:
     """Write the manifest atomically: a tmp file, then a rename."""
     tmp = f"{staging}/{MANIFEST}.tmp"
-    fs, p = _hadoop_fs(spark, tmp)
-    stream = fs.create(p, True)
-    try:
-        stream.write(bytearray(json.dumps(manifest, sort_keys=True).encode()))
-    finally:
-        stream.close()
+    write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
     _rename(spark, tmp, f"{staging}/{MANIFEST}")
+
+
+def _stage(df: DataFrame, mode: str, staging: str) -> None:
+    """Write ``df`` into staging by bucket, leaving no ``_SUCCESS``:
+    merge_upsert marks staging complete itself, after its last write."""
+    (
+        df.write.mode(mode)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy("bucket")
+        .parquet(staging)
+    )
 
 
 def latest_wins(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
@@ -128,13 +123,15 @@ def merge_upsert(
 
     ``updates`` is evaluated once: reduced to one row per url (the latest
     ``warc_ts``; a batch can hold a page's save and its re-save; ties, or a
-    batch without ``warc_ts``, fall to a content hash) and written to a
-    sibling ``__staging_updates`` dir, partitioned by bucket. Its listing
-    names the affected buckets; only those that exist live are read, and
-    the merged rows are written, once, to a sibling staging dir (Spark
-    cannot overwrite a path it is lazily reading from); the rest of the
-    table is untouched. A corrupt live bucket fails that write, before any
-    commit step.
+    batch without ``warc_ts``, fall to a content hash) and written, by
+    bucket, into the sibling dir ``{table_dir}__staging_merge``, whose
+    listing names the touched buckets. The unchanged rows of those that
+    exist live are appended beside it (Spark cannot overwrite a path it is
+    lazily reading from); the rest of the table is untouched. A corrupt
+    live bucket fails the append, before any commit step. Cost scales
+    with the touched buckets only while ``num_buckets`` is well above a
+    batch's url count: n urls miss a bucket with probability
+    ``(1 - 1/num_buckets) ** n``, ~5e-7 for 108 urls over 8 buckets.
 
     Commit protocol — staging is the write-ahead copy, dropped only after
     the live table verifiably holds its files:
@@ -142,15 +139,17 @@ def merge_upsert(
     1. Recover (:func:`recover_staging`): roll a complete leftover staging
        dir (``_SUCCESS`` present) forward; drop an incomplete one as
        debris — the table was never touched.
-    2. Stage the merged buckets.
-    3. Commit: atomically write ``{staging}/_manifest.json`` (tmp file,
-       then rename) mapping each staged bucket to its data-file names and
-       lengths; then, for each manifest bucket still under staging, delete
-       the live ``bucket=b`` dir and rename the staged one into place (a
-       Hadoop rename onto an existing dir would nest the source inside
-       it), and mark the table ``_SUCCESS`` as a Spark write would. Staging
-       with ``_SUCCESS`` but no manifest has had no rename, so its listing
-       is its manifest.
+    2. Stage the batch, then the unchanged live rows; neither write leaves
+       ``_SUCCESS``, which merge_upsert writes after both. A crash before
+       it leaves staging for step 1 to drop; the replay applies again.
+    3. Commit, through :func:`recover_staging`: atomically write
+       ``{staging}/_manifest.json`` (tmp file, then rename) mapping each
+       staged bucket to its data-file names and lengths; then, for each
+       manifest bucket still under staging, delete the live ``bucket=b``
+       dir and rename the staged one into place (a Hadoop rename onto an
+       existing dir would nest the source inside it), and mark the table
+       ``_SUCCESS`` as a Spark write would. Staging with ``_SUCCESS`` but
+       no manifest has had no rename, so its listing is its manifest.
     4. Verify: the live listing of those buckets must equal the manifest,
        else raise and keep staging.
     5. Drop staging.
@@ -164,30 +163,26 @@ def merge_upsert(
     which this does not support (nor does the reference's single daemon).
     """
     staging = f"{table_dir}__staging_merge"
-    staged_updates = f"{table_dir}__staging_updates"
-    recover_staging(spark, table_dir, staging)
+    recover_staging(spark, table_dir)
 
     # without a crawl time the url itself orders the rows: the hash decides
     order = "warc_ts" if "warc_ts" in updates.columns else "url"
     updates = with_bucket(latest_wins(updates, ["url"], order), num_buckets)
-    updates.write.mode("overwrite").partitionBy("bucket").parquet(staged_updates)
-    touched = _listing(spark, staged_updates)
+    _stage(updates, "overwrite", staging)
+    touched = _listing(spark, staging)
     if not touched:
-        _delete(spark, staged_updates)
+        _delete(spark, staging)
         return []
-    batch = spark.read.schema(updates.schema).parquet(staged_updates)
     live = _listing(spark, table_dir)
     live_touched = [f"{table_dir}/{b}" for b in touched if b in live]
-    merged = batch
     if live_touched:
-        existing = (
-            spark.read.schema(updates.schema).option("basePath", table_dir).parquet(*live_touched)
-        )
-        merged = existing.join(batch.select("url"), "url", "left_anti").unionByName(batch)
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    _delete(spark, staged_updates)
-    _commit_staging(spark, staging, table_dir)
-    _verify_and_drop_staging(spark, staging, table_dir)
+        read = spark.read.schema(updates.schema)
+        # the staged files are listed here, before the append writes any
+        batch = read.parquet(staging)
+        existing = read.option("basePath", table_dir).parquet(*live_touched)
+        _stage(existing.join(batch.select("url"), "url", "left_anti"), "append", staging)
+    write_text(spark, f"{staging}/_SUCCESS", "")
+    recover_staging(spark, table_dir)
     return sorted(int(b.split("=", 1)[1]) for b in touched)
 
 
@@ -201,23 +196,22 @@ def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
         # no rename has happened yet: every staged bucket is still there
         manifest = _staged_manifest(spark, staging)
         _write_manifest(spark, staging, manifest)
-    fs, p = _hadoop_fs(spark, table_dir)
+    fs, p = hadoop_fs(spark, table_dir)
     fs.mkdirs(p)
     staged = _listing(spark, staging)
     for b in sorted(manifest):
         if b in staged:
             _delete(spark, f"{table_dir}/{b}")
             _rename(spark, f"{staging}/{b}", f"{table_dir}/{b}")
-    fs.create(spark._jvm.org.apache.hadoop.fs.Path(f"{table_dir}/_SUCCESS"), True).close()
+    write_text(spark, f"{table_dir}/_SUCCESS", "")
 
 
 def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
     """Delete staging ONLY once the live listing of every manifest bucket
     equals the manifest (data-file names and lengths; the staged listing
     when no commit has started); on mismatch raise and keep staging for
-    the next recovery. Shared by the merge commit and
-    :func:`recover_staging` (an unverified recovery that deleted staging
-    would turn a loud commit failure into silent row loss)."""
+    the next recovery (an unverified drop would turn a loud commit
+    failure into silent row loss)."""
     manifest = _read_manifest(spark, staging) or _staged_manifest(spark, staging)
     bad = sorted(b for b in manifest if _listing(spark, f"{table_dir}/{b}") != manifest[b])
     if bad:
@@ -228,18 +222,20 @@ def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) 
     _delete(spark, staging)
 
 
-def recover_staging(spark: SparkSession, table_dir: str, staging: str | None = None) -> bool:
-    """Finish an interrupted :func:`merge_upsert` commit, if any.
+def recover_staging(spark: SparkSession, table_dir: str) -> bool:
+    """Commit a complete :func:`merge_upsert` staging dir, if any: the only
+    code that commits, verifies and drops staging.
 
-    Returns True when a complete staging dir (``_SUCCESS``: the merge died
-    before or during its commit) was found and rolled forward. Safe to call
-    any time; merge_upsert calls it on every entry, before it lists the
-    live table (a mid-commit crash can leave the table missing buckets, or
-    missing altogether, while staging holds the only good copy). A crash
-    DURING recovery just leaves staging in place for the next attempt; the
-    staging delete is gated on the same verification as a live commit.
+    Returns True when a complete staging dir (``_SUCCESS``) was found and
+    rolled forward: merge_upsert's own commit, or one that died before or
+    during its commit. Safe to call any time; merge_upsert calls it on
+    every entry, before it lists the live table (a mid-commit crash can
+    leave the table missing buckets, or missing altogether, while staging
+    holds the only good copy), and again once it has staged a batch. An
+    incomplete staging dir is dropped: the table was never touched. A crash
+    DURING recovery just leaves staging in place for the next attempt.
     """
-    staging = staging or f"{table_dir}__staging_merge"
+    staging = f"{table_dir}__staging_merge"
     if not _exists(spark, staging):
         return False
     if not _exists(spark, f"{staging}/_SUCCESS"):

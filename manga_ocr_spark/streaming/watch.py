@@ -43,12 +43,16 @@ def run_upsert_stream(
     per url (latest warc_ts wins — a micro-batch can hold a page's
     original save AND its re-save), only the bucket partitions holding the
     batch's urls rewritten; the first batch finds no table and creates it.
+    That rewrite is a small share of the table only while ``num_buckets``
+    is well above a micro-batch's url count: at the default 8, a file of
+    ~100 urls touches every bucket, so each merge rewrites the whole table.
 
-    Exactly-once across restarts: merge_upsert stages the merged buckets,
-    writes a commit manifest, then renames each staged bucket directory
-    into the table; its next call rolls an interrupted commit forward from
-    the manifest — a replayed micro-batch re-enters recovery, so every
-    crash window converges (see merge_upsert's protocol docstring). Rename
+    Exactly-once across restarts: merge_upsert stages the merged buckets
+    in one staging dir, marks it complete, and commits it through
+    recover_staging, which writes a commit manifest, then renames each
+    staged bucket directory into the table; the next call rolls an
+    interrupted commit forward from the manifest — a replayed micro-batch
+    re-enters recovery, so every crash window converges (see merge_upsert's protocol docstring). Rename
     is atomic per directory on local FS and HDFS, not on object stores,
     where a real deployment uses an Iceberg/Delta ``MERGE INTO``.
 

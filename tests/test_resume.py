@@ -51,6 +51,20 @@ def test_killed_run_resumes_without_duplicates(spark, pages_df, tmp_path):
     assert spark.read.parquet(f"{out}/extracted").count() == pages_df.count()
 
 
+def test_resume_with_another_bucket_count_raises(spark, pages_df, tmp_path):
+    # a bucket id names other urls under another count: resuming an
+    # 8-bucket out_dir with 4 buckets would read the lineage of buckets
+    # 0-3 as done and leave the urls of the uncommitted buckets out
+    out = str(tmp_path / "out")
+    first = ExtractJob(spark, out, num_buckets=8, commit_group_size=4).run(pages_df, max_groups=1)
+    assert sorted(first) == [0, 1, 2, 3]
+    with pytest.raises(ValueError, match="num_buckets=8.*num_buckets=4"):
+        ExtractJob(spark, out, num_buckets=4).run(pages_df)
+    # the recorded count still resumes the rest
+    assert sorted(ExtractJob(spark, out, num_buckets=8).run(pages_df)) == [4, 5, 6, 7]
+    assert spark.read.parquet(f"{out}/extracted").count() == pages_df.count()
+
+
 def test_metrics_written_per_bucket_lang(spark, pages_df, tmp_path):
     out = str(tmp_path / "out")
     ExtractJob(spark, out, num_buckets=4, commit_group_size=4).run(pages_df)

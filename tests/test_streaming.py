@@ -248,7 +248,7 @@ def test_upsert_stream_recovers_before_bootstrap_probe(spark, tmp_path):
 
     # simulate the crash window: the completed merge staging survives
     # (full copy of every bucket) while the table itself was wiped by the
-    # interrupted dynamic-partition commit
+    # interrupted rename commit
     staging = f"{table}__staging_merge"
     shutil.copytree(table, staging)
     assert any(p.name == "_SUCCESS" for p in (tmp_path / "out" / "extracted").iterdir())

@@ -182,8 +182,8 @@ def test_merge_extracts_each_batch_once(spark, tmp_path):
 
 
 def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
-    # crash DURING the dynamic-partition commit: one affected bucket is
-    # already deleted, the process dies, and the streaming batch replays.
+    # crash DURING the rename commit: one affected bucket is already
+    # deleted, the process dies, and the streaming batch replays.
     # The replayed merge must first restore from the (complete) staging
     # dir, then re-apply — no rows lost, staging cleaned up.
     import pytest
@@ -198,8 +198,8 @@ def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
     real_commit = U._commit_staging
 
     def crash_mid_commit(spark_, staging, table_dir):
-        # simulate the overwrite's delete phase landing for one AFFECTED
-        # bucket before the process dies: remove that bucket entirely
+        # simulate the commit deleting one AFFECTED live bucket before
+        # the process dies, the staged one not yet renamed into place
         import shutil
 
         affected = sorted(os.path.basename(p) for p in glob.glob(f"{staging}/bucket=*"))

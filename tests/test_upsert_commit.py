@@ -15,7 +15,7 @@ from pyspark.sql import Row
 from manga_ocr_spark.jobs import upsert as U
 from manga_ocr_spark.jobs.upsert import merge_upsert, recover_staging
 from tests.test_resume import _job_tasks
-from tests.test_upsert import _write_table
+from tests.test_upsert import _live_files, _write_table
 
 
 class Crash(Exception):
@@ -108,6 +108,40 @@ def test_merge_crash_at_commit_boundary_matches_dict_model(
             assert _table(spark, path) == model, f"recovery diverged at {boundary}"
         merge_upsert(spark, path, updates, num_buckets=4)
         assert _table(spark, path) == model, f"diverged at step {step} ({boundary})"
+
+
+def test_crash_between_the_batch_and_the_unchanged_rows_is_discarded(
+    spark, tmp_path, monkeypatch
+):
+    # the batch is staged, the unchanged live rows are not: staging has no
+    # _SUCCESS, so recovery drops it and leaves the table as it was, and
+    # the replayed batch then applies in full
+    path = str(tmp_path / "tbl")
+    staging = f"{path}__staging_merge"
+    model = {f"u{i}": f"old{i}" for i in range(40)}
+    _write_table(spark, path, [Row(url=k, text=v) for k, v in model.items()])
+    before = _live_files(path)
+    batch = {"u3": "NEW3", "u17": "NEW17", "u99": "ins99"}
+    updates = spark.createDataFrame([Row(url=k, text=v) for k, v in batch.items()])
+    real_stage = U._stage
+
+    def stage(df, mode, staging_):
+        if mode == "append":
+            raise Crash("before the unchanged rows")
+        real_stage(df, mode, staging_)
+
+    monkeypatch.setattr(U, "_stage", stage)
+    with pytest.raises(Crash):
+        merge_upsert(spark, path, updates, num_buckets=4)
+    monkeypatch.undo()
+    assert glob.glob(f"{staging}/bucket=*")  # the batch is staged
+    assert not os.path.exists(f"{staging}/_SUCCESS")
+    assert recover_staging(spark, path) is False
+    assert not os.path.exists(staging)
+    assert _live_files(path) == before
+    merge_upsert(spark, path, updates, num_buckets=4)
+    model.update(batch)
+    assert _table(spark, path) == model
 
 
 def _data_files(d: str) -> dict[str, int]:
