@@ -51,7 +51,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: html-ify sf0.001 documents, run the full extraction engine."""
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     pages = pages_from_documents(docs)
-    return extract_pages(pages, salt_partitions=8).drop("ok")
+    return extract_pages(pages, salt_partitions=8)
 
 
 # --------------------------------------------------------------------------

@@ -120,7 +120,7 @@ class Block:
     tag: str  # innermost open block tag when the text started
     depth: int  # block-nesting depth
     text: str  # raw text (whitespace preserved; normalized later)
-    text_len: int  # whitespace-free character count
+    text_len: int  # whitespace-free character count; 0 until score.py sets it
     link_text_len: int  # whitespace-free chars inside <a> subtrees
     in_boilerplate: bool  # under nav/header/footer/aside
     # filled by score.py:
@@ -191,7 +191,7 @@ class _BlockParser(HTMLParser):
                     tag=tag,
                     depth=len(self._block_stack),
                     text=text,
-                    text_len=_ws_free_len(text),
+                    text_len=0,
                     link_text_len=_ws_free_len("".join(self._seg.link_parts))
                     if self._seg.link_parts
                     else 0,
@@ -336,7 +336,7 @@ def _scan(html_text: str, p: _BlockParser) -> None:
                     tag=block_stack[-1] if block_stack else "body",
                     depth=len(block_stack),
                     text=text,
-                    text_len=_ws_free_len(text),
+                    text_len=0,
                     link_text_len=_ws_free_len("".join(link_parts)) if link_parts else 0,
                     in_boilerplate=boiler_depth > 0,
                 )

@@ -21,7 +21,9 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
   restarted job recomputes only buckets without a committed lineage row.
   On a real deployment B=2048 and the table is Iceberg-partitioned by
   ``(days(warc_ts), bucket(url))``; here the extracted output is parquet
-  ``partitionBy(bucket)`` with identical layout semantics.
+  ``partitionBy(bucket)`` with identical url-bucket semantics.
+- Both writers of ``extracted/`` (``ExtractJob``, upsert.merge_upsert) share
+  ``EXTRACTED_SCHEMA``, ``partitionBy(bucket)`` by ``with_bucket`` and ``pin_num_buckets``.
 - The Arrow UDF uses the iterator form: per-task init happens once before
   the batch loop (the reference's load-model-once pattern, ocr.py:59-79 /
   SURVEY.md §4 X1), then every Arrow batch reuses it.
@@ -62,7 +64,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import arrow_frame, error_class, read_text, write_text
+from manga_ocr_spark.jobs.session import arrow_frame, error_class, hadoop_fs, read_text, write_text
 
 PAGES_SCHEMA = StructType(
     [
@@ -83,18 +85,14 @@ EXTRACTED_SCHEMA = StructType(
         StructField("n_blocks_dropped", IntegerType()),
         StructField("lang", StringType()),
         StructField("bytes_in", LongType()),
-        # ok = 1 when extraction produced text. Deliberately KEPT in the
-        # written table: metrics/lineage recompute from the committed
-        # parquet without ever re-reading the (huge) extracted_text column.
-        StructField("ok", IntegerType()),
     ]
 )
 
 # the layout the stats scan reads back: a schema-less read runs a footer job
 STATS_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [StructField("bucket", IntegerType())])
 
-# columns the post-commit stats scan reads — everything EXCEPT the text
-STATS_COLUMNS = ["bucket", "lang", "n_blocks_kept", "n_blocks_dropped", "bytes_in", "ok"]
+# the stats scan's columns: all but the text (a row has text iff n_blocks_kept > 0)
+STATS_COLUMNS = ["bucket", "lang", "n_blocks_kept", "n_blocks_dropped", "bytes_in"]
 
 # K6 debug side output (SURVEY.md §1.4 block schema; the reference dumps
 # per-sample params+HTML the same way, run_generate.py:64-80): one struct
@@ -207,7 +205,6 @@ def _make_extract_map(debug_blocks: bool = False):
             kept: list[int] = []
             dropped: list[int] = []
             nbytes: list[int] = []
-            ok: list[int] = []
             blocks_col: list[list[dict]] = []
             # to_pylist: one vectorized buffer->bytes conversion for the
             # whole batch (measured ~35% cheaper than per-value as_py)
@@ -217,7 +214,6 @@ def _make_extract_map(debug_blocks: bool = False):
                 texts.append(res.text)
                 kept.append(res.n_blocks_kept)
                 dropped.append(res.n_blocks_dropped)
-                ok.append(1 if res.text is not None else 0)
                 if debug_blocks:
                     blocks_col.append(_blocks_to_py(res.blocks))
             arrays = [
@@ -228,7 +224,6 @@ def _make_extract_map(debug_blocks: bool = False):
                 pa.array(dropped, pa.int32()),
                 batch.column("lang"),
                 pa.array(nbytes, pa.int64()),
-                pa.array(ok, pa.int32()),
             ]
             if debug_blocks:
                 arrays.append(pa.array(blocks_col, block_type))
@@ -244,6 +239,26 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(num_buckets)).cast("int")
     )
+
+
+def pin_num_buckets(spark: SparkSession, table_dir: str, num_buckets: int) -> None:
+    """Pin ``num_buckets`` to the table at ``table_dir``, for both its
+    writers: under another count a bucket id names other urls, so a resume
+    would read lineage as done and a merge would put a url in two buckets.
+    The table's creator records its count in ``{table_dir}/_buckets``;
+    another count raises ValueError before any write. A table that exists
+    without the marker has an unknown count and stays unpinned."""
+    marker = f"{table_dir}/_buckets"
+    recorded = read_text(spark, marker)
+    if recorded is None:
+        fs, p = hadoop_fs(spark, table_dir)
+        if not fs.exists(p):
+            write_text(spark, marker, str(num_buckets))
+    elif int(recorded) != num_buckets:
+        raise ValueError(
+            f"{table_dir} holds output of num_buckets={int(recorded)}, "
+            f"but this write has num_buckets={num_buckets}"
+        )
 
 
 def input_partitions(df: DataFrame) -> int | None:
@@ -300,9 +315,9 @@ class ExtractJob:
 
     Layout under ``out_dir``:
       extracted/  parquet, partitionBy(bucket) — final per-url text
+      extracted/_buckets  its bucket count (``pin_num_buckets``)
       metrics/    parquet — per (bucket, lang): blocks kept/dropped, counts
       lineage/    parquet — one row per committed bucket (FIXTURES.md §3)
-      _buckets    the ``num_buckets`` the first run recorded
 
     Buckets are committed in groups of ``commit_group_size``; a kill
     between group commits loses at most the in-flight group, and a rerun
@@ -318,10 +333,6 @@ class ExtractJob:
     # whole-input salt width: each commit group hash-partitions on url to
     # its share of it, ceil(P * |group| / num_buckets), never to P itself
     salt_partitions: int | None = None
-    # Iceberg-style layout (days(warc_ts), bucket(url)) from the north
-    # rule: time pruning for incremental readers + stable url buckets for
-    # resume. Off by default at sandbox scale (file-count explosion).
-    partition_by_day: bool = False
 
     def committed_buckets(self) -> set[int]:
         """Buckets with an ok lineage row. ONLY a missing lineage dir maps
@@ -350,22 +361,6 @@ class ExtractJob:
             )
         return {int(r.partition_id.split("=", 1)[1]) for r in rows if r.status == "ok"}
 
-    def _pin_num_buckets(self) -> None:
-        """Pin ``num_buckets`` to ``out_dir``: a bucket id names other urls
-        under another count, so a resume with one would read the lineage
-        of the first count's buckets as done. The first run records its
-        count in ``{out_dir}/_buckets`` (an ``out_dir`` without one takes
-        this job's); a later run with another count raises."""
-        marker = f"{self.out_dir}/_buckets"
-        recorded = read_text(self.spark, marker)
-        if recorded is None:
-            write_text(self.spark, marker, str(self.num_buckets))
-        elif int(recorded) != self.num_buckets:
-            raise ValueError(
-                f"{self.out_dir} holds output of num_buckets={int(recorded)}, "
-                f"but this job has num_buckets={self.num_buckets}"
-            )
-
     def stats_scan(self, buckets: list[int]) -> DataFrame:
         """Pruned re-read of committed extracted/ partitions: partition-
         pruned to ``buckets``, column-pruned to STATS_COLUMNS — the
@@ -389,7 +384,7 @@ class ExtractJob:
         is coalesced (no shuffle) to its share of the input's ``n_in``
         partitions instead; ``n_in`` is read once, without a Spark job,
         and an input whose count needs one keeps the scan's width."""
-        self._pin_num_buckets()
+        pin_num_buckets(self.spark, f"{self.out_dir}/extracted", self.num_buckets)
         n_in = None if self.salt_partitions else input_partitions(pages)
         pages = with_bucket(pages, self.num_buckets)
         done = self.committed_buckets()
@@ -420,12 +415,6 @@ class ExtractJob:
             # group — the resulting GC pressure serializes the JVM at high
             # core counts (CLAUDE.md). One extra pruned scan of THIS
             # group's partitions beats caching text.
-            if self.partition_by_day:
-                out = ext.withColumn("dt", F.to_date("warc_ts"))
-                part_cols = ["dt", "bucket"]
-            else:
-                out = ext
-                part_cols = ["bucket"]
             # dynamic partition overwrite: each bucket belongs to exactly
             # one group, so re-running an uncommitted group REPLACES its
             # partial partitions instead of appending duplicates — the
@@ -433,9 +422,9 @@ class ExtractJob:
             # Per-write option, NOT a session conf: mutating the session
             # would silently change later overwrite writes' semantics.
             (
-                out.write.mode("overwrite")
+                ext.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*part_cols)
+                .partitionBy("bucket")
                 .parquet(f"{self.out_dir}/extracted")
             )
             # ONE pruned scan of the just-committed partitions feeds both
@@ -447,7 +436,7 @@ class ExtractJob:
                     F.sum("n_blocks_kept").alias("blocks_kept"),
                     F.sum("n_blocks_dropped").alias("blocks_dropped"),
                     F.count("*").alias("count"),
-                    F.sum("ok").alias("output_rows"),
+                    F.count_if(F.col("n_blocks_kept") > 0).alias("output_rows"),
                     F.sum("bytes_in").alias("bytes_in"),
                 )
                 .collect()

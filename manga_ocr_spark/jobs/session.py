@@ -21,10 +21,17 @@ sandbox scale:
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+def default_cpus(env: Mapping[str, str]) -> int:
+    """Cores a standalone ``local[N]`` session models: $SPARK_GRAFT_CPUS
+    when set (bench.py's --scaling legs and perfbench set it), else the
+    CPUs this process may run on."""
+    return int(env.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _resolve_master(master: str | None, env: dict, cpus: int) -> str | None:
@@ -164,7 +171,7 @@ def get_spark(
     existing = os.environ.get("PYTHONPATH", "")
     if pkg_root not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus(os.environ)
     master = _resolve_master(master, os.environ, cpus)
     launcher_owned = master is None  # spark-submit decided the master
     # N of the modeled N-core executor: only meaningful for a standalone

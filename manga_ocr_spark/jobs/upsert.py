@@ -30,7 +30,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from manga_ocr_spark.jobs.extract import with_bucket
+from manga_ocr_spark.jobs.extract import pin_num_buckets, with_bucket
 from manga_ocr_spark.jobs.session import hadoop_fs, read_text, write_text
 
 
@@ -119,7 +119,8 @@ def merge_upsert(
     ``partitionBy("bucket")`` under jobs/extract.py::with_bucket's rule on
     url: matched urls are replaced, new urls inserted. The rows of
     ``updates`` give the table its columns. A missing table reads as an
-    empty one, so the first batch creates it. Returns the rewritten buckets.
+    empty one, so the first batch creates it and pins ``num_buckets`` to it
+    (``pin_num_buckets``; another count raises). Returns the rewritten buckets.
 
     ``updates`` is evaluated once: reduced to one row per url (the latest
     ``warc_ts``; a batch can hold a page's save and its re-save; ties, or a
@@ -138,7 +139,7 @@ def merge_upsert(
 
     1. Recover (:func:`recover_staging`): roll a complete leftover staging
        dir (``_SUCCESS`` present) forward; drop an incomplete one as
-       debris — the table was never touched.
+       debris — the table was never touched. Then check the bucket count.
     2. Stage the batch, then the unchanged live rows; neither write leaves
        ``_SUCCESS``, which merge_upsert writes after both. A crash before
        it leaves staging for step 1 to drop; the replay applies again.
@@ -164,6 +165,7 @@ def merge_upsert(
     """
     staging = f"{table_dir}__staging_merge"
     recover_staging(spark, table_dir)
+    pin_num_buckets(spark, table_dir, num_buckets)
 
     # without a crawl time the url itself orders the rows: the hash decides
     order = "warc_ts" if "warc_ts" in updates.columns else "url"

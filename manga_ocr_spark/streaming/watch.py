@@ -46,6 +46,8 @@ def run_upsert_stream(
     That rewrite is a small share of the table only while ``num_buckets``
     is well above a micro-batch's url count: at the default 8, a file of
     ~100 urls touches every bucket, so each merge rewrites the whole table.
+    The table is ExtractJob's ``extracted/`` (one schema, layout and pinned
+    bucket count): another ``num_buckets`` fails the batch unwritten.
 
     Exactly-once across restarts: merge_upsert stages the merged buckets
     in one staging dir, marks it complete, and commits it through
@@ -64,7 +66,7 @@ def run_upsert_stream(
     def _process(batch_df, batch_id: int) -> None:
         # foreachBatch = the reference's process_and_write_results
         # (run.py:54-90); extraction itself is the shared batch code path
-        merge_upsert(spark, table, extract_pages(batch_df).drop("ok", "bytes_in"), num_buckets)
+        merge_upsert(spark, table, extract_pages(batch_df), num_buckets)
 
     writer = pages.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

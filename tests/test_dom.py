@@ -5,6 +5,7 @@ no Spark. Mirrors the reference's component tests of generator internals
 from __future__ import annotations
 
 from manga_ocr_spark.extraction.dom import parse_blocks
+from manga_ocr_spark.extraction.score import score_blocks
 
 
 def _texts(html: str) -> list[str]:
@@ -17,9 +18,9 @@ def test_single_paragraph_one_block() -> None:
     b = blocks[0]
     assert b.text.strip() == "hello world"
     assert b.tag == "p"
-    assert b.text_len == len("helloworld")
     assert b.link_text_len == 0
     assert not b.in_boilerplate
+    assert score_blocks(blocks)[0].text_len == len("helloworld")
 
 
 def test_inline_tags_do_not_split_blocks() -> None:
@@ -94,7 +95,7 @@ def test_malformed_html_never_raises() -> None:
 def test_unclosed_document_flushes_trailing_text() -> None:
     blocks = parse_blocks("<p>" + "x" * 100)
     assert len(blocks) == 1
-    assert blocks[0].text_len == 100
+    assert score_blocks(blocks)[0].text_len == 100
 
 
 def test_depth_tracks_block_nesting() -> None:

@@ -16,6 +16,7 @@ from manga_ocr_spark.extraction.normalize import normalize_block
 def test_extract_never_raises_on_arbitrary_bytes(payload: bytes) -> None:
     res = extract(payload)
     assert res.n_blocks_kept >= 0 and res.n_blocks_dropped >= 0
+    assert (res.text is not None) == (res.n_blocks_kept > 0)
     if res.text is not None:
         assert isinstance(res.text, str)
 

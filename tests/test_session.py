@@ -19,7 +19,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import _default_driver_memory, _resolve_master, arrow_frame
+from manga_ocr_spark.jobs.session import (
+    _default_driver_memory,
+    _resolve_master,
+    arrow_frame,
+    default_cpus,
+)
 
 GB = 1 << 30
 
@@ -37,6 +42,13 @@ def test_under_spark_submit_master_is_left_to_the_launcher():
 
 def test_standalone_defaults_to_local_cpus():
     assert _resolve_master(None, {}, 8) == "local[8]"
+
+
+def test_default_cpus_are_the_host_cpus_unless_overridden():
+    import os
+
+    assert default_cpus({}) == len(os.sched_getaffinity(0))
+    assert default_cpus({"SPARK_GRAFT_CPUS": "2"}) == 2
 
 
 def test_default_heap_is_half_of_physical_memory_under_the_per_slot_rule():

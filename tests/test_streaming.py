@@ -8,6 +8,8 @@ seen-files log provides the same semantics durably.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from manga_ocr_spark.fixtures.pages import generate_pages
 from manga_ocr_spark.streaming.watch import run_upsert_stream
@@ -120,6 +122,66 @@ def test_streaming_upsert_replaces_resaved_page(spark, tmp_path):
     placed = out.select("url", "bucket").collect()
     expected = with_bucket(out.select("url"), 4).collect()
     assert sorted(placed) == sorted(expected)
+
+
+def _page(i: int, body: str, days: int = 0):
+    import datetime as dt
+
+    t = dt.datetime(2024, 3, 1) + dt.timedelta(days=days)
+    return (f"https://x/{i}", t, f"<html><body><p>{body}</p></body></html>".encode(), "t", "en")
+
+
+def _arrive(spark, rows, indir: str) -> None:
+    from manga_ocr_spark.jobs.extract import PAGES_SCHEMA
+
+    spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode("append").parquet(indir)
+
+
+def test_stream_into_an_extract_job_table_keeps_its_contract(spark, tmp_path):
+    # a batch backfill and a stream write one extracted/ table: the stream
+    # re-saving a url replaces its row, and every data file, whichever
+    # writer wrote it, has the EXTRACTED_SCHEMA columns
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from manga_ocr_spark.jobs.extract import EXTRACTED_SCHEMA, PAGES_SCHEMA, ExtractJob
+
+    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    pages = [_page(i, f"original body text number {i}") for i in range(10)]
+    ExtractJob(spark, outdir, num_buckets=4, commit_group_size=4).run(
+        spark.createDataFrame(pages, PAGES_SCHEMA)
+    )
+    _arrive(spark, [_page(3, "REVISED body text after edit", days=1)], indir)
+    q = run_upsert_stream(spark, indir, outdir, ckpt, num_buckets=4)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    out = spark.read.parquet(f"{outdir}/extracted")
+    assert out.count() == 10 and out.select("url").distinct().count() == 10
+    (row,) = out.filter("url = 'https://x/3'").collect()
+    assert row.extracted_text == "REVISED body text after edit"
+    files = glob.glob(f"{outdir}/extracted/bucket=*/*.parquet")
+    assert files
+    for f in files:
+        assert pq.read_schema(f).names == EXTRACTED_SCHEMA.names, f
+
+
+def test_stream_with_another_bucket_count_fails_unwritten(spark, tmp_path):
+    # the stream pins its bucket count to the table like ExtractJob does:
+    # a restart with another count fails the batch before it writes
+    from tests.test_upsert import _live_files
+
+    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    table = f"{outdir}/extracted"
+    _arrive(spark, [_page(i, f"first body text {i}") for i in range(5)], indir)
+    run_upsert_stream(spark, indir, outdir, ckpt, num_buckets=4).awaitTermination(120)
+    before = _live_files(table)
+    _arrive(spark, [_page(2, "RESAVED body text two", days=1)], indir)
+    q = run_upsert_stream(spark, indir, outdir, ckpt, num_buckets=8)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert "num_buckets=4" in str(q.exception())
+    assert _live_files(table) == before
 
 
 def test_daemon_mode_replaces_resaved_page(spark, tmp_path):

@@ -298,3 +298,20 @@ def test_verification_catches_same_count_wrong_content(spark, tmp_path):
     with pytest.raises(RuntimeError, match="verification failed"):
         U._verify_and_drop_staging(spark, staging, path)
     assert os.path.exists(staging)  # preserved for recovery
+
+
+def test_merge_with_another_bucket_count_raises_before_writing(spark, tmp_path):
+    # a bucket id names other urls under another count: re-merging a url
+    # at 8 buckets into a 4-bucket table would put it in a second bucket
+    # beside its old row. The first merge records the count; a merge with
+    # another one raises before it writes anything
+    import pytest
+
+    path = str(tmp_path / "tbl")
+    rows = [Row(url=f"u{i}", text=f"old{i}") for i in range(20)]
+    merge_upsert(spark, path, spark.createDataFrame(rows), num_buckets=4)
+    before = _live_files(path)
+    with pytest.raises(ValueError, match="num_buckets=4.*num_buckets=8"):
+        merge_upsert(spark, path, spark.createDataFrame([Row(url="u3", text="NEW3")]), num_buckets=8)
+    assert _live_files(path) == before
+    assert not os.path.exists(f"{path}__staging_merge")

@@ -10,7 +10,6 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from pathlib import Path
@@ -43,7 +42,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     import __spark_entry__ as entrymod
     from manga_ocr_spark.jobs.session import get_spark
 
