@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + scaling evidence).
+"""Headline benchmark (driver contract).
 
-Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], print ONE JSON line:
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -19,31 +19,21 @@ generation.
 :func:`build_headline_queries` entries (plus ``extract_80k_pages`` if
 named) and prints the same JSON keys; ``value`` is the total of the
 named entries, and ``extract_docs``/``extract_docs_per_sec`` are null
-unless extraction was named. An unknown name exits non-zero and lists
-the valid names.
+unless extraction was named. An unknown name, or any flag, exits 1
+before anything is timed and lists the valid names.
 
-The headline and `--scaling` modes first wait (bounded) for a quiet
-host. The gate calibrates itself: one probe times a fixed pure-Python
-spin in one process (``t1``) and fanned over ``min(8, os.cpu_count())``
-processes (``tp``). The host is quiet iff ``tp <= 1.5 x t1`` and
-loadavg1 is under half the CPU count; no host-specific threshold is
-configured.
-
-`--scaling` mode (north rule: two cluster sizes): runs the SAME extraction
-workload in fresh subprocesses at local[2] and local[8], reports
-docs/sec at both and scaling efficiency (thr_4N / thr_N) / 4, and writes
-BENCH/BASELINE.md. Fresh processes = fresh JVMs: no shared warmup, which
-is the honest analogue of two differently-sized clusters.
-
-`--extract-timing` mode (internal): one timed extraction run, JSON to
-stdout; used by --scaling subprocesses.
+The bench first waits (bounded by $BENCH_HEADLINE_MAX_WAIT seconds,
+default 540) for a quiet host. The gate calibrates itself: one probe
+times a fixed pure-Python spin in one process (``t1``) and fanned over
+``min(8, os.cpu_count())`` processes (``tp``). The host is quiet iff
+``tp <= 1.5 x t1`` and loadavg1 is under half the CPU count; no
+host-specific threshold is configured.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 from pathlib import Path
@@ -55,12 +45,12 @@ from manga_ocr_spark.jobs.session import default_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cpus(os.environ)
-FANOUT = int(os.environ.get("BENCH_EXTRACT_FANOUT", "16"))
-# paragraphs per synthetic page: 10 (~3 KB html) keeps the per-round
-# headline fast; the scaling run uses 100 (~30 KB — a realistic web page)
-# so extraction compute dominates fixed job overhead and the efficiency
-# measurement reflects the engine, not Spark's constant costs.
-PARAS = int(os.environ.get("BENCH_EXTRACT_PARAS", "10"))
+FANOUT = 16
+# paragraphs per synthetic page: 10 (~3 KB html) keeps the extraction
+# entry to a few seconds at sf0.1, so a headline run stays short
+PARAS = 10
+WARMUP_MAX = 8  # warm-up passes before the timed extraction run, at most
+QUERY_RUNS = 3  # samples per query; the headline reports their median
 
 
 def _sf_from_dir(d: str) -> float:
@@ -75,25 +65,25 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _fanned_pages(spark, sf_dir: str, fanout: int, paras: int = PARAS):
-    """documents -> fanout x pages with multi-paragraph html, all JVM-side."""
+def _fanned_pages(spark, sf_dir: str):
+    """documents -> FANOUT x pages with PARAS-paragraph html, all JVM-side."""
     from pyspark.sql import functions as F
 
     from manga_ocr_spark.jobs.pages_from_docs import pages_from_documents
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .withColumn("copy", F.explode(F.sequence(F.lit(0), F.lit(fanout - 1))))
+        .withColumn("copy", F.explode(F.sequence(F.lit(0), F.lit(FANOUT - 1))))
         .select(
-            (F.col("doc_id") * fanout + F.col("copy")).alias("doc_id"),
-            F.concat_ws(" ", F.array_repeat(F.col("text"), paras)).alias("text"),
+            (F.col("doc_id") * FANOUT + F.col("copy")).alias("doc_id"),
+            F.concat_ws(" ", F.array_repeat(F.col("text"), PARAS)).alias("text"),
             F.col("lang"),
         )
     )
     return pages_from_documents(docs)
 
 
-def _timed_extract(spark, sf_dir: str, fanout: int, salt_partitions: int) -> dict:
+def _timed_extract(spark, sf_dir: str) -> dict:
     import shutil
     import tempfile
 
@@ -101,47 +91,33 @@ def _timed_extract(spark, sf_dir: str, fanout: int, salt_partitions: int) -> dic
 
     # Stage the synthetic pages to parquet once and READ them in the timed
     # run — exactly what a real deployment does. (An earlier .persist()
-    # variant cached ~GBs of deserialized row objects; the resulting GC
-    # pressure serialized the JVM side and destroyed scaling beyond ~10
-    # cores. Parquet scan + Arrow is the design point, so measure that.)
+    # variant cached the deserialized rows; the resulting GC pressure
+    # serialized the JVM side. Parquet scan + Arrow is the design point,
+    # so measure that.)
     tmp = tempfile.mkdtemp(prefix="bench_pages_")
+    files = CPUS * 2
     try:
-        _fanned_pages(spark, sf_dir, fanout).repartition(salt_partitions).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        # 100 TB-faithful task granularity for the READ-BACK: at production
-        # scale the scan yields ~800k file splits — hundreds of task waves
-        # per slot, so waves stay balanced. A GB-scale staged corpus against
-        # the default 128 MB split packs into ~10 fat splits: one ragged
-        # wave at 8+ slots (measured 65% slot utilization — python workers
-        # idle behind stragglers), while a 2-slot leg still gets 5 balanced
-        # waves. That asymmetry is a sandbox artifact, not engine behavior;
-        # sizing the split so read-back task count ~= the staged file count
-        # restores the production tasks-per-slot ratio for every leg.
-        staged = sum(
-            f.stat().st_size for f in Path(tmp).glob("*.parquet")
-        )
+        _fanned_pages(spark, sf_dir).repartition(files).write.mode("overwrite").parquet(tmp)
+        # Read back one task per staged file, two per slot, so a slot that
+        # finishes early takes a second task instead of idling behind a
+        # straggler. Spark's own split sizing aims at the default
+        # parallelism, max(8, CPUS) tasks: one per slot above 4 CPUs.
+        staged = sum(f.stat().st_size for f in Path(tmp).glob("*.parquet"))
         spark.conf.set(
             "spark.sql.files.maxPartitionBytes",
-            str(max(4 << 20, staged // salt_partitions)),
+            str(max(4 << 20, staged // files)),
         )
         pages = spark.read.parquet(tmp)
         n_docs = pages.count()
-        # warmup TO STEADY STATE: one pass boots every python worker + the
-        # Arrow path, but the JVM keeps improving for several more passes
-        # (tiered JIT of the parquet/Arrow hot loops, ParallelGC adaptive
-        # heap sizing under Xmx16g, THP coalescing) — measured on a
-        # 32-core host, 8-core leg passes drift 37 -> 26 s across ~8
-        # passes in one JVM (quiet window). A real deployment's
-        # long-running job spends ~100% of its life at steady state, so
-        # that is the regime a leg must measure; a fixed 1-pass warmup
-        # under-warms the SHORT (high-core) leg relative to the long one
-        # and reads as fake scaling loss. Warm until two consecutive
-        # passes stop beating the best by >3% (bounded), symmetrically at
-        # every parallelism level.
+        # warm up TO STEADY STATE: one pass boots every python worker and
+        # the Arrow path, but the JVM keeps getting faster for several more
+        # passes (tiered JIT of the parquet/Arrow hot loops, heap sizing).
+        # A long-running job spends nearly all its life at steady state, so
+        # that is the regime to time. Warm until two consecutive passes stop
+        # beating the best by >3%, at most WARMUP_MAX passes.
         warm = []
         stale = 0
-        for _ in range(int(os.environ.get("BENCH_WARMUP_MAX", "8"))):
+        for _ in range(WARMUP_MAX):
             t0 = time.time()
             _force(extract_pages(pages))
             w = time.time() - t0
@@ -153,19 +129,16 @@ def _timed_extract(spark, sf_dir: str, fanout: int, salt_partitions: int) -> dic
             else:
                 stale = 0
             warm.append(w)
-        runs = []
-        for _ in range(int(os.environ.get("BENCH_EXTRACT_RUNS", "1"))):
-            t0 = time.time()
-            _force(extract_pages(pages))
-            runs.append(time.time() - t0)
+        t0 = time.time()
+        _force(extract_pages(pages))
+        run = time.time() - t0
         # best-of-N: on a shared host the minimum is the least
         # co-tenant-contaminated sample of the job's true cost (same
-        # rationale as hyperfine/timeit); medians still carry whatever
-        # neighbor load overlapped most runs. Warmup passes from the 3rd
+        # rationale as hyperfine/timeit). Warmup passes from the 3rd
         # on are full identical passes of the job in a booted JVM — they
         # can only be SLOWER than steady state, so they are valid samples
         # for a minimum (first two excluded: worker boot + bulk JIT).
-        sec = min(runs + warm[2:])
+        sec = min([run] + warm[2:])
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
         shutil.rmtree(tmp, ignore_errors=True)
@@ -173,15 +146,15 @@ def _timed_extract(spark, sf_dir: str, fanout: int, salt_partitions: int) -> dic
         "docs": n_docs,
         "sec": round(sec, 3),
         "docs_per_sec": round(n_docs / sec, 1),
-        "runs": [round(r, 2) for r in runs],
-        "warmup_runs": [round(w, 2) for w in warm],
     }
 
 
 def build_headline_queries(spark, sf_dir: str, cpus: int) -> dict:
     """The headline query builders: full-size variants of the operator
     inventory (no oracle-subsetting), name -> zero-argument builder. The
-    one table of query shapes the headline bench times."""
+    one table of query shapes the headline bench times. With ``spark``
+    None nothing is read and no builder can run: only the names are
+    meant, to check arguments against before a session starts."""
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
@@ -192,8 +165,10 @@ def build_headline_queries(spark, sf_dir: str, cpus: int) -> dict:
     # the sf parquet files are single-split small; CPU-bound UDF stages
     # (minhash/simhash) need rows spread over cores — at 100 TB the scan
     # itself provides ~800k splits, here an explicit repartition stands in
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
+    docs = emb = None
+    if spark is not None:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus)
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
 
     return {
         "q1_pricing_summary": lambda: E._q1_pricing(spark, sf_dir),
@@ -245,7 +220,6 @@ def _headline_queries(qs: dict) -> tuple[dict[str, float], dict[str, dict[str, f
     # (dedup 0.70s, media_meta 0.20s medians; first samples 5.5s/0.46s).
     # The median of 3 discards the cold-start/co-tenant outlier while
     # still charging steady-state cost.
-    runs_per_query = int(os.environ.get("BENCH_QUERY_RUNS", "3"))
     times: dict[str, float] = {}
     # full min/median/max per query in the payload: driver-recorded medians
     # and end-of-round re-runs have differed by ~25% on this shared host
@@ -255,7 +229,7 @@ def _headline_queries(qs: dict) -> tuple[dict[str, float], dict[str, dict[str, f
     spreads: dict[str, dict[str, float]] = {}
     for name, build in qs.items():
         samples = []
-        for _ in range(runs_per_query):
+        for _ in range(QUERY_RUNS):
             t0 = time.time()
             _force(build())
             samples.append(time.time() - t0)
@@ -297,6 +271,17 @@ EXTRACT_QUERY = "extract_80k_pages"
 
 def main_bench(names: list[str]) -> None:
     """Headline bench over every query, or over ``names`` only."""
+    valid = [*build_headline_queries(None, SF_DIR, CPUS), EXTRACT_QUERY]
+    unknown = sorted(set(names) - set(valid))
+    if unknown:
+        flags = ""
+        if any(name.startswith("-") for name in unknown):
+            flags = (
+                "; bench.py takes no flags (the --scaling harness is in git "
+                "history: git show 236dbed:bench.py)"
+            )
+        sys.exit(f"unknown query name(s): {unknown}; valid: {valid}{flags}")
+
     from manga_ocr_spark.jobs.session import get_spark
 
     # Don't measure in a storm: wait (bounded) for a quiet window before
@@ -309,16 +294,11 @@ def main_bench(names: list[str]) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     canary = _noise_canary(spark)
     qs = build_headline_queries(spark, SF_DIR, CPUS)
-    valid = [*qs, EXTRACT_QUERY]
-    unknown = sorted(set(names) - set(valid))
-    if unknown:
-        spark.stop()
-        sys.exit(f"unknown query name(s): {unknown}; valid: {valid}")
     if names:
         qs = {name: build for name, build in qs.items() if name in names}
     ext = None
     if not names or EXTRACT_QUERY in names:
-        ext = _timed_extract(spark, SF_DIR, FANOUT, salt_partitions=CPUS * 2)
+        ext = _timed_extract(spark, SF_DIR)
     queries, spreads = _headline_queries(qs)
     if ext is not None:
         queries[EXTRACT_QUERY] = ext["sec"]
@@ -341,23 +321,6 @@ def main_bench(names: list[str]) -> None:
             }
         )
     )
-    spark.stop()
-
-
-def main_extract_timing() -> None:
-    from manga_ocr_spark.jobs.session import get_spark
-
-    spark = get_spark(master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    # scaling legs use finer tasks (cpus*8): with cpus*2 partitions a
-    # 120k-doc leg has 6-7 s tasks and the straggler TAIL is the dominant
-    # fixed cost of the 8-core leg (~5 s of its 19 s) — at 100 TB the
-    # scan's ~800k splits give fine granularity for free, so coarse tasks
-    # here would charge the ENGINE for a sandbox artifact
-    salt = int(os.environ.get("BENCH_SALT_PARTS", str(CPUS * 2)))
-    out = _timed_extract(spark, SF_DIR, FANOUT, salt_partitions=salt)
-    out["cpus"] = CPUS
-    print(json.dumps(out))
     spark.stop()
 
 
@@ -386,10 +349,7 @@ def _load_probe(procs: int) -> dict:
     single-process (``t1``) and fanned over `procs` processes (``tp``),
     best of 3 rounds each. On a quiet host with at least `procs` cores
     the fanned wall ~= the single wall (idle cores absorb the fanout); a
-    co-tenant storm inflates ``tp``. Cheap (~5 s quiet), so every leg of
-    a scaling capture can be gated on it — r6's first ungated capture
-    landed in a storm (canary med 1.38 vs ~0.2 quiet) and read 0.716 on
-    an unchanged tree.
+    co-tenant storm inflates ``tp``. Cheap (~5 s quiet).
 
     Best of 3 because a sample can only be slowed: on an idle 4-vCPU VM
     the first fanned map over a fresh pool read tp/t1 above 1.5x in 7 of
@@ -414,27 +374,24 @@ def _load_probe(procs: int) -> dict:
     }
 
 
-def _is_quiet(probe: dict, nproc: int, load_allowance: float = 0.0) -> bool:
+def _is_quiet(probe: dict, nproc: int) -> bool:
     """The quiet verdict on one probe, calibrated by the probe itself.
 
     Quiet needs BOTH signals. The fanned spin within 1.5x the same
     probe's single spin: quiet hosts read ~1.0-1.4x (32 cores fanned
     over 8: tp 0.91-1.02 s against t1 0.68-0.79 s; an idle 4-vCPU VM
     fanned over 4: 0.95-1.39x), full-host storms 2-10x. And loadavg1
-    under half the CPU count plus ``load_allowance``: partial occupancy
-    leaves the spin fast because free cores remain, but still starves a
-    Spark leg whose JVM+worker tree wants more than its share."""
-    return probe["tp"] <= 1.5 * probe["t1"] and probe["load1"] < nproc / 2 + load_allowance
+    under half the CPU count: partial occupancy leaves the spin fast
+    because free cores remain, but still starves a Spark job whose
+    JVM+worker tree wants every core."""
+    return probe["tp"] <= 1.5 * probe["t1"] and probe["load1"] < nproc / 2
 
 
-def _wait_quiet(max_wait_sec: int, settle: int = 0) -> tuple[dict, bool]:
+def _wait_quiet(max_wait_sec: int) -> tuple[dict, bool]:
     """Probe until the host looks quiet (:func:`_is_quiet`) or max_wait
-    elapses; returns (last probe, quiet?). ``settle`` sleeps first so
-    OUR just-finished leg's loadavg contribution decays out of the 1-min
-    window. On timeout the caller proceeds anyway — the probe is RECORDED
-    so a reader can discount the sample, never silently."""
-    if settle:
-        time.sleep(settle)
+    elapses; returns (last probe, quiet?). On timeout the caller proceeds
+    anyway — the probe is RECORDED so a reader can discount the sample,
+    never silently."""
     nproc = os.cpu_count() or 1
     deadline = time.time() + max_wait_sec
     while True:
@@ -447,297 +404,5 @@ def _wait_quiet(max_wait_sec: int, settle: int = 0) -> tuple[dict, bool]:
         time.sleep(45)
 
 
-def _control_payloads(paras: int, fanout: int = 4, sf_dir: str = SF_DIR) -> list[bytes]:
-    """The engine legs' exact page HTML, built WITHOUT Spark (same
-    template literals as jobs/pages_from_docs.py, same doc_id fanout and
-    family arithmetic, same paras repetition) — input for the raw-
-    multiprocessing host-ceiling control. Byte-identity with the engine
-    path is pinned by tests/test_bench_control.py."""
-    import pyarrow.parquet as pq
-
-    from manga_ocr_spark.jobs import pages_from_docs as P
-
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    payloads: list[bytes] = []
-    for doc_id, text in zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()):
-        body = " ".join([text] * paras)
-        for copy in range(fanout):
-            fam = (doc_id * fanout + copy) % 3
-            if fam == 0:
-                html = f"<html><body>{P._NAV}<article><p>{body}</p></article>{P._FOOTER}</body></html>"
-            elif fam == 1:
-                html = (
-                    f"<html><body>{P._NAV}{P._ASIDE}<div><p>{body}</p></div>"
-                    f"{P._ASIDE}{P._FOOTER}</body></html>"
-                )
-            else:
-                html = f"<html><body>{P._NAV}<p>{body}</p>{P._AD}<p>{body}</p>{P._FOOTER}</body></html>"
-            payloads.append(html.encode("utf-8"))
-    return payloads
-
-
-_CEILING_CHUNKS = 32  # divisible by both leg sizes -> identical files/IO per leg
-
-
-def _ceiling_stage(payloads: list[bytes], tmpdir: str) -> list[str]:
-    """Stage the control corpus as _CEILING_CHUNKS pickle files so the
-    timed legs READ FROM DISK like the engine's parquet scan — shipping
-    60 KB payloads through Pool pipes costs more than extracting them
-    (measured ~12 ms/doc transfer vs 0.9 ms/doc extraction), which would
-    make the 'ceiling' measure pipe bandwidth, not the machine."""
-    import pickle
-
-    paths = []
-    for i in range(_CEILING_CHUNKS):
-        path = os.path.join(tmpdir, f"chunk_{i}.pkl")
-        with open(path, "wb") as f:
-            pickle.dump(payloads[i::_CEILING_CHUNKS], f, protocol=5)
-        paths.append(path)
-    return paths
-
-
-def _extract_chunk_file(path: str) -> int:
-    import pickle
-
-    from manga_ocr_spark.extraction.core import extract
-
-    with open(path, "rb") as f:
-        payloads = pickle.load(f)
-    n = 0
-    for p in payloads:
-        if extract(p).text:
-            n += 1
-    return n
-
-
-def _ceiling_leg(chunk_paths: list[str], n_docs: int, procs: int) -> dict:
-    """One host-ceiling control leg: the pure extraction core fanned over
-    `procs` OS processes with multiprocessing, each reading its own staged
-    chunk files — zero Spark, zero distribution cost. Its N->4N efficiency
-    bounds what ANY engine could evidence on this host (memory-bandwidth +
-    tenancy contention is a property of the machine, not the engine)."""
-    import multiprocessing as mp
-
-    with mp.Pool(procs) as pool:
-        pool.map(_extract_chunk_file, chunk_paths[:procs])  # import+JIT+page-cache warmup
-        t0 = time.time()
-        ok = sum(pool.map(_extract_chunk_file, chunk_paths))
-        sec = time.time() - t0
-    assert ok == n_docs, (ok, n_docs)
-    return {
-        "docs": n_docs,
-        "sec": round(sec, 3),
-        "docs_per_sec": round(n_docs / sec, 1),
-    }
-
-
-def main_scaling(n: int = 2, n4: int = 8) -> None:
-    """N vs 4N cores, default 2 vs 8 (override with BENCH_SCALE_N /
-    BENCH_SCALE_N4). The report records ``os.cpu_count()`` beside the leg
-    sizes: a 4N leg above the host's CPUs measures oversubscription.
-
-    Every leg (engine AND control) is gated on _wait_quiet, and a same-
-    day host-ceiling control (raw multiprocessing of the extraction core
-    at both leg sizes) is captured in the same window, so the report
-    carries both the absolute efficiency and the engine-relative one."""
-    n = int(os.environ.get("BENCH_SCALE_N", n))
-    n4 = int(os.environ.get("BENCH_SCALE_N4", n4))
-    repeats = int(os.environ.get("BENCH_SCALE_REPEATS", "2"))
-    results = {}
-    samples: dict[int, list] = {n: [], n4: []}
-    paras = os.environ.get("BENCH_EXTRACT_PARAS", "200")  # realistic ~60 KB pages
-    # big enough that per-job constant costs (task waves, Arrow feed spin-up,
-    # straggler tail ≈ seconds) amortize: the efficiency should measure the
-    # ENGINE, which is embarrassingly parallel, not fixed job overhead
-    fanout = os.environ.get("BENCH_SCALE_FANOUT", "24")
-    nproc = os.cpu_count() or 1
-    settle = int(os.environ.get("BENCH_QUIET_SETTLE", "60"))
-    max_wait = int(os.environ.get("BENCH_QUIET_MAX_WAIT", "900"))
-    probes: list[dict] = []
-    all_quiet = True
-    # legs interleaved (N, 4N, N, 4N, ...) so time-varying co-tenant load
-    # on this shared host hits both levels symmetrically; each leg is a
-    # fresh subprocess (fresh JVM = fresh cluster analogue)
-    for cpus in (n, n4) * repeats:
-        probe, quiet = _wait_quiet(max_wait, settle=settle)
-        probes.append({**probe, "leg": f"engine[{cpus}]", "quiet": quiet})
-        all_quiet = all_quiet and quiet
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_CPUS=str(cpus),
-            BENCH_EXTRACT_PARAS=paras,
-            BENCH_EXTRACT_FANOUT=fanout,
-            # time-symmetric sampling: the bigger leg's passes are ~4x
-            # shorter, so give it proportionally more timed passes — the
-            # best-of-N estimator needs sample COUNT where per-pass gust
-            # exposure is higher (a micro-gust costs a whole pass)
-            BENCH_EXTRACT_RUNS=os.environ.get(
-                "BENCH_EXTRACT_RUNS", str(max(4, (cpus // n) * 2))
-            ),
-            BENCH_SALT_PARTS=os.environ.get("BENCH_SALT_PARTS", str(cpus * 8)),
-        )
-        proc = subprocess.run(
-            [sys.executable, str(REPO / "bench.py"), "--extract-timing"],
-            capture_output=True,
-            text=True,
-            env=env,
-            timeout=1800,
-        )
-        # spark's log4j JSON log lines can land on stdout; take the last
-        # line that is OUR result payload
-        parsed = None
-        for line in reversed(proc.stdout.strip().splitlines()):
-            try:
-                obj = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if isinstance(obj, dict) and "docs_per_sec" in obj:
-                parsed = obj
-                break
-        if parsed is None:
-            sys.stderr.write(proc.stdout[-2000:] + "\n" + proc.stderr[-2000:] + "\n")
-            raise RuntimeError(f"no result line from local[{cpus}] run")
-        samples[cpus].append(parsed)
-        # post-leg probe (no settle, not gating): a gust that arrived
-        # MID-leg shows up here, flagging the sample it contaminated.
-        # The loadavg allowance is leg-size-aware — our own just-finished
-        # leg contributes ~cpus+2 (workers + JVM helpers) to the 1-min
-        # window, so a flat threshold would false-alarm every big leg
-        p_after = _load_probe(_probe_procs(nproc))
-        parsed["gust_after"] = not _is_quiet(p_after, nproc, load_allowance=cpus + 3)
-        probes.append({**p_after, "leg": f"engine[{cpus}]-after", "quiet": not parsed["gust_after"]})
-        print(f"local[{cpus}]: {parsed}", file=sys.stderr)
-
-    # same-day host-ceiling control: the pure extraction core over raw
-    # multiprocessing (no Spark) at the SAME two leg sizes, captured in
-    # the same quiet window — this bounds what any engine could show on
-    # this host today, so the report can separate "the engine lost
-    # parallelism" from "the machine did"
-    import shutil as _sh
-    import tempfile as _tf
-
-    ctl_tmp = _tf.mkdtemp(prefix="bench_ceiling_")
-    control: dict[int, dict] = {}
-    try:
-        payloads = _control_payloads(int(paras), fanout=8)
-        n_docs_ctl = len(payloads)
-        chunk_paths = _ceiling_stage(payloads, ctl_tmp)
-        del payloads
-        for cpus in (n, n4):
-            probe, quiet = _wait_quiet(max_wait, settle=settle)
-            probes.append({**probe, "leg": f"control[{cpus}]", "quiet": quiet})
-            all_quiet = all_quiet and quiet
-            legs = [_ceiling_leg(chunk_paths, n_docs_ctl, cpus) for _ in range(2)]
-            control[cpus] = max(legs, key=lambda r: r["docs_per_sec"])
-            print(f"control[{cpus}]: {control[cpus]}", file=sys.stderr)
-    finally:
-        _sh.rmtree(ctl_tmp, ignore_errors=True)
-    ceiling_eff = round(
-        (control[n4]["docs_per_sec"] / control[n]["docs_per_sec"]) / (n4 / n), 3
-    )
-
-    # best-of-repeats per leg: a fresh-process sample can only be SLOWED by
-    # co-tenant load, never sped up, so the max is each leg's least-
-    # contaminated estimate (same rationale as the best-of-4 within a leg)
-    for cpus in (n, n4):
-        results[cpus] = max(samples[cpus], key=lambda r: r["docs_per_sec"])
-    thr_n, thr_4n = results[n]["docs_per_sec"], results[n4]["docs_per_sec"]
-    eff = round((thr_4n / thr_n) / (n4 / n), 3)
-    engine_rel = round(eff / ceiling_eff, 3) if ceiling_eff > 0 else None
-    paras_i = int(paras)
-    summary = {
-        "n_cores": n,
-        "n4_cores": n4,
-        "docs": results[n]["docs"],
-        "docs_per_sec_n": thr_n,
-        "docs_per_sec_4n": thr_4n,
-        "samples": {str(c): [r["docs_per_sec"] for r in samples[c]] for c in (n, n4)},
-        "scaling_efficiency": eff,
-        "passes_0.8": eff >= 0.8,
-        "host_ceiling": {
-            "docs_per_sec_n": control[n]["docs_per_sec"],
-            "docs_per_sec_4n": control[n4]["docs_per_sec"],
-            "efficiency": ceiling_eff,
-        },
-        "engine_relative_efficiency": engine_rel,
-        "probes": probes,
-        "all_quiet": all_quiet,
-    }
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    probe_lines = "\n".join(
-        f"| {p['leg']} | {p['t1']} | {p['tp']} | {p['load1']} | {'yes' if p['quiet'] else 'NO'} |"
-        for p in probes
-    )
-    (bench_dir / "BASELINE.md").write_text(
-        "# Scaling evidence (north rule: two cluster sizes)\n\n"
-        "Same extraction workload (fanned pages from "
-        f"`{SF_DIR}/documents.parquet`, x{fanout} fanout, {paras_i}-paragraph "
-        "(~60 KB) HTML each, staged to parquet and read from disk like a "
-        "real deployment), two fresh Spark processes at two parallelism "
-        "levels — the sandbox substitute for N vs 4N executors per the "
-        "driver instruction. Timed span covers only the extraction job at "
-        "STEADY STATE (adaptive warmup until passes stop improving >3% — "
-        "tiered JIT + heap sizing keep a fresh JVM improving for several "
-        "passes, and a long-running production job lives at steady state; "
-        "then best of 4 timed runs — the minimum is the least co-tenant-"
-        "contaminated sample on a shared host).\n\n"
-        f"| parallelism | docs | wall (s) | docs/sec |\n|---|---|---|---|\n"
-        f"| local[{n}] | {results[n]['docs']} | {results[n]['sec']} | {thr_n} |\n"
-        f"| local[{n4}] | {results[n4]['docs']} | {results[n4]['sec']} | {thr_4n} |\n\n"
-        f"**Scaling efficiency (thr_4N / thr_N) / ({n4}/{n}) = {eff}** "
-        f"({'≥' if eff >= 0.8 else '<'} 0.8 required)\n\n"
-        "All leg samples (docs/sec, interleaved fresh-process runs; the "
-        "table takes each leg's max — a sample can only be slowed by "
-        "co-tenant load, never sped up): "
-        f"local[{n}] = {[r['docs_per_sec'] for r in samples[n]]}, "
-        f"local[{n4}] = {[r['docs_per_sec'] for r in samples[n4]]}\n\n"
-        "Per-leg pass times (s; warmup passes -> timed runs) — the warmup "
-        "drift is the fresh-JVM transient the adaptive warmup exists to "
-        "exclude, shown so a reader can verify the timed runs sit on the "
-        "flat part of the curve:\n\n"
-        + "".join(
-            f"- local[{c}] leg {i + 1}: warmup {r.get('warmup_runs', [])} -> "
-            f"timed {r['runs']}\n"
-            for c in (n, n4)
-            for i, r in enumerate(samples[c])
-        )
-        + "\n"
-        "## Same-day host ceiling (control, no Spark)\n\n"
-        "The pure extraction core fanned over raw `multiprocessing` at the "
-        "same two leg sizes, over the same page HTML, captured in the same "
-        "quiet window. Zero distribution cost — its efficiency is the most "
-        "any engine could evidence on this host today (the loss is "
-        "memory-system + tenancy contention, a single-host artifact a real "
-        "N-vs-4N-node cluster does not share: a pure-CPU spin scales "
-        "cleanly, so the binding resource is bandwidth, not cores).\n\n"
-        f"| procs | docs | wall (s) | docs/sec |\n|---|---|---|---|\n"
-        f"| {n} | {control[n]['docs']} | {control[n]['sec']} | {control[n]['docs_per_sec']} |\n"
-        f"| {n4} | {control[n4]['docs']} | {control[n4]['sec']} | {control[n4]['docs_per_sec']} |\n\n"
-        f"**Host ceiling efficiency = {ceiling_eff}** — engine-relative "
-        f"scaling = {eff} / {ceiling_eff} = **{engine_rel}**.\n\n"
-        "## Capture hygiene\n\n"
-        "Every leg was gated on a no-Spark load probe (fixed pure-Python "
-        f"spin, single + {_probe_procs(nproc)}-proc, quiet iff the fanned spin "
-        "<= 1.5x the single one AND loadavg1 < half the CPU count after a "
-        f"{settle}s settle; storms read 2-10x the spin, partial co-tenant "
-        "occupancy shows in loadavg). "
-        "`-after` rows are post-leg probes — a gust that arrived mid-leg "
-        "shows there, flagging the sample it contaminated. Probes as "
-        "captured:\n\n"
-        f"| leg | spin 1-proc (s) | spin {_probe_procs(nproc)}-proc (s) | loadavg1 | quiet |\n"
-        "|---|---|---|---|---|\n"
-        f"{probe_lines}\n\n"
-        "## Host\n\n"
-        f"`os.cpu_count()` = {nproc}; legs local[{n}] and local[{n4}].\n"
-    )
-    print(json.dumps(summary))
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        main_scaling()
-    elif "--extract-timing" in sys.argv:
-        main_extract_timing()
-    else:
-        main_bench(sys.argv[1:])
+    main_bench(sys.argv[1:])

@@ -64,7 +64,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import arrow_frame, error_class, hadoop_fs, read_text, write_text
+from manga_ocr_spark.jobs.session import arrow_frame, hadoop_fs, read_text, write_text
 
 PAGES_SCHEMA = StructType(
     [
@@ -344,15 +344,14 @@ class ExtractJob:
         empty or marker-only dir, left by a kill during the first lineage
         write, reads as no rows; a missing column reads as null, so a null
         ``partition_id`` or ``status`` is not lineage and raises. One job:
-        lineage is about one row per bucket, deduplicated by the set."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(f"{self.out_dir}/lineage")
-        except AnalysisException as e:
-            if error_class(e) == "PATH_NOT_FOUND":
-                return set()
-            raise
+        lineage is about one row per bucket, deduplicated by the set.
+        The dir's existence is probed first, so a fresh start reads
+        nothing and raises nothing."""
+        path = f"{self.out_dir}/lineage"
+        fs, p = hadoop_fs(self.spark, path)
+        if not fs.exists(p):
+            return set()
+        lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(path)
         rows = lineage.select("partition_id", "status").collect()
         if any(r.partition_id is None or r.status is None for r in rows):
             raise ValueError(

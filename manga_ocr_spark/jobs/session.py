@@ -14,8 +14,9 @@ sandbox scale:
 - AQE on incl. skew-join handling (host-skewed pages, X11).
 - ``files.maxPartitionBytes`` 128m: at 100 TB this yields ~800k input
   splits — individually right-sized for executor memory.
-- shuffle partitions default to 4x cores locally; on a real cluster this is
-  overridden (or left to AQE coalescing).
+- shuffle partitions default to one per core locally (at least 8); under
+  spark-submit they follow the cluster's default parallelism (or are left
+  to AQE coalescing).
 """
 
 from __future__ import annotations
@@ -29,8 +30,8 @@ from pyspark.sql.types import StructType
 
 def default_cpus(env: Mapping[str, str]) -> int:
     """Cores a standalone ``local[N]`` session models: $SPARK_GRAFT_CPUS
-    when set (bench.py's --scaling legs and perfbench set it), else the
-    CPUs this process may run on."""
+    when set (perfbench sets it to ``min(4, nproc)``), else the CPUs this
+    process may run on."""
     return int(env.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
@@ -114,17 +115,6 @@ def arrow_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) 
         [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
     )
     return spark.createDataFrame(table, schema).coalesce(1)
-
-
-def error_class(e: Exception) -> str | None:
-    """The stable error class id of a PySpark exception, never its
-    message: a differently-worded future error must not be mistaken for
-    a known one. ``getCondition`` is the PySpark-4 name, ``getErrorClass``
-    the pre-4 legacy one."""
-    for attr in ("getCondition", "getErrorClass"):
-        if hasattr(e, attr):
-            return getattr(e, attr)()
-    return None
 
 
 def hadoop_fs(spark: SparkSession, path: str):

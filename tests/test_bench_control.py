@@ -1,40 +1,15 @@
 """bench.py's capture controls.
 
-The scaling capture's host-ceiling control claims to feed the pure
-extraction core THE SAME page HTML the engine legs extract — that
-byte-identity is what makes its throughput a ceiling for the engine
-rather than a different workload. Pin it against the real Spark path.
-The quiet gate's verdict and fan count are pinned with stubbed probes."""
+The quiet gate's verdict and fan count are pinned with stubbed probes,
+and the argument check is pinned to run before the gate and before a
+session starts."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
 import bench
-from manga_ocr_spark.jobs.pages_from_docs import pages_from_documents
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_control_payloads_byte_identical_to_engine_pages(spark):
-    paras, fanout = 3, 2
-    got = bench._control_payloads(paras, fanout=fanout, sf_dir=SF_DIR)
-
-    docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .withColumn("copy", F.explode(F.sequence(F.lit(0), F.lit(fanout - 1))))
-        .select(
-            (F.col("doc_id") * fanout + F.col("copy")).alias("doc_id"),
-            F.concat_ws(" ", F.array_repeat(F.col("text"), paras)).alias("text"),
-            F.col("lang"),
-        )
-    )
-    rows = pages_from_documents(docs).select("url", "html").collect()
-    # order-insensitive: the control builds in pyarrow scan order, the
-    # engine in Spark partition order
-    assert sorted(got) == sorted(bytes(r.html) for r in rows)
-    assert len(got) == 500 * fanout
-
+from manga_ocr_spark.jobs import session
 
 # The quiet gate judges each probe against itself: no Spark, no sleeping.
 QUIET = {"t1": 0.7, "tp": 0.8, "load1": 0.3}
@@ -48,9 +23,6 @@ def test_quiet_gate_accepts_a_quiet_reading():
 def test_quiet_gate_rejects_a_storm_or_a_loaded_host():
     assert not bench._is_quiet({**QUIET, "tp": 2 * QUIET["t1"]}, nproc=4)
     assert not bench._is_quiet({**QUIET, "load1": 2.0}, nproc=4)
-    # a scaling leg's post-leg probe allows for the leg's own load
-    assert bench._is_quiet({**QUIET, "load1": 9.0}, nproc=4, load_allowance=8 + 3)
-    assert not bench._is_quiet({**QUIET, "tp": 2 * QUIET["t1"]}, nproc=4, load_allowance=11)
 
 
 def _stub_gate(monkeypatch, nproc: int, reading: dict) -> list[int]:
@@ -81,3 +53,18 @@ def test_quiet_gate_records_a_busy_probe_at_the_deadline(monkeypatch):
     fans = _stub_gate(monkeypatch, 4, busy)
     assert bench._wait_quiet(0) == (busy, False)
     assert fans == [4]
+
+
+def test_a_flag_exits_before_the_gate_and_the_session(monkeypatch):
+    def unreachable(*args, **kwargs):
+        raise AssertionError("bench.py went past its argument check")
+
+    monkeypatch.setattr(bench, "_wait_quiet", unreachable)
+    monkeypatch.setattr(bench.time, "sleep", unreachable)
+    monkeypatch.setattr(session, "get_spark", unreachable)
+    with pytest.raises(SystemExit) as exit_:
+        bench.main_bench(["--scaling"])
+    message = str(exit_.value.code)
+    assert "'--scaling'" in message and "git show" in message
+    for name in ("minhash_candidate_pairs", "lang_id", bench.EXTRACT_QUERY):
+        assert f"'{name}'" in message

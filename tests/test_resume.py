@@ -137,6 +137,19 @@ def test_committed_buckets_missing_vs_corrupt_lineage(spark, tmp_path):
         job.committed_buckets()
 
 
+def test_committed_buckets_on_a_missing_dir_reads_nothing(spark, tmp_path, monkeypatch):
+    # a fresh output dir is known from a file-system probe: no read is
+    # planned, so no converted PATH_NOT_FOUND exception is raised and caught
+    from pyspark.sql import SparkSession
+
+    def no_read(self):
+        raise AssertionError("committed_buckets read a missing lineage dir")
+
+    job = ExtractJob(spark, str(tmp_path / "out"), num_buckets=4)
+    monkeypatch.setattr(SparkSession, "read", property(no_read))
+    assert job.committed_buckets() == set()
+
+
 def test_committed_buckets_empty_lineage_dir_is_fresh_start(spark, tmp_path):
     # second review cycle: a kill during the very FIRST lineage write can
     # leave an empty dir (or only committer markers) — provably nothing
