@@ -28,8 +28,10 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
   the batch loop (the reference's load-model-once pattern, ocr.py:59-79 /
   SURVEY.md §4 X1), then every Arrow batch reuses it.
 - The extraction ``mapInArrow`` tasks are the ONLY Python tasks of a
-  commit group: the driver-built metrics and lineage frames are Arrow-
-  built (``session.arrow_frame``), never PythonRDD-backed lists.
+  commit group, and its only Spark writes: the KB-scale metrics and
+  lineage rows already sit on the driver, which writes them as pyarrow
+  parquet files through the Hadoop FS (``session.write_parquet``) and
+  reads lineage back the same way, with no Spark job.
 
 Spark jobs per commit group (pinned by tests/test_resume.py; every job
 and task has a fixed cost that can exceed the extraction's own):
@@ -40,9 +42,7 @@ and task has a fixed cost that can exceed the extraction's own):
      map-stage job of ``n_in`` tasks), then writes in
      ``ceil(P * |group| / B)`` tasks;
   2. the stats aggregate's shuffle-map stage (AQE runs it as its own job);
-  3. the aggregate's result stage, collected to the driver;
-  4. write metrics/ — one task;
-  5. write lineage/ — one task.
+  3. the aggregate's result stage, collected to the driver.
 """
 
 from __future__ import annotations
@@ -64,7 +64,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import arrow_frame, hadoop_fs, read_text, write_text
+from manga_ocr_spark.jobs.session import hadoop_fs, read_file, write_file, write_parquet
 
 PAGES_SCHEMA = StructType(
     [
@@ -128,6 +128,9 @@ METRICS_SCHEMA = StructType(
     ]
 )
 
+# a metrics file's columns: its partition dir names the partition_id
+METRICS_FILE_SCHEMA = StructType(METRICS_SCHEMA.fields[:-1])
+
 LINEAGE_SCHEMA = StructType(
     [
         StructField("partition_id", StringType()),
@@ -142,10 +145,10 @@ LINEAGE_SCHEMA = StructType(
 )
 
 
-def _utc_naive(epoch_s: float):
+def _utc(epoch_s: float):
     import datetime as dt
 
-    return dt.datetime.fromtimestamp(epoch_s, tz=dt.timezone.utc).replace(tzinfo=None, microsecond=0)
+    return dt.datetime.fromtimestamp(epoch_s, tz=dt.timezone.utc)
 
 
 def _blocks_to_py(blocks) -> list[dict]:
@@ -249,11 +252,11 @@ def pin_num_buckets(spark: SparkSession, table_dir: str, num_buckets: int) -> No
     another count raises ValueError before any write. A table that exists
     without the marker has an unknown count and stays unpinned."""
     marker = f"{table_dir}/_buckets"
-    recorded = read_text(spark, marker)
+    recorded = read_file(spark, marker)
     if recorded is None:
         fs, p = hadoop_fs(spark, table_dir)
         if not fs.exists(p):
-            write_text(spark, marker, str(num_buckets))
+            write_file(spark, marker, str(num_buckets).encode())
     elif int(recorded) != num_buckets:
         raise ValueError(
             f"{table_dir} holds output of num_buckets={int(recorded)}, "
@@ -340,25 +343,36 @@ class ExtractJob:
         failure — permissions, corrupt footers, unreadable rows — must
         surface, because silently answering set() here would recompute
         and overwrite every bucket (this is the resume correctness
-        boundary). Read with LINEAGE_SCHEMA (no footer-inference job): an
-        empty or marker-only dir, left by a kill during the first lineage
-        write, reads as no rows; a missing column reads as null, so a null
-        ``partition_id`` or ``status`` is not lineage and raises. One job:
-        lineage is about one row per bucket, deduplicated by the set.
-        The dir's existence is probed first, so a fresh start reads
-        nothing and raises nothing."""
+        boundary). The driver reads it with pyarrow, running no Spark
+        job: every file directly under lineage/ but the ``_``/``.`` names
+        Spark's reader skips too (committer markers, tmp files,
+        checksums), and of each file only ``partition_id`` and
+        ``status``. A file without either column, or with a null in one,
+        is not lineage and raises. An empty or marker-only dir, left by a
+        kill during the first lineage write, holds no rows. The dir's
+        existence is probed first, so a fresh start reads nothing and
+        raises nothing."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         path = f"{self.out_dir}/lineage"
         fs, p = hadoop_fs(self.spark, path)
         if not fs.exists(p):
             return set()
-        lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-        rows = lineage.select("partition_id", "status").collect()
-        if any(r.partition_id is None or r.status is None for r in rows):
-            raise ValueError(
-                f"{self.out_dir}/lineage holds rows without partition_id or status: "
-                "not readable as lineage"
-            )
-        return {int(r.partition_id.split("=", 1)[1]) for r in rows if r.status == "ok"}
+        done: set[int] = set()
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if st.isFile() and name[0] not in "_.":
+                data = pa.BufferReader(read_file(self.spark, f"{path}/{name}"))
+                pids, status = pq.read_table(data, columns=["partition_id", "status"]).columns
+                if pids.null_count or status.null_count:
+                    raise ValueError(
+                        f"{path}/{name} holds rows without partition_id or status: "
+                        "not readable as lineage"
+                    )
+                rows = zip(pids.to_pylist(), status.to_pylist())
+                done |= {int(pid.split("=", 1)[1]) for pid, s in rows if s == "ok"}
+        return done
 
     def stats_scan(self, buckets: list[int]) -> DataFrame:
         """Pruned re-read of committed extracted/ partitions: partition-
@@ -440,41 +454,31 @@ class ExtractJob:
                 )
                 .collect()
             )
-            metrics_rows = [
-                (r["lang"], int(r["blocks_kept"]), int(r["blocks_dropped"]),
-                 int(r["count"]), f"bucket={int(r['bucket'])}")
-                for r in per_bl
-            ]
-            arrow_frame(self.spark, metrics_rows, METRICS_SCHEMA).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "partition_id"
-            ).parquet(f"{self.out_dir}/metrics")
-            stats: dict[int, dict] = {}
+            metrics_rows: dict[int, list[tuple]] = {}
+            stats: dict[int, list[int]] = {}
             for r in per_bl:
                 b = int(r["bucket"])
-                s = stats.setdefault(b, {"input_rows": 0, "output_rows": 0, "bytes_in": 0})
-                s["input_rows"] += int(r["count"])
-                s["output_rows"] += int(r["output_rows"])
-                s["bytes_in"] += int(r["bytes_in"])
+                metrics_rows.setdefault(b, []).append(
+                    (r["lang"], int(r["blocks_kept"]), int(r["blocks_dropped"]), int(r["count"]))
+                )
+                s = stats.setdefault(b, [0, 0, 0])
+                s[0] += int(r["count"])
+                s[1] += int(r["output_rows"])
+                s[2] += int(r["bytes_in"])
+            # each bucket's rows replace its metrics partition dir, named
+            # as Spark's partitionBy names it (``=`` in a value is %3D)
+            for b, rows in sorted(metrics_rows.items()):
+                write_parquet(
+                    self.spark, f"{self.out_dir}/metrics/partition_id=bucket%3D{b}",
+                    rows, METRICS_FILE_SCHEMA, replace=True,
+                )
             t_end = time.time()
             lineage_rows = [
-                (
-                    f"bucket={b}",
-                    int(stats[b]["input_rows"]) if b in stats else 0,
-                    int(stats[b]["output_rows"]) if b in stats else 0,
-                    int(stats[b]["bytes_in"]) if b in stats else 0,
-                    _utc_naive(t_start),
-                    _utc_naive(t_end),
-                    "ok",
-                    1,
-                )
+                (f"bucket={b}", *stats.get(b, (0, 0, 0)), _utc(t_start), _utc(t_end), "ok", 1)
                 for b in group
             ]
             # lineage commit is the *last* write of the group: its presence
             # certifies the group's extracted+metrics rows are durable.
-            arrow_frame(self.spark, lineage_rows, LINEAGE_SCHEMA).write.mode(
-                "append"
-            ).parquet(f"{self.out_dir}/lineage")
+            write_parquet(self.spark, f"{self.out_dir}/lineage", lineage_rows, LINEAGE_SCHEMA)
             committed.extend(group)
         return committed

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from manga_ocr_spark.jobs.session import arrow_frame
+from manga_ocr_spark.jobs.session import write_parquet
 from manga_ocr_spark.operators import dedup as D
 
 METRICS_SCHEMA = StructType(
@@ -138,7 +138,5 @@ def run_neardedup(
     for r in sorted(drops_by_band, key=lambda r: int(r["band"])):
         rows.append(("capped_buckets", int(r["band"]), int(r["n_buckets"])))
         rows.append(("capped_bucket_rows", int(r["band"]), int(r["n_rows"])))
-    arrow_frame(spark, rows, METRICS_SCHEMA).write.mode("overwrite").parquet(
-        f"{out_dir}/metrics"
-    )
+    write_parquet(spark, f"{out_dir}/metrics", rows, METRICS_SCHEMA, replace=True)
     return {"docs_in": n_in, "docs_kept": n_kept, "docs_dropped": n_in - n_kept}

@@ -21,10 +21,11 @@ sandbox scale:
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -92,58 +93,94 @@ def _phys_bytes() -> int | None:
         return None
 
 
-def arrow_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
-    """Driver-built rows -> DataFrame through one ``pyarrow.Table``.
-
-    ``spark.createDataFrame(<list>, schema)`` goes parallelize ->
-    PythonRDD: every write of a few driver rows then runs
-    ``spark.default.parallelism`` Python-worker tasks, each paying a
-    fixed ~0.25 CPU-s before doing any work. The Arrow-table path ships
-    the batches straight to the JVM instead, as a ``LocalRelation`` that
-    scans in ``min(rows, spark.default.parallelism)`` tasks; ``coalesce(1)``
-    (no shuffle) writes it in one task. Columns use the schema's Arrow form, so
-    TimestampType is a UTC instant and a naive ``datetime`` is read as
-    UTC wall time, never in the driver's local zone (the list path's
-    ``time.mktime`` reads it as local time). ``rows`` may be empty: the
-    frame still carries ``schema``."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
-    )
-    return spark.createDataFrame(table, schema).coalesce(1)
+@functools.cache
+def _hadoop_path(jvm):
+    """The JVM class ``org.apache.hadoop.fs.Path``, resolved once per
+    gateway: py4j resolves a dotted name with a round trip per component
+    (about 3.6 CPU-ms for this one)."""
+    return jvm.org.apache.hadoop.fs.Path
 
 
 def hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works for
     local paths and any DFS a real cluster mounts."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p = _hadoop_path(spark._jvm)(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def read_text(spark: SparkSession, path: str) -> str | None:
-    """The UTF-8 text of the file at ``path``; None if it is absent."""
+def read_file(spark: SparkSession, path: str) -> bytes | None:
+    """The bytes of the file at ``path``; None if it is absent."""
     fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return stream.readAllBytes()
     finally:
         stream.close()
 
 
-def write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Create or replace the file at ``path``, holding ``text``."""
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` if it exists; raise if the FS refuses."""
     fs, p = hadoop_fs(spark, path)
+    if fs.exists(p) and not fs.delete(p, True):
+        raise RuntimeError(f"could not delete {path}")
+
+
+def rename_path(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to the absent ``dst``; raise if the FS refuses.
+    ``dst`` must not exist: a Hadoop rename onto an existing directory
+    returns True and nests ``src`` inside it (``dst/bucket=1/bucket=1``)."""
+    fs, s = hadoop_fs(spark, src)
+    d = _hadoop_path(spark._jvm)(dst)
+    if fs.exists(d) or not fs.rename(s, d):
+        raise RuntimeError(f"could not rename {src} to {dst}")
+
+
+def write_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create or replace the file at ``path``, holding ``data``. The bytes
+    go to the hidden name ``.<name>.tmp`` beside it, which readers skip,
+    and one rename publishes them: a reader sees the old file, none, or
+    the whole new one, never a partial file (on local FS and HDFS)."""
+    parent, name = path.rsplit("/", 1)
+    tmp = f"{parent}/.{name}.tmp"
+    fs, p = hadoop_fs(spark, tmp)
     stream = fs.create(p, True)
     try:
-        stream.write(bytearray(text.encode()))
+        stream.write(bytearray(data))
     finally:
         stream.close()
+    delete_path(spark, path)
+    rename_path(spark, tmp, path)
+
+
+def write_parquet(
+    spark: SparkSession,
+    dir_path: str,
+    rows: Sequence[tuple],
+    schema: StructType,
+    replace: bool = False,
+) -> None:
+    """Driver-held ``rows`` -> one parquet file ``{dir_path}/part-<uuid>.parquet``
+    in ``schema``'s Arrow form, written by ``write_file``; ``replace``
+    first deletes ``dir_path``. Runs no Spark job. TimestampType columns
+    are ``timestamp[us, tz=UTC]``, so Spark reads them back as
+    TimestampType (a tz-naive one reads as TIMESTAMP_NTZ) and a naive
+    ``datetime`` value counts as UTC wall time. ``rows`` may be empty:
+    the file still carries ``schema``."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], arrow_schema)
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    if replace:
+        delete_path(spark, dir_path)
+    write_file(spark, f"{dir_path}/part-{uuid.uuid4()}.parquet", sink.getvalue().to_pybytes())
 
 
 def get_spark(

@@ -31,7 +31,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from manga_ocr_spark.jobs.extract import pin_num_buckets, with_bucket
-from manga_ocr_spark.jobs.session import hadoop_fs, read_text, write_text
+from manga_ocr_spark.jobs.session import delete_path, hadoop_fs, read_file, rename_path, write_file
 
 
 MANIFEST = "_manifest.json"
@@ -40,23 +40,6 @@ MANIFEST = "_manifest.json"
 def _exists(spark: SparkSession, path: str) -> bool:
     fs, p = hadoop_fs(spark, path)
     return fs.exists(p)
-
-
-def _delete(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path`` if it exists; raise if the FS refuses."""
-    fs, p = hadoop_fs(spark, path)
-    if fs.exists(p) and not fs.delete(p, True):
-        raise RuntimeError(f"merge_upsert: could not delete {path}")
-
-
-def _rename(spark: SparkSession, src: str, dst: str) -> None:
-    """Rename ``src`` to the absent ``dst``; raise if the FS refuses.
-    ``dst`` must not exist: a Hadoop rename onto an existing directory
-    returns True and nests ``src`` inside it (``dst/bucket=1/bucket=1``)."""
-    fs, s = hadoop_fs(spark, src)
-    d = spark._jvm.org.apache.hadoop.fs.Path(dst)
-    if fs.exists(d) or not fs.rename(s, d):
-        raise RuntimeError(f"merge_upsert: could not rename {src} to {dst}")
 
 
 def _listing(spark: SparkSession, path: str) -> dict[str, int | None]:
@@ -76,15 +59,8 @@ def _staged_manifest(spark: SparkSession, staging: str) -> dict[str, dict[str, i
 
 
 def _read_manifest(spark: SparkSession, staging: str) -> dict | None:
-    text = read_text(spark, f"{staging}/{MANIFEST}")
-    return None if text is None else json.loads(text)
-
-
-def _write_manifest(spark: SparkSession, staging: str, manifest: dict) -> None:
-    """Write the manifest atomically: a tmp file, then a rename."""
-    tmp = f"{staging}/{MANIFEST}.tmp"
-    write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
-    _rename(spark, tmp, f"{staging}/{MANIFEST}")
+    data = read_file(spark, f"{staging}/{MANIFEST}")
+    return None if data is None else json.loads(data)
 
 
 def _stage(df: DataFrame, mode: str, staging: str) -> None:
@@ -173,7 +149,7 @@ def merge_upsert(
     _stage(updates, "overwrite", staging)
     touched = _listing(spark, staging)
     if not touched:
-        _delete(spark, staging)
+        delete_path(spark, staging)
         return []
     live = _listing(spark, table_dir)
     live_touched = [f"{table_dir}/{b}" for b in touched if b in live]
@@ -183,7 +159,7 @@ def merge_upsert(
         batch = read.parquet(staging)
         existing = read.option("basePath", table_dir).parquet(*live_touched)
         _stage(existing.join(batch.select("url"), "url", "left_anti"), "append", staging)
-    write_text(spark, f"{staging}/_SUCCESS", "")
+    write_file(spark, f"{staging}/_SUCCESS", b"")
     recover_staging(spark, table_dir)
     return sorted(int(b.split("=", 1)[1]) for b in touched)
 
@@ -197,15 +173,15 @@ def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
     if manifest is None:
         # no rename has happened yet: every staged bucket is still there
         manifest = _staged_manifest(spark, staging)
-        _write_manifest(spark, staging, manifest)
+        write_file(spark, f"{staging}/{MANIFEST}", json.dumps(manifest, sort_keys=True).encode())
     fs, p = hadoop_fs(spark, table_dir)
     fs.mkdirs(p)
     staged = _listing(spark, staging)
     for b in sorted(manifest):
         if b in staged:
-            _delete(spark, f"{table_dir}/{b}")
-            _rename(spark, f"{staging}/{b}", f"{table_dir}/{b}")
-    write_text(spark, f"{table_dir}/_SUCCESS", "")
+            delete_path(spark, f"{table_dir}/{b}")
+            rename_path(spark, f"{staging}/{b}", f"{table_dir}/{b}")
+    write_file(spark, f"{table_dir}/_SUCCESS", b"")
 
 
 def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
@@ -221,7 +197,7 @@ def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) 
             f"merge_upsert commit verification failed: live buckets {bad} differ from "
             f"the manifest (file names, lengths); staging at {staging} is kept for recovery"
         )
-    _delete(spark, staging)
+    delete_path(spark, staging)
 
 
 def recover_staging(spark: SparkSession, table_dir: str) -> bool:
@@ -242,7 +218,7 @@ def recover_staging(spark: SparkSession, table_dir: str) -> bool:
         return False
     if not _exists(spark, f"{staging}/_SUCCESS"):
         # incomplete staging: the table was never touched
-        _delete(spark, staging)
+        delete_path(spark, staging)
         return False
     _commit_staging(spark, staging, table_dir)
     _verify_and_drop_staging(spark, staging, table_dir)

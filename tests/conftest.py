@@ -53,25 +53,6 @@ def golden_df(spark, golden_pdf: pd.DataFrame):
     return spark.createDataFrame(golden_pdf)
 
 
-@pytest.fixture
-def capture_arrow_frames(monkeypatch):
-    """``capture(module)`` wraps ``module.arrow_frame`` and returns the list
-    every driver-built frame the module makes is appended to."""
-
-    def capture(module) -> list:
-        frames = []
-        real = module.arrow_frame
-
-        def spy(spark, rows, schema):
-            frames.append(real(spark, rows, schema))
-            return frames[-1]
-
-        monkeypatch.setattr(module, "arrow_frame", spy)
-        return frames
-
-    return capture
-
-
 def _minhash_band_pairs(texts: dict, num_hashes: int = 16, bands: int = 4) -> set:
     """Pure-Python reference for the MinHash tier, uncapped and expanded to
     members: every (a < b) pair sharing a band key, where band ``b``'s key

@@ -160,19 +160,3 @@ def test_simhash_guarded_with_drops_surfaces_capped_buckets(spark):
     pairs2, _, dropped2 = D.simhash_guarded_with_drops(docs, max_bucket_size=20)
     assert dropped2.count() == 0
     assert pairs2.count() > 0
-
-
-def test_run_neardedup_metrics_frame_starts_no_python_workers(
-    spark, tmp_path, capture_arrow_frames
-):
-    # the metrics rows are driver-built: an Arrow-built frame plans no
-    # PythonRDD (a list-built one would run Python tasks just to write them)
-    import manga_ocr_spark.jobs.neardedup as ND
-
-    frames = capture_arrow_frames(ND)
-    docs = spark.createDataFrame(_hot_bucket_docs())
-    out = str(tmp_path / "nd")
-    run_neardedup(spark, docs, out, max_bucket_size=10)
-    assert len(frames) == 1 and frames[0].schema == ND.METRICS_SCHEMA
-    assert "PythonRDD" not in frames[0]._jdf.queryExecution().toRdd().toDebugString()
-    assert spark.read.parquet(f"{out}/metrics").schema == ND.METRICS_SCHEMA

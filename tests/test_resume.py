@@ -246,9 +246,10 @@ def _clear_job_group(spark) -> None:
 
 def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
     # the fixed Spark cost of a commit group is its job and task count:
-    # the stats re-read and the lineage read carry their schemas (no
-    # footer-inference job), committed_buckets collects without a
-    # distinct (no shuffle), and driver-built frames write in one task
+    # the stats re-read carries its schema (no footer-inference job), and
+    # the driver writes metrics/ and lineage/ and reads lineage back
+    # itself, so a group runs the extraction write and the stats
+    # aggregate's two stages only, and a rerun's lineage read none
     sc = spark.sparkContext
     tag = f"budget-{tmp_path.name}"
     groups = _job_group_per_commit_group(spark, monkeypatch, tag)
@@ -262,10 +263,8 @@ def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
     assert len(groups) == 2
     for g in groups:
         tasks = _job_tasks(spark, g)
-        assert len(tasks) <= 5, (g, tasks)
-        # a group's last two jobs write the metrics and lineage frames
-        assert tasks[-2:] == [1, 1], (g, tasks)
-    assert len(_job_tasks(spark, f"{tag}-rerun")) == 1
+        assert len(tasks) == 3, (g, tasks)
+    assert len(_job_tasks(spark, f"{tag}-rerun")) == 0
 
 
 @pytest.mark.parametrize("salt", [None, 8])
@@ -295,9 +294,9 @@ def test_commit_group_tasks_sized_to_its_share_of_the_input(
     finally:
         _clear_job_group(spark)
     assert len(groups) == 2
-    # the extraction write is the job before the stats aggregate's two
-    # and the two frame writes; a salted group's shuffle precedes it
-    writes = [_job_tasks(spark, g)[-5] for g in groups]
+    # the extraction write is the job before the stats aggregate's two;
+    # a salted group's shuffle precedes it
+    writes = [_job_tasks(spark, g)[-3] for g in groups]
     files = [len(glob.glob(f"{out}/extracted/bucket={b}/*.parquet")) for b in range(4)]
     if salt is None:
         width = math.ceil(n_in * 2 / 4)
@@ -383,17 +382,159 @@ def test_commit_outputs_match_a_direct_aggregate(spark, pages_df, tmp_path):
     assert len(glob.glob(f"{out}/lineage/part-*.parquet")) == 2
 
 
-def test_commit_frames_start_no_python_workers(spark, pages_df, tmp_path, capture_arrow_frames):
-    # metrics + lineage rows are driver-built; a list-built frame is a
-    # PythonRDD whose write runs spark.default.parallelism Python tasks.
-    # The Arrow-built frames must plan no PythonRDD at all.
+def test_side_tables_and_lineage_read_run_no_spark_job(spark, pages_df, tmp_path, monkeypatch):
+    # metrics and lineage rows already sit on the driver: it writes them
+    # (and near-dedup's metrics) as parquet files through the Hadoop FS
+    # and reads lineage back the same way, without a single Spark job
+    import manga_ocr_spark.jobs.extract as X
+    import manga_ocr_spark.jobs.neardedup as ND
+    from tests.test_neardedup import _hot_bucket_docs
+
+    sc = spark.sparkContext
+    tag = f"driver-{tmp_path.name}"
+    written: list[str] = []
+
+    def in_group(real):
+        def write(spark_, dir_path, *args, **kwargs):
+            written.append(dir_path)
+            sc.setJobGroup(tag, tag)
+            try:
+                real(spark_, dir_path, *args, **kwargs)
+            finally:
+                _clear_job_group(spark)
+
+        return write
+
+    monkeypatch.setattr(X, "write_parquet", in_group(X.write_parquet))
+    monkeypatch.setattr(ND, "write_parquet", in_group(ND.write_parquet))
+    out = str(tmp_path / "out")
+    job = ExtractJob(spark, out, num_buckets=4, commit_group_size=2)
+    assert sorted(job.run(pages_df)) == [0, 1, 2, 3]
+    docs = spark.createDataFrame(_hot_bucket_docs())
+    ND.run_neardedup(spark, docs, str(tmp_path / "nd"), max_bucket_size=10)
+    sc.setJobGroup(tag, tag)
+    try:
+        assert job.committed_buckets() == {0, 1, 2, 3}
+    finally:
+        _clear_job_group(spark)
+    # a metrics file per bucket, a lineage file per group, near-dedup's metrics
+    assert sorted(p.rsplit("/", 1)[1] for p in written) == [
+        "lineage", "lineage", "metrics",
+        *(f"partition_id=bucket%3D{b}" for b in range(4)),
+    ]
+    assert _job_tasks(spark, tag) == []
+    assert spark.read.parquet(f"{tmp_path}/nd/metrics").schema == ND.METRICS_SCHEMA
+
+
+class Crash(Exception):
+    pass
+
+
+def _assert_converged(spark, out: str, n_rows: int) -> None:
+    """Every bucket of a 4-bucket ``out`` holds one metrics file and one ok
+    lineage row, the metrics count every input row once, and extracted/
+    holds each url once."""
+    import glob
+
+    metrics = spark.read.parquet(f"{out}/metrics")
+    assert metrics.agg(F.sum("count")).collect()[0][0] == n_rows
+    parts = [f"{out}/metrics/partition_id=bucket%3D{b}/*.parquet" for b in range(4)]
+    files = [len(glob.glob(p)) for p in parts]
+    assert files == [1] * 4, files
+    lineage = spark.read.parquet(f"{out}/lineage").select("partition_id", "status").collect()
+    assert sorted(tuple(r) for r in lineage) == [(f"bucket={b}", "ok") for b in range(4)]
+    ext = spark.read.parquet(f"{out}/extracted")
+    assert ext.count() == n_rows
+    assert ext.groupBy("url").count().filter("count > 1").count() == 0
+
+
+def test_kill_between_metrics_and_lineage_resumes(spark, pages_df, tmp_path, monkeypatch):
+    # a kill after a group's metrics/ files land and before its lineage
+    # file does: the group is not committed, so the rerun redoes it and
+    # replaces its metrics partition dirs instead of adding to them
+    import glob
+
     import manga_ocr_spark.jobs.extract as X
 
-    frames = capture_arrow_frames(X)
-    ExtractJob(spark, str(tmp_path / "out"), num_buckets=4, commit_group_size=2).run(pages_df)
-    assert [f.schema for f in frames] == [X.METRICS_SCHEMA, X.LINEAGE_SCHEMA] * 2
-    for f in frames:
-        assert "PythonRDD" not in f._jdf.queryExecution().toRdd().toDebugString()
+    real = X.write_parquet
+
+    def write(spark_, dir_path, *args, **kwargs):
+        if dir_path.endswith("/lineage"):
+            raise Crash(dir_path)
+        real(spark_, dir_path, *args, **kwargs)
+
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(X, "write_parquet", write)
+    with pytest.raises(Crash):
+        ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages_df)
+    monkeypatch.undo()
+    assert glob.glob(f"{out}/metrics/partition_id=bucket%3D*/*.parquet")
+    job = ExtractJob(spark, out, num_buckets=4, commit_group_size=2)
+    assert job.committed_buckets() == set()
+    assert sorted(job.run(pages_df)) == [0, 1, 2, 3]
+    _assert_converged(spark, out, pages_df.count())
+
+
+def test_hidden_tmp_files_in_side_tables_are_ignored(spark, pages_df, tmp_path):
+    # a kill during a driver write leaves its hidden ``.<name>.tmp`` file:
+    # neither committed_buckets nor Spark's reader may see it
+    out = str(tmp_path / "out")
+    job = ExtractJob(spark, out, num_buckets=4, commit_group_size=2)
+    first = job.run(pages_df, max_groups=1)
+    for d in ("lineage", "metrics", "metrics/partition_id=bucket%3D0"):
+        (tmp_path / "out" / d / ".part-dead.parquet.tmp").write_bytes(b"half a parquet file")
+    assert job.committed_buckets() == set(first)
+    assert spark.read.parquet(f"{out}/lineage").count() == len(first)
+    assert spark.read.parquet(f"{out}/metrics").select("partition_id").distinct().count() == 2
+    assert sorted(first + job.run(pages_df)) == [0, 1, 2, 3]
+    _assert_converged(spark, out, pages_df.count())
+
+
+def test_resume_over_side_tables_spark_wrote(spark, pages_df, tmp_path):
+    # an output dir whose metrics/ and lineage/ Spark wrote (INT96
+    # timestamps, a _SUCCESS marker) resumes, and with the driver's files
+    # beside them both tables still read with the FIXTURES.md §3 schemas
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from manga_ocr_spark.jobs.extract import LINEAGE_SCHEMA, METRICS_SCHEMA
+
+    out = str(tmp_path / "out")
+    first = ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages_df, max_groups=1)
+    for table, schema, parts in (
+        ("lineage", LINEAGE_SCHEMA, []),
+        ("metrics", METRICS_SCHEMA, ["partition_id"]),
+    ):
+        rows = spark.read.schema(schema).parquet(f"{out}/{table}").collect()
+        shutil.rmtree(f"{out}/{table}")
+        df = spark.createDataFrame(rows, schema).coalesce(1)
+        df.write.partitionBy(*parts).parquet(f"{out}/{table}")
+    spark_file = glob.glob(f"{out}/lineage/part-*.parquet")[0]
+    assert str(pq.read_schema(spark_file).field("t_start").type) == "timestamp[ns]"  # INT96
+    assert sorted(first + ExtractJob(spark, out, num_buckets=4).run(pages_df)) == [0, 1, 2, 3]
+    _assert_converged(spark, out, pages_df.count())
+    assert spark.read.parquet(f"{out}/lineage").schema == LINEAGE_SCHEMA
+    assert {f.name: f.dataType for f in spark.read.parquet(f"{out}/metrics").schema} == {
+        f.name: f.dataType for f in METRICS_SCHEMA
+    }
+
+
+def test_lineage_keeps_sub_second_timings(spark, pages_df, tmp_path, monkeypatch):
+    # a commit group shorter than a second records its real duration, not 0
+    import types
+
+    import manga_ocr_spark.jobs.extract as X
+
+    clock = iter([1700000000.125, 1700000000.625])
+    monkeypatch.setattr(X, "time", types.SimpleNamespace(time=lambda: next(clock)))
+    out = str(tmp_path / "out")
+    ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages_df, max_groups=1)
+    got = spark.read.parquet(f"{out}/lineage").select(
+        F.unix_micros("t_start").alias("s"), F.unix_micros("t_end").alias("e")
+    ).collect()
+    assert {(r.s, r.e) for r in got} == {(1700000000125000, 1700000000625000)}
 
 
 def test_lineage_timestamps_are_utc_instants_in_any_driver_tz(

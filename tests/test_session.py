@@ -1,5 +1,5 @@
 """jobs/session.py: get_spark's master resolution and heap sizing, and the
-Arrow-built driver frame helper.
+driver's parquet file writer.
 
 Under spark-submit the launcher's --master must win: builder.master() is
 only called when a master was explicitly passed or when running
@@ -19,12 +19,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import (
-    _default_driver_memory,
-    _resolve_master,
-    arrow_frame,
-    default_cpus,
-)
+from manga_ocr_spark.jobs.session import _default_driver_memory, _resolve_master, default_cpus
 
 GB = 1 << 30
 
@@ -73,35 +68,25 @@ SCHEMA = StructType(
 )
 
 
-def _plans_python_rdd(df) -> bool:
-    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
-
-
-def test_arrow_frame_keeps_schema_and_starts_no_python_workers(spark):
+def test_write_parquet_reads_back_in_spark_types(spark, tmp_path):
+    # a driver-written file reads back with the schema's Spark types:
+    # TimestampType (not TIMESTAMP_NTZ), a naive datetime as UTC wall
+    # time; empty rows still carry the schema; replace swaps the dir
     import datetime as dt
+    import os
 
+    from manga_ocr_spark.jobs.session import write_parquet
+
+    out = str(tmp_path / "t")
     rows = [("a", 1, None, dt.datetime(2023, 11, 14, 22, 13, 20)), ("b", 2, 3, None)]
-    df = arrow_frame(spark, rows, SCHEMA)
-    assert df.schema == SCHEMA
-    assert not _plans_python_rdd(df)
-    # the list path this helper replaces DOES plan a PythonRDD
-    assert _plans_python_rdd(spark.createDataFrame(rows, SCHEMA))
-    got = df.select("name", "n", "band", F.unix_timestamp("ts").alias("ts")).collect()
-    # naive datetimes are UTC wall time
-    assert [tuple(r) for r in got] == [("a", 1, None, 1700000000), ("b", 2, 3, None)]
-
-
-def test_arrow_frame_is_one_partition(spark):
-    # a LocalRelation scans in min(rows, default.parallelism) tasks; a
-    # driver-built frame of a few rows must write in one task
-    rows = [(str(i), i, i, None) for i in range(20)]
-    assert arrow_frame(spark, rows, SCHEMA).rdd.getNumPartitions() == 1
-
-
-def test_arrow_frame_empty_rows_write_a_typed_frame(spark, tmp_path):
-    df = arrow_frame(spark, [], SCHEMA)
-    assert df.schema == SCHEMA and df.count() == 0
-    out = str(tmp_path / "empty")
-    df.write.parquet(out)
+    write_parquet(spark, out, rows, SCHEMA)
+    write_parquet(spark, out, [], SCHEMA)
     back = spark.read.parquet(out)
-    assert back.schema == SCHEMA and back.count() == 0
+    assert back.schema == SCHEMA
+    got = back.select("name", "n", "band", F.unix_timestamp("ts").alias("ts")).collect()
+    assert sorted(tuple(r) for r in got) == [("a", 1, None, 1700000000), ("b", 2, 3, None)]
+    write_parquet(spark, out, [], SCHEMA, replace=True)
+    assert spark.read.parquet(out).count() == 0
+    # published by a rename: one part file, and no tmp file left behind
+    names = os.listdir(out)
+    assert [n[:5] for n in names if not n.endswith(".crc")] == ["part-"], names

@@ -12,7 +12,7 @@ import random
 import pytest
 from pyspark.sql import Row
 
-from manga_ocr_spark.jobs import upsert as U
+from manga_ocr_spark.jobs import session as S, upsert as U
 from manga_ocr_spark.jobs.upsert import merge_upsert, recover_staging
 from tests.test_resume import _job_tasks
 from tests.test_upsert import _live_files, _write_table
@@ -34,8 +34,9 @@ BOUNDARIES = [
 
 
 def _inject_crash(monkeypatch, boundary: str, table: str, staging: str) -> None:
-    """Make the commit's FS calls raise Crash at ``boundary``."""
-    real_delete, real_rename = U._delete, U._rename
+    """Make the commit's FS calls raise Crash at ``boundary``. The
+    manifest is published by ``session.write_file``'s own rename."""
+    real_delete, real_rename = U.delete_path, U.rename_path
     renamed: list[str] = []
 
     def delete(spark, path):
@@ -63,8 +64,9 @@ def _inject_crash(monkeypatch, boundary: str, table: str, staging: str) -> None:
             if boundary == "after_last_rename" and not glob.glob(f"{staging}/bucket=*"):
                 raise Crash(boundary)
 
-    monkeypatch.setattr(U, "_delete", delete)
-    monkeypatch.setattr(U, "_rename", rename)
+    monkeypatch.setattr(U, "delete_path", delete)
+    monkeypatch.setattr(U, "rename_path", rename)
+    monkeypatch.setattr(S, "rename_path", rename)
 
 
 def _table(spark, path: str) -> dict[str, str]:
