@@ -11,11 +11,9 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
 
 - The *only* wide operation in the hot path is the salt repartition, and it
   exists to break host skew; everything else is embarrassingly parallel
-  map work. Metrics/lineage aggregate from a column-pruned re-read of the
-  COMMITTED extracted parquet (never the html or extracted_text columns,
-  never a persist of text-bearing rows — caching GB-scale rows GC-stalls
-  the JVM).
-- Column pruning matters: metrics-only readers never touch ``html``.
+  map work. The extraction tasks sum metrics/lineage per Arrow batch into
+  a Spark accumulator keyed by (bucket, lang): nothing reads extracted/
+  back, and no text-bearing row is persisted (GC-stalls the JVM).
 - Bucketing: rows are assigned a stable ``bucket = pmod(xxhash64(url), B)``.
   Buckets are the unit of commit and resume (lineage anti-join, X8/O5): a
   restarted job recomputes only buckets without a committed lineage row.
@@ -27,22 +25,18 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
 - The Arrow UDF uses the iterator form: per-task init happens once before
   the batch loop (the reference's load-model-once pattern, ocr.py:59-79 /
   SURVEY.md §4 X1), then every Arrow batch reuses it.
-- The extraction ``mapInArrow`` tasks are the ONLY Python tasks of a
-  commit group, and its only Spark writes: the KB-scale metrics and
-  lineage rows already sit on the driver, which writes them as pyarrow
+- The driver writes the KB-scale metrics and lineage rows as pyarrow
   parquet files through the Hadoop FS (``session.write_parquet``) and
   reads lineage back the same way, with no Spark job.
 
-Spark jobs per commit group (pinned by tests/test_resume.py; every job
-and task has a fixed cost that can exceed the extraction's own):
-
-  1. write extracted/ — the extraction tasks: ``ceil(n_in * |group| / B)``
-     of them for an input of ``n_in`` partitions (``_group_width``), not
-     one per input split; a salted run hash-partitions on url first (a
-     map-stage job of ``n_in`` tasks), then writes in
-     ``ceil(P * |group| / B)`` tasks;
-  2. the stats aggregate's shuffle-map stage (AQE runs it as its own job);
-  3. the aggregate's result stage, collected to the driver.
+A commit group runs ONE Spark job, the write of extracted/ (pinned by
+tests/test_resume.py; every job and task has a fixed cost that can exceed
+the extraction's own), in ``ceil(n_in * |group| / B)`` extraction tasks
+for an input of ``n_in`` partitions (``_group_width``), not one per input
+split; a salted run first hash-partitions on url in a map-stage job. The
+UDF stays in the write's result stage (pinned by tests/test_plans.py):
+Spark applies a result task's accumulator update once, from its
+successful attempt, but re-applies a shuffle-map task's on a stage re-run.
 """
 
 from __future__ import annotations
@@ -50,6 +44,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -64,7 +59,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from manga_ocr_spark.jobs.session import hadoop_fs, read_file, write_file, write_parquet
+from manga_ocr_spark.jobs.session import hadoop_fs, listing, read_file, write_file, write_parquet
 
 PAGES_SCHEMA = StructType(
     [
@@ -88,11 +83,9 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-# the layout the stats scan reads back: a schema-less read runs a footer job
+# the UDF's output for a bucketed input (ExtractJob's groups): the bucket
+# rides through, keying both the partitioned write and the stats
 STATS_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [StructField("bucket", IntegerType())])
-
-# the stats scan's columns: all but the text (a row has text iff n_blocks_kept > 0)
-STATS_COLUMNS = ["bucket", "lang", "n_blocks_kept", "n_blocks_dropped", "bytes_in"]
 
 # K6 debug side output (SURVEY.md §1.4 block schema; the reference dumps
 # per-sample params+HTML the same way, run_generate.py:64-80): one struct
@@ -170,7 +163,35 @@ def _blocks_to_py(blocks) -> list[dict]:
     ]
 
 
-def _make_extract_map(debug_blocks: bool = False):
+class _BucketLangSums(AccumulatorParam):
+    """Accumulator of {(bucket, lang): [blocks kept, blocks dropped, rows,
+    rows with text, bytes_in]}, merged key by key: a commit group's
+    metrics and lineage counts, summed by its extraction tasks."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        for k, v in b.items():
+            a[k] = [x + y for x, y in zip(a.get(k, (0,) * len(v)), v)]
+        return a
+
+
+def _batch_sums(batch) -> dict:
+    """One bucketed output batch's _BucketLangSums update: a vectorized
+    pyarrow group-by, no per-row Python."""
+    import pyarrow as pa
+
+    g = pa.Table.from_batches([batch]).group_by(["bucket", "lang"], use_threads=False).aggregate(
+        [("n_blocks_kept", "sum"), ("n_blocks_dropped", "sum"), ([], "count_all"),
+         ("extracted_text", "count"), ("bytes_in", "sum")]  # count: non-null only
+    )
+    keys = zip(g.column("bucket").to_pylist(), g.column("lang").to_pylist())
+    sums = zip(*(c.to_pylist() for c in g.drop_columns(["bucket", "lang"]).columns))
+    return {k: list(v) for k, v in zip(keys, sums)}
+
+
+def _make_extract_map(out_schema: StructType, sums=None):
     """mapInArrow body factory. Iterator form: one-time init above the loop.
 
     Arrow RecordBatches end-to-end: the html binaries come straight off the
@@ -189,16 +210,16 @@ def _make_extract_map(debug_blocks: bool = False):
     the input (``_group_width``) so that floor is paid per input split's
     worth of rows, not per fragment of one.
 
-    ``debug_blocks``: emit the per-block K6 debug column (every scored
-    block with its features and keep decision). Debug tier only — the
-    blocks array re-ships every block's text, so the hot path keeps it
-    off and the schema identical to EXTRACTED_SCHEMA.
+    ``out_schema`` is ``extract_pages``'s: a ``blocks`` field emits the
+    K6 debug column, a ``bucket`` field passes the input's through, and
+    each output batch adds its ``_batch_sums`` to the ``sums`` accumulator.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     block_type = to_arrow_type(ArrayType(BLOCK_STRUCT))
-    out_schema = EXTRACTED_DEBUG_SCHEMA if debug_blocks else EXTRACTED_SCHEMA
+    debug_blocks = "blocks" in out_schema.names
+    bucketed = "bucket" in out_schema.names
 
     def _extract_map(batches):
         from manga_ocr_spark.extraction.core import extract
@@ -230,9 +251,12 @@ def _make_extract_map(debug_blocks: bool = False):
             ]
             if debug_blocks:
                 arrays.append(pa.array(blocks_col, block_type))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in out_schema.fields]
-            )
+            if bucketed:
+                arrays.append(batch.column("bucket"))
+            out = pa.RecordBatch.from_arrays(arrays, names=out_schema.names)
+            if sums is not None:
+                sums.add(_batch_sums(out))
+            yield out
 
     return _extract_map
 
@@ -284,7 +308,7 @@ def _group_width(total: int, group_size: int, num_buckets: int) -> int:
 
 
 def extract_pages(
-    df: DataFrame, salt_partitions: int | None = None, debug_blocks: bool = False
+    df: DataFrame, salt_partitions: int | None = None, debug_blocks: bool = False, sums=None
 ) -> DataFrame:
     """pages DF -> extracted DF (url, warc_ts, extracted_text, counters...).
 
@@ -299,17 +323,24 @@ def extract_pages(
     reference's per-sample debug params dump (run_generate.py:64-80).
     OFF by default: the debug column re-ships all block text, so the hot
     path's output schema and Arrow volume are unchanged (plan-pinned).
+
+    A ``bucket`` column on ``df`` rides through the UDF as the last
+    column, and the ``_BucketLangSums`` accumulator ``sums`` (bucketed
+    input only) receives each batch's per-(bucket, lang) counts.
     """
+    bucket = ["bucket"] if "bucket" in df.columns else []
     df = df.filter(F.col("html").isNotNull())
     # column-prune BEFORE the UDF boundary: the WET `text` column is as
     # large as `html` and unused by extraction — shipping it through Arrow
     # would double the bytes crossing the JVM->python boundary (and the
     # parquet scan). Catalyst prunes the scan from this select.
-    df = df.select("url", "warc_ts", "html", "lang")
+    df = df.select("url", "warc_ts", "html", "lang", *bucket)
     if salt_partitions:
         df = df.repartition(salt_partitions, "url")
     schema = EXTRACTED_DEBUG_SCHEMA if debug_blocks else EXTRACTED_SCHEMA
-    return df.mapInArrow(_make_extract_map(debug_blocks), schema)
+    if bucket:
+        schema = StructType(schema.fields + [STATS_SCHEMA["bucket"]])
+    return df.mapInArrow(_make_extract_map(schema, sums), schema)
 
 
 @dataclass
@@ -344,46 +375,29 @@ class ExtractJob:
         surface, because silently answering set() here would recompute
         and overwrite every bucket (this is the resume correctness
         boundary). The driver reads it with pyarrow, running no Spark
-        job: every file directly under lineage/ but the ``_``/``.`` names
-        Spark's reader skips too (committer markers, tmp files,
-        checksums), and of each file only ``partition_id`` and
-        ``status``. A file without either column, or with a null in one,
-        is not lineage and raises. An empty or marker-only dir, left by a
-        kill during the first lineage write, holds no rows. The dir's
-        existence is probed first, so a fresh start reads nothing and
-        raises nothing."""
+        job: of each file ``session.listing`` shows under lineage/, only
+        ``partition_id`` and ``status``. A file without either column, or
+        with a null in one, is not lineage and raises. An empty or
+        marker-only dir, left by a kill during the first lineage write,
+        holds no rows, and a missing one lists as empty."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         path = f"{self.out_dir}/lineage"
-        fs, p = hadoop_fs(self.spark, path)
-        if not fs.exists(p):
-            return set()
         done: set[int] = set()
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isFile() and name[0] not in "_.":
-                data = pa.BufferReader(read_file(self.spark, f"{path}/{name}"))
-                pids, status = pq.read_table(data, columns=["partition_id", "status"]).columns
-                if pids.null_count or status.null_count:
-                    raise ValueError(
-                        f"{path}/{name} holds rows without partition_id or status: "
-                        "not readable as lineage"
-                    )
-                rows = zip(pids.to_pylist(), status.to_pylist())
-                done |= {int(pid.split("=", 1)[1]) for pid, s in rows if s == "ok"}
+        for name, length in listing(self.spark, path).items():
+            if length is None:  # a directory
+                continue
+            data = pa.BufferReader(read_file(self.spark, f"{path}/{name}"))
+            pids, status = pq.read_table(data, columns=["partition_id", "status"]).columns
+            if pids.null_count or status.null_count:
+                raise ValueError(
+                    f"{path}/{name} holds rows without partition_id or status: "
+                    "not readable as lineage"
+                )
+            rows = zip(pids.to_pylist(), status.to_pylist())
+            done |= {int(pid.split("=", 1)[1]) for pid, s in rows if s == "ok"}
         return done
-
-    def stats_scan(self, buckets: list[int]) -> DataFrame:
-        """Pruned re-read of committed extracted/ partitions: partition-
-        pruned to ``buckets``, column-pruned to STATS_COLUMNS — the
-        extracted_text column is never read by metrics/lineage."""
-        return (
-            self.spark.read.schema(STATS_SCHEMA)
-            .parquet(f"{self.out_dir}/extracted")
-            .filter(F.col("bucket").isin(buckets))
-            .select(*STATS_COLUMNS)
-        )
 
     def run(self, pages: DataFrame, max_groups: int | None = None) -> list[int]:
         """Extract all not-yet-committed buckets. Returns buckets committed
@@ -419,15 +433,9 @@ class ExtractJob:
                 width = _group_width(n_in, len(group), self.num_buckets)
                 if width < n_in:
                     sub = sub.coalesce(width)
-            ext = extract_pages(sub, salt_partitions=salt)
-            ext = with_bucket(ext, self.num_buckets)
-            # Scale-safe sink pattern: write extracted/ FIRST, then derive
-            # metrics+lineage from a column-pruned re-read of the committed
-            # parquet. A persist() of the full extracted rows (text
-            # included) would pin GBs of deserialized row objects per
-            # group — the resulting GC pressure serializes the JVM at high
-            # core counts (CLAUDE.md). One extra pruned scan of THIS
-            # group's partitions beats caching text.
+            # the extraction tasks sum the stats: nothing reads extracted/ back
+            sums = self.spark.sparkContext.accumulator({}, _BucketLangSums())
+            ext = extract_pages(sub, salt_partitions=salt, sums=sums)
             # dynamic partition overwrite: each bucket belongs to exactly
             # one group, so re-running an uncommitted group REPLACES its
             # partial partitions instead of appending duplicates — the
@@ -440,31 +448,12 @@ class ExtractJob:
                 .partitionBy("bucket")
                 .parquet(f"{self.out_dir}/extracted")
             )
-            # ONE pruned scan of the just-committed partitions feeds both
-            # metrics and lineage; per-(bucket, lang) rows are KB-scale
-            per_bl = (
-                self.stats_scan(group)
-                .groupBy("bucket", "lang")
-                .agg(
-                    F.sum("n_blocks_kept").alias("blocks_kept"),
-                    F.sum("n_blocks_dropped").alias("blocks_dropped"),
-                    F.count("*").alias("count"),
-                    F.count_if(F.col("n_blocks_kept") > 0).alias("output_rows"),
-                    F.sum("bytes_in").alias("bytes_in"),
-                )
-                .collect()
-            )
+            # every result task of the write has reported, each once
             metrics_rows: dict[int, list[tuple]] = {}
             stats: dict[int, list[int]] = {}
-            for r in per_bl:
-                b = int(r["bucket"])
-                metrics_rows.setdefault(b, []).append(
-                    (r["lang"], int(r["blocks_kept"]), int(r["blocks_dropped"]), int(r["count"]))
-                )
-                s = stats.setdefault(b, [0, 0, 0])
-                s[0] += int(r["count"])
-                s[1] += int(r["output_rows"])
-                s[2] += int(r["bytes_in"])
+            for (b, lang), (kept, dropped, n, with_text, nbytes) in sums.value.items():
+                metrics_rows.setdefault(b, []).append((lang, kept, dropped, n))
+                stats[b] = [x + y for x, y in zip(stats.get(b, (0, 0, 0)), (n, with_text, nbytes))]
             # each bucket's rows replace its metrics partition dir, named
             # as Spark's partitionBy names it (``=`` in a value is %3D)
             for b, rows in sorted(metrics_rows.items()):

@@ -108,6 +108,17 @@ def hadoop_fs(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
+def listing(spark: SparkSession, path: str) -> dict[str, int | None]:
+    """{name: length, None for a directory} of the entries directly under
+    ``path``, but the ``_``/``.`` names Spark's reader skips too (markers,
+    tmp files, checksums, manifests); empty if ``path`` is absent."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return {}
+    named = [(st.getPath().getName(), st) for st in fs.listStatus(p)]
+    return {n: st.getLen() if st.isFile() else None for n, st in named if n[0] not in "_."}
+
+
 def read_file(spark: SparkSession, path: str) -> bytes | None:
     """The bytes of the file at ``path``; None if it is absent."""
     fs, p = hadoop_fs(spark, path)

@@ -31,7 +31,14 @@ import json
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from manga_ocr_spark.jobs.extract import pin_num_buckets, with_bucket
-from manga_ocr_spark.jobs.session import delete_path, hadoop_fs, read_file, rename_path, write_file
+from manga_ocr_spark.jobs.session import (
+    delete_path,
+    hadoop_fs,
+    listing,
+    read_file,
+    rename_path,
+    write_file,
+)
 
 
 MANIFEST = "_manifest.json"
@@ -42,20 +49,9 @@ def _exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(p)
 
 
-def _listing(spark: SparkSession, path: str) -> dict[str, int | None]:
-    """{name: length, None for a directory} of the entries directly under
-    ``path``, skipping ``_``/``.`` names (markers, checksums, manifest);
-    empty if ``path`` is absent."""
-    fs, p = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return {}
-    named = [(st.getPath().getName(), st) for st in fs.listStatus(p)]
-    return {n: st.getLen() if st.isFile() else None for n, st in named if n[0] not in "_."}
-
-
 def _staged_manifest(spark: SparkSession, staging: str) -> dict[str, dict[str, int]]:
     """{``bucket=b``: {data-file name: length}} of the staged buckets."""
-    return {b: _listing(spark, f"{staging}/{b}") for b in _listing(spark, staging)}
+    return {b: listing(spark, f"{staging}/{b}") for b in listing(spark, staging)}
 
 
 def _read_manifest(spark: SparkSession, staging: str) -> dict | None:
@@ -147,11 +143,11 @@ def merge_upsert(
     order = "warc_ts" if "warc_ts" in updates.columns else "url"
     updates = with_bucket(latest_wins(updates, ["url"], order), num_buckets)
     _stage(updates, "overwrite", staging)
-    touched = _listing(spark, staging)
+    touched = listing(spark, staging)
     if not touched:
         delete_path(spark, staging)
         return []
-    live = _listing(spark, table_dir)
+    live = listing(spark, table_dir)
     live_touched = [f"{table_dir}/{b}" for b in touched if b in live]
     if live_touched:
         read = spark.read.schema(updates.schema)
@@ -176,7 +172,7 @@ def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
         write_file(spark, f"{staging}/{MANIFEST}", json.dumps(manifest, sort_keys=True).encode())
     fs, p = hadoop_fs(spark, table_dir)
     fs.mkdirs(p)
-    staged = _listing(spark, staging)
+    staged = listing(spark, staging)
     for b in sorted(manifest):
         if b in staged:
             delete_path(spark, f"{table_dir}/{b}")
@@ -191,7 +187,7 @@ def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) 
     the next recovery (an unverified drop would turn a loud commit
     failure into silent row loss)."""
     manifest = _read_manifest(spark, staging) or _staged_manifest(spark, staging)
-    bad = sorted(b for b in manifest if _listing(spark, f"{table_dir}/{b}") != manifest[b])
+    bad = sorted(b for b in manifest if listing(spark, f"{table_dir}/{b}") != manifest[b])
     if bad:
         raise RuntimeError(
             f"merge_upsert commit verification failed: live buckets {bad} differ from "

@@ -89,6 +89,37 @@ def test_extraction_prunes_wet_text_column(spark):
         assert map_line.count("text") == 1  # only extracted_text output, no input text
 
 
+class _Stop(Exception):
+    pass
+
+
+@pytest.mark.parametrize("salt", [None, 8])
+def test_commit_group_keeps_the_udf_in_the_write_result_stage(spark, tmp_path, monkeypatch, salt):
+    # the extraction tasks sum a group's stats into an accumulator, and
+    # Spark re-applies a shuffle-map task's accumulator update when its
+    # stage re-runs (a result task's, once): no Exchange may sit above
+    # MapInArrow in the frame ExtractJob writes
+    import manga_ocr_spark.jobs.extract as X
+    from manga_ocr_spark.jobs.pages_from_docs import pages_from_documents
+
+    pages = pages_from_documents(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+    real, frames = X.extract_pages, []
+
+    def capture(*args, **kwargs):
+        frames.append(real(*args, **kwargs))
+        raise _Stop  # before the write: the plan is all this test needs
+
+    monkeypatch.setattr(X, "extract_pages", capture)
+    job = X.ExtractJob(spark, str(tmp_path / "out"), num_buckets=4, commit_group_size=2,
+                       salt_partitions=salt)
+    with pytest.raises(_Stop):
+        job.run(pages)
+    lines = _plan(frames[0]).splitlines()
+    udf = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    assert not any("Exchange" in ln for ln in lines[:udf]), lines
+    assert sum("Exchange" in ln for ln in lines) == (1 if salt else 0)
+
+
 def test_exact_dedup_semi_join_broadcasts(spark):
     from manga_ocr_spark.operators.dedup import exact_dedup
 

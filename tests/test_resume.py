@@ -82,20 +82,6 @@ def test_metrics_written_per_bucket_lang(spark, pages_df, tmp_path):
     assert bytes_total == expected
 
 
-def test_stats_scan_never_reads_text(spark, pages_df, tmp_path):
-    # metrics/lineage derive from a pruned re-read of the committed
-    # parquet: the scan's ReadSchema must exclude extracted_text (at
-    # 100 TB that column IS the table) and prune partitions on bucket
-    out = str(tmp_path / "out")
-    job = ExtractJob(spark, out, num_buckets=4, commit_group_size=4)
-    job.run(pages_df)
-    plan = job.stats_scan([0, 1])._jdf.queryExecution().executedPlan().toString()
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "extracted_text" not in read_schema
-    assert "n_blocks_kept" in read_schema
-    assert "PartitionFilters: [" in plan
-
-
 def test_mid_group_kill_overwrite_is_idempotent(spark, pages_df, tmp_path):
     # simulate a kill AFTER the extracted write but BEFORE the lineage
     # commit: the bucket's parquet files exist with no lineage row — the
@@ -246,10 +232,10 @@ def _clear_job_group(spark) -> None:
 
 def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
     # the fixed Spark cost of a commit group is its job and task count:
-    # the stats re-read carries its schema (no footer-inference job), and
-    # the driver writes metrics/ and lineage/ and reads lineage back
-    # itself, so a group runs the extraction write and the stats
-    # aggregate's two stages only, and a rerun's lineage read none
+    # the extraction tasks sum the stats (nothing reads extracted/ back),
+    # and the driver writes metrics/ and lineage/ and reads lineage back
+    # itself, so a group runs the extraction write only, and a rerun's
+    # lineage read no job
     sc = spark.sparkContext
     tag = f"budget-{tmp_path.name}"
     groups = _job_group_per_commit_group(spark, monkeypatch, tag)
@@ -263,7 +249,7 @@ def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
     assert len(groups) == 2
     for g in groups:
         tasks = _job_tasks(spark, g)
-        assert len(tasks) == 3, (g, tasks)
+        assert len(tasks) == 1, (g, tasks)
     assert len(_job_tasks(spark, f"{tag}-rerun")) == 0
 
 
@@ -294,9 +280,9 @@ def test_commit_group_tasks_sized_to_its_share_of_the_input(
     finally:
         _clear_job_group(spark)
     assert len(groups) == 2
-    # the extraction write is the job before the stats aggregate's two;
-    # a salted group's shuffle precedes it
-    writes = [_job_tasks(spark, g)[-3] for g in groups]
+    # the extraction write is a group's last job; a salted group's
+    # shuffle precedes it
+    writes = [_job_tasks(spark, g)[-1] for g in groups]
     files = [len(glob.glob(f"{out}/extracted/bucket={b}/*.parquet")) for b in range(4)]
     if salt is None:
         width = math.ceil(n_in * 2 / 4)
@@ -340,10 +326,10 @@ def test_input_partitions_runs_no_job(spark, pages_df, tmp_path):
 
 
 def test_commit_outputs_match_a_direct_aggregate(spark, pages_df, tmp_path):
-    # metrics and lineage values come from the committed parquet, read
-    # back with the job's schema: they must equal an aggregate of the
-    # extraction computed straight from the pages, and each group's
-    # driver-built lineage rows land in one file
+    # metrics and lineage values are summed by the extraction tasks as
+    # they write: they must equal an aggregate of the extraction computed
+    # straight from the pages, and each group's driver-built lineage rows
+    # land in one file
     import glob
 
     from manga_ocr_spark.jobs.extract import extract_pages, with_bucket
@@ -380,6 +366,75 @@ def test_commit_outputs_match_a_direct_aggregate(spark, pages_df, tmp_path):
         (f"bucket={k}", *v, "ok") for k, v in want_lineage.items()
     )
     assert len(glob.glob(f"{out}/lineage/part-*.parquet")) == 2
+
+
+# A child process of its own: the shared local[4] session allows one task
+# failure, so it never retries a task. Every extraction task raises on its
+# first attempt, after adding its batches' sums to the group's accumulator.
+_RETRY_CHILD = r"""
+import json, sys
+
+from pyspark import TaskContext
+
+import manga_ocr_spark.jobs.extract as X
+from manga_ocr_spark.jobs.session import get_spark
+
+out = sys.argv[1]
+spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+real = X._make_extract_map
+
+
+def first_attempt_fails(schema, sums=None):
+    body = real(schema, sums)
+
+    def run(batches):
+        yield from body(batches)
+        if TaskContext.get().attemptNumber() == 0:
+            raise RuntimeError("a first attempt fails after adding its sums")
+
+    return run
+
+
+X._make_extract_map = first_attempt_fails
+pages = spark.range(10000, numPartitions=4).selectExpr(
+    "concat('https://x/', id) AS url",
+    "timestamp'2024-03-01 00:00:00' AS warc_ts",
+    "encode(concat('<html><body><p>page text ', id, '</p></body></html>'), 'UTF-8') AS html",
+    "'' AS text",
+    "IF(id % 3 = 0, 'en', 'de') AS lang",
+)
+X.ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages)
+lineage = spark.read.parquet(f"{out}/lineage").selectExpr("sum(input_rows)", "sum(bytes_in)")
+print(json.dumps({
+    "written": spark.read.parquet(f"{out}/extracted").count(),
+    "metrics": spark.read.parquet(f"{out}/metrics").selectExpr("sum(count)").first()[0],
+    "lineage": list(lineage.first()),
+    "bytes": pages.selectExpr("sum(length(html))").first()[0],
+}))
+"""
+
+
+def test_a_retried_task_is_counted_once(tmp_path):
+    # Spark applies a result task's accumulator update once, from its
+    # successful attempt only: the failed first attempts' sums are dropped
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_CHILD, str(tmp_path / "out")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["written"] == 10000
+    assert got["metrics"] == 10000
+    assert got["lineage"] == [10000, got["bytes"]]
 
 
 def test_side_tables_and_lineage_read_run_no_spark_job(spark, pages_df, tmp_path, monkeypatch):
