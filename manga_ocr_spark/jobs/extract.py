@@ -21,7 +21,7 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
   ``(days(warc_ts), bucket(url))``; here the extracted output is parquet
   ``partitionBy(bucket)`` with identical url-bucket semantics.
 - Both writers of ``extracted/`` (``ExtractJob``, upsert.merge_upsert) share
-  ``EXTRACTED_SCHEMA``, ``partitionBy(bucket)`` by ``with_bucket`` and ``pin_num_buckets``.
+  ``EXTRACTED_SCHEMA``, ``partitionBy(bucket)`` by ``with_bucket`` and ``table_buckets``.
 - The Arrow UDF uses the iterator form: per-task init happens once before
   the batch loop (the reference's load-model-once pattern, ocr.py:59-79 /
   SURVEY.md §4 X1), then every Arrow batch reuses it.
@@ -60,6 +60,8 @@ from pyspark.sql.types import (
 )
 
 from manga_ocr_spark.jobs.session import hadoop_fs, listing, read_file, write_file, write_parquet
+
+NUM_BUCKETS = 16  # a new extracted/ table's bucket count, unless its writer names one
 
 PAGES_SCHEMA = StructType(
     [
@@ -268,24 +270,30 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def pin_num_buckets(spark: SparkSession, table_dir: str, num_buckets: int) -> None:
-    """Pin ``num_buckets`` to the table at ``table_dir``, for both its
-    writers: under another count a bucket id names other urls, so a resume
-    would read lineage as done and a merge would put a url in two buckets.
-    The table's creator records its count in ``{table_dir}/_buckets``;
-    another count raises ValueError before any write. A table that exists
-    without the marker has an unknown count and stays unpinned."""
+def table_buckets(spark: SparkSession, table_dir: str, num_buckets: int | None = None) -> int:
+    """The bucket count both writers of the table at ``table_dir`` use:
+    under another count a bucket id names other urls, so a resume would
+    read lineage as done and a merge would put a url in two buckets. The
+    ``{table_dir}/_buckets`` marker decides, and a named count that
+    disagrees raises ValueError before any write. A write that creates the
+    table records ``num_buckets``, or ``NUM_BUCKETS`` when it is None; a
+    table that exists without the marker uses that count, unrecorded."""
+    if num_buckets is not None and num_buckets < 1:
+        raise ValueError(f"num_buckets must be at least 1, got {num_buckets}")
     marker = f"{table_dir}/_buckets"
     recorded = read_file(spark, marker)
     if recorded is None:
+        num_buckets = NUM_BUCKETS if num_buckets is None else num_buckets
         fs, p = hadoop_fs(spark, table_dir)
         if not fs.exists(p):
             write_file(spark, marker, str(num_buckets).encode())
-    elif int(recorded) != num_buckets:
+        return num_buckets
+    if num_buckets not in (None, int(recorded)):
         raise ValueError(
             f"{table_dir} holds output of num_buckets={int(recorded)}, "
             f"but this write has num_buckets={num_buckets}"
         )
+    return int(recorded)
 
 
 def input_partitions(df: DataFrame) -> int | None:
@@ -349,7 +357,7 @@ class ExtractJob:
 
     Layout under ``out_dir``:
       extracted/  parquet, partitionBy(bucket) — final per-url text
-      extracted/_buckets  its bucket count (``pin_num_buckets``)
+      extracted/_buckets  its bucket count (``table_buckets``)
       metrics/    parquet — per (bucket, lang): blocks kept/dropped, counts
       lineage/    parquet — one row per committed bucket (FIXTURES.md §3)
 
@@ -362,10 +370,10 @@ class ExtractJob:
 
     spark: SparkSession
     out_dir: str
-    num_buckets: int = 16
+    num_buckets: int | None = None
     commit_group_size: int = 8
     # whole-input salt width: each commit group hash-partitions on url to
-    # its share of it, ceil(P * |group| / num_buckets), never to P itself
+    # its share of it, ceil(P * |group| / B), never to P itself
     salt_partitions: int | None = None
 
     def committed_buckets(self) -> set[int]:
@@ -402,8 +410,8 @@ class ExtractJob:
     def run(self, pages: DataFrame, max_groups: int | None = None) -> list[int]:
         """Extract all not-yet-committed buckets. Returns buckets committed
         this run. ``max_groups`` caps commit groups (used by the resume test
-        to simulate a mid-run kill). Raises ValueError when ``out_dir``
-        holds output of another ``num_buckets``.
+        to simulate a mid-run kill). Raises ValueError, before it writes, on
+        a count below 1 or when ``out_dir`` holds another ``num_buckets``'s output.
 
         A filter on the computed ``bucket`` keeps the scan's partition
         count, so each group's extraction stage would run one Python task
@@ -411,11 +419,13 @@ class ExtractJob:
         is coalesced (no shuffle) to its share of the input's ``n_in``
         partitions instead; ``n_in`` is read once, without a Spark job,
         and an input whose count needs one keeps the scan's width."""
-        pin_num_buckets(self.spark, f"{self.out_dir}/extracted", self.num_buckets)
+        if self.commit_group_size < 1:
+            raise ValueError(f"commit_group_size must be at least 1, got {self.commit_group_size}")
+        num_buckets = table_buckets(self.spark, f"{self.out_dir}/extracted", self.num_buckets)
         n_in = None if self.salt_partitions else input_partitions(pages)
-        pages = with_bucket(pages, self.num_buckets)
+        pages = with_bucket(pages, num_buckets)
         done = self.committed_buckets()
-        todo = [b for b in range(self.num_buckets) if b not in done]
+        todo = [b for b in range(num_buckets) if b not in done]
         groups = [
             todo[i : i + self.commit_group_size]
             for i in range(0, len(todo), self.commit_group_size)
@@ -428,9 +438,9 @@ class ExtractJob:
             sub = pages.filter(F.col("bucket").isin(group))
             salt = None
             if self.salt_partitions:
-                salt = _group_width(self.salt_partitions, len(group), self.num_buckets)
+                salt = _group_width(self.salt_partitions, len(group), num_buckets)
             elif n_in is not None:
-                width = _group_width(n_in, len(group), self.num_buckets)
+                width = _group_width(n_in, len(group), num_buckets)
                 if width < n_in:
                     sub = sub.coalesce(width)
             # the extraction tasks sum the stats: nothing reads extracted/ back

@@ -33,7 +33,8 @@ def main() -> None:
     p = argparse.ArgumentParser(description="main-content extraction over a pages table")
     p.add_argument("--input", required=True, help="pages parquet dir (url, warc_ts, html, text, lang)")
     p.add_argument("--output", required=True, help="output dir (extracted/ metrics/ lineage/)")
-    p.add_argument("--buckets", type=int, default=16, help="commit/resume buckets (2048 at scale)")
+    p.add_argument("--buckets", type=int, default=None, help="commit/resume buckets of a new output "
+                   "(default jobs.extract.NUM_BUCKETS, 2048 at scale); an output keeps its recorded count")
     p.add_argument("--commit-group", type=int, default=8, help="buckets per lineage commit")
     p.add_argument("--salt", type=int, default=None, help="salted repartition width over the whole input (skewed hosts); "
                    "each commit group uses its share, ceil(salt * group / buckets)")

@@ -30,7 +30,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from manga_ocr_spark.jobs.extract import pin_num_buckets, with_bucket
+from manga_ocr_spark.jobs.extract import table_buckets, with_bucket
 from manga_ocr_spark.jobs.session import (
     delete_path,
     hadoop_fs,
@@ -85,14 +85,14 @@ def latest_wins(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
 
 
 def merge_upsert(
-    spark: SparkSession, table_dir: str, updates: DataFrame, num_buckets: int
+    spark: SparkSession, table_dir: str, updates: DataFrame, num_buckets: int | None = None
 ) -> list[int]:
     """MERGE the ``updates`` rows into the parquet table at ``table_dir``,
     ``partitionBy("bucket")`` under jobs/extract.py::with_bucket's rule on
     url: matched urls are replaced, new urls inserted. The rows of
     ``updates`` give the table its columns. A missing table reads as an
-    empty one, so the first batch creates it and pins ``num_buckets`` to it
-    (``pin_num_buckets``; another count raises). Returns the rewritten buckets.
+    empty one, so the first batch creates it; ``table_buckets`` gives its
+    bucket count (another named count raises). Returns the rewritten buckets.
 
     ``updates`` is evaluated once: reduced to one row per url (the latest
     ``warc_ts``; a batch can hold a page's save and its re-save; ties, or a
@@ -102,9 +102,9 @@ def merge_upsert(
     exist live are appended beside it (Spark cannot overwrite a path it is
     lazily reading from); the rest of the table is untouched. A corrupt
     live bucket fails the append, before any commit step. Cost scales
-    with the touched buckets only while ``num_buckets`` is well above a
+    with the touched buckets only while the bucket count B is well above a
     batch's url count: n urls miss a bucket with probability
-    ``(1 - 1/num_buckets) ** n``, ~5e-7 for 108 urls over 8 buckets.
+    ``(1 - 1/B) ** n``, ~0.1% for 108 urls over 16 buckets.
 
     Commit protocol — staging is the write-ahead copy, dropped only after
     the live table verifiably holds its files:
@@ -137,7 +137,7 @@ def merge_upsert(
     """
     staging = f"{table_dir}__staging_merge"
     recover_staging(spark, table_dir)
-    pin_num_buckets(spark, table_dir, num_buckets)
+    num_buckets = table_buckets(spark, table_dir, num_buckets)
 
     # without a crawl time the url itself orders the rows: the hash decides
     order = "warc_ts" if "warc_ts" in updates.columns else "url"

@@ -27,7 +27,7 @@ def run_upsert_stream(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    num_buckets: int = 8,
+    num_buckets: int | None = None,
     processing_time: str | None = None,
 ):
     """Watch ``input_dir`` for new parquet page files, extract them and
@@ -43,11 +43,10 @@ def run_upsert_stream(
     per url (latest warc_ts wins — a micro-batch can hold a page's
     original save AND its re-save), only the bucket partitions holding the
     batch's urls rewritten; the first batch finds no table and creates it.
-    That rewrite is a small share of the table only while ``num_buckets``
-    is well above a micro-batch's url count: at the default 8, a file of
-    ~100 urls touches every bucket, so each merge rewrites the whole table.
-    The table is ExtractJob's ``extracted/`` (one schema, layout and pinned
-    bucket count): another ``num_buckets`` fails the batch unwritten.
+    The table is ExtractJob's ``extracted/`` (one schema, layout and bucket
+    count): ``num_buckets`` None uses the table's recorded count (a new
+    table records ``NUM_BUCKETS``), and a named count that disagrees
+    fails the batch unwritten.
 
     Exactly-once across restarts: merge_upsert stages the merged buckets
     in one staging dir, marks it complete, and commits it through

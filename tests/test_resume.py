@@ -65,6 +65,29 @@ def test_resume_with_another_bucket_count_raises(spark, pages_df, tmp_path):
     assert spark.read.parquet(f"{out}/extracted").count() == pages_df.count()
 
 
+def test_resume_without_a_count_uses_the_recorded_one(spark, pages_df, tmp_path):
+    # the table owns its bucket count: a rerun that names none resumes
+    # under the recorded 4, not under the default
+    out = str(tmp_path / "out")
+    first = ExtractJob(spark, out, num_buckets=4, commit_group_size=2).run(pages_df, max_groups=1)
+    assert sorted(first) == [0, 1]
+    assert sorted(ExtractJob(spark, out).run(pages_df)) == [2, 3]
+    _assert_converged(spark, out, pages_df.count())
+
+
+@pytest.mark.parametrize(
+    "counts", [{"num_buckets": 0}, {"num_buckets": -1}, {"commit_group_size": 0}],
+    ids=["num_buckets=0", "num_buckets=-1", "commit_group_size=0"],
+)
+def test_a_count_below_one_raises_before_writing(spark, pages_df, tmp_path, counts):
+    # a count of 0 buckets would record 0 in extracted/_buckets and lock
+    # every later run out; 0 buckets per group cannot step through them
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="must be at least 1"):
+        ExtractJob(spark, str(out), **counts).run(pages_df)
+    assert not out.exists()
+
+
 def test_metrics_written_per_bucket_lang(spark, pages_df, tmp_path):
     out = str(tmp_path / "out")
     ExtractJob(spark, out, num_buckets=4, commit_group_size=4).run(pages_df)

@@ -166,6 +166,24 @@ def test_stream_into_an_extract_job_table_keeps_its_contract(spark, tmp_path):
         assert pq.read_schema(f).names == EXTRACTED_SCHEMA.names, f
 
 
+def test_default_stream_into_a_default_extract_job_table(spark, tmp_path):
+    # neither writer names a bucket count: the stream merges under the
+    # count the backfill recorded, so a re-saved url keeps one row
+    from manga_ocr_spark.jobs.extract import PAGES_SCHEMA, ExtractJob
+
+    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    pages = [_page(i, f"original body text number {i}") for i in range(10)]
+    ExtractJob(spark, outdir).run(spark.createDataFrame(pages, PAGES_SCHEMA))
+    _arrive(spark, [_page(3, "REVISED body text after edit", days=1)], indir)
+    q = run_upsert_stream(spark, indir, outdir, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    out = spark.read.parquet(f"{outdir}/extracted")
+    assert out.count() == 10 and out.select("url").distinct().count() == 10
+    (row,) = out.filter("url = 'https://x/3'").collect()
+    assert row.extracted_text == "REVISED body text after edit"
+
+
 def test_stream_with_another_bucket_count_fails_unwritten(spark, tmp_path):
     # the stream pins its bucket count to the table like ExtractJob does:
     # a restart with another count fails the batch before it writes
