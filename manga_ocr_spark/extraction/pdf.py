@@ -55,8 +55,9 @@ _DELIM = b"()<>[]{}/%"
 # rendered as a word space; -180 is the conventional extractor threshold
 TJ_SPACE_GAP = -180
 
-# per-stream decompression expansion cap: a small crafted Flate/LZW
-# stream can inflate to GBs; past this it is treated as corrupt
+# per-call decompression expansion cap, shared with sources/warc.py's
+# gzip members: a small crafted Flate/LZW stream or member can inflate
+# to GBs; past this it is treated as corrupt
 _INFLATE_CAP = 256 << 20
 
 

@@ -11,8 +11,9 @@ container has none, so the same semantics are emulated:
   enter the table: the first batch into a missing table is a merge with
   nothing to replace. The batch is reduced to one row per url and written
   once, into the one staging dir; the unchanged rows of the live buckets
-  it touches are appended beside it, and :func:`recover_staging` — the
-  only commit code — renames each staged bucket dir into the live table.
+  it touches are appended beside it, a manifest of the staged files
+  marks staging complete, and :func:`recover_staging` — the only commit
+  code — renames each staged bucket dir into the live table.
   Cost scales with |touched buckets|, never table size, while the bucket
   count is well above a batch's url count: at 2048 buckets over 100 TB,
   an update batch touching k buckets rewrites ~k/2048 of the table. Rename
@@ -44,11 +45,6 @@ from manga_ocr_spark.jobs.session import (
 MANIFEST = "_manifest.json"
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, p = hadoop_fs(spark, path)
-    return fs.exists(p)
-
-
 def _staged_manifest(spark: SparkSession, staging: str) -> dict[str, dict[str, int]]:
     """{``bucket=b``: {data-file name: length}} of the staged buckets."""
     return {b: listing(spark, f"{staging}/{b}") for b in listing(spark, staging)}
@@ -60,8 +56,8 @@ def _read_manifest(spark: SparkSession, staging: str) -> dict | None:
 
 
 def _stage(df: DataFrame, mode: str, staging: str) -> None:
-    """Write ``df`` into staging by bucket, leaving no ``_SUCCESS``:
-    merge_upsert marks staging complete itself, after its last write."""
+    """Write ``df`` into staging by bucket, leaving no ``_SUCCESS`` (two
+    files fewer per merge): the manifest marks staging complete."""
     (
         df.write.mode(mode)
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -109,20 +105,18 @@ def merge_upsert(
     Commit protocol — staging is the write-ahead copy, dropped only after
     the live table verifiably holds its files:
 
-    1. Recover (:func:`recover_staging`): roll a complete leftover staging
-       dir (``_SUCCESS`` present) forward; drop an incomplete one as
-       debris — the table was never touched. Then check the bucket count.
-    2. Stage the batch, then the unchanged live rows; neither write leaves
-       ``_SUCCESS``, which merge_upsert writes after both. A crash before
-       it leaves staging for step 1 to drop; the replay applies again.
-    3. Commit, through :func:`recover_staging`: atomically write
-       ``{staging}/_manifest.json`` (tmp file, then rename) mapping each
-       staged bucket to its data-file names and lengths; then, for each
-       manifest bucket still under staging, delete the live ``bucket=b``
-       dir and rename the staged one into place (a Hadoop rename onto an
-       existing dir would nest the source inside it), and mark the table
-       ``_SUCCESS`` as a Spark write would. Staging with ``_SUCCESS`` but
-       no manifest has had no rename, so its listing is its manifest.
+    1. Recover (:func:`recover_staging`): roll a leftover staging dir
+       that holds a manifest forward; drop one without as debris — the
+       table was never touched. Then check the bucket count.
+    2. Stage the batch, then the unchanged live rows, then atomically
+       write ``{staging}/_manifest.json`` (tmp file, then rename) mapping
+       each staged bucket to its data-file names and lengths: the one
+       mark that staging is complete. A crash before the rename leaves
+       staging for step 1 to drop; the replay applies again.
+    3. Commit, through :func:`recover_staging`: for each manifest bucket
+       still under staging, delete the live ``bucket=b`` dir and rename
+       the staged one into place (a Hadoop rename onto an existing dir
+       would nest the source inside it).
     4. Verify: the live listing of those buckets must equal the manifest,
        else raise and keep staging.
     5. Drop staging.
@@ -155,21 +149,17 @@ def merge_upsert(
         batch = read.parquet(staging)
         existing = read.option("basePath", table_dir).parquet(*live_touched)
         _stage(existing.join(batch.select("url"), "url", "left_anti"), "append", staging)
-    write_file(spark, f"{staging}/_SUCCESS", b"")
+    manifest = json.dumps(_staged_manifest(spark, staging), sort_keys=True)
+    write_file(spark, f"{staging}/{MANIFEST}", manifest.encode())
     recover_staging(spark, table_dir)
     return sorted(int(b.split("=", 1)[1]) for b in touched)
 
 
 def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
-    """Write the manifest if absent, then swap every bucket directory
-    still under staging into the live table (delete live, rename staged),
-    then mark the table ``_SUCCESS``. Idempotent: a bucket already renamed
-    is no longer under staging."""
+    """Swap every manifest bucket directory still under staging into the
+    live table (delete live, rename staged). Idempotent: a bucket already
+    renamed is no longer under staging."""
     manifest = _read_manifest(spark, staging)
-    if manifest is None:
-        # no rename has happened yet: every staged bucket is still there
-        manifest = _staged_manifest(spark, staging)
-        write_file(spark, f"{staging}/{MANIFEST}", json.dumps(manifest, sort_keys=True).encode())
     fs, p = hadoop_fs(spark, table_dir)
     fs.mkdirs(p)
     staged = listing(spark, staging)
@@ -177,16 +167,14 @@ def _commit_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
         if b in staged:
             delete_path(spark, f"{table_dir}/{b}")
             rename_path(spark, f"{staging}/{b}", f"{table_dir}/{b}")
-    write_file(spark, f"{table_dir}/_SUCCESS", b"")
 
 
 def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) -> None:
     """Delete staging ONLY once the live listing of every manifest bucket
-    equals the manifest (data-file names and lengths; the staged listing
-    when no commit has started); on mismatch raise and keep staging for
-    the next recovery (an unverified drop would turn a loud commit
-    failure into silent row loss)."""
-    manifest = _read_manifest(spark, staging) or _staged_manifest(spark, staging)
+    equals the manifest (data-file names and lengths); on mismatch raise
+    and keep staging for the next recovery (an unverified drop would turn
+    a loud commit failure into silent row loss)."""
+    manifest = _read_manifest(spark, staging)
     bad = sorted(b for b in manifest if listing(spark, f"{table_dir}/{b}") != manifest[b])
     if bad:
         raise RuntimeError(
@@ -197,23 +185,22 @@ def _verify_and_drop_staging(spark: SparkSession, staging: str, table_dir: str) 
 
 
 def recover_staging(spark: SparkSession, table_dir: str) -> bool:
-    """Commit a complete :func:`merge_upsert` staging dir, if any: the only
-    code that commits, verifies and drops staging.
+    """Commit a :func:`merge_upsert` staging dir that holds a manifest, if
+    any: the only code that commits, verifies and drops staging.
 
-    Returns True when a complete staging dir (``_SUCCESS``) was found and
-    rolled forward: merge_upsert's own commit, or one that died before or
-    during its commit. Safe to call any time; merge_upsert calls it on
-    every entry, before it lists the live table (a mid-commit crash can
-    leave the table missing buckets, or missing altogether, while staging
-    holds the only good copy), and again once it has staged a batch. An
-    incomplete staging dir is dropped: the table was never touched. A crash
-    DURING recovery just leaves staging in place for the next attempt.
+    Returns True when such a dir was found and rolled forward:
+    merge_upsert's own commit, or one that died during its commit. Safe to
+    call any time; merge_upsert calls it on every entry, before it lists
+    the live table (a mid-commit crash can leave the table missing
+    buckets, or missing altogether, while staging holds the only good
+    copy), and again once it has published the manifest. A staging dir
+    without one is dropped: no rename has happened, so the table was never
+    touched. A crash DURING recovery just leaves staging in place for the
+    next attempt.
     """
     staging = f"{table_dir}__staging_merge"
-    if not _exists(spark, staging):
-        return False
-    if not _exists(spark, f"{staging}/_SUCCESS"):
-        # incomplete staging: the table was never touched
+    if _read_manifest(spark, staging) is None:
+        # no staging, or an incomplete one
         delete_path(spark, staging)
         return False
     _commit_staging(spark, staging, table_dir)

@@ -29,10 +29,12 @@ import struct
 
 import numpy as np
 
-# header-declared-dimension cap, matching operators/multimodal.py's
-# _MAX_PIXELS: the decode allocates plane/coefficient arrays sized by
-# the SOF header, so a crafted header must be rejected before any
-# buffer exists
+# header-declared-dimension cap of every image decoder (operators/
+# multimodal.py imports it): the decode allocates plane/coefficient
+# arrays sized by the SOF header, so a crafted header must be rejected
+# before any buffer exists. 25 MP (~75 MB RGB) is far beyond crawled
+# thumbnails; genuinely larger images degrade to the stub tier, which
+# is the uniform oversize contract.
 MAX_PIXELS = 25_000_000
 
 # zigzag scan order: index i of the scan -> (row, col) flattened offset

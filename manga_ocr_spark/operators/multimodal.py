@@ -59,6 +59,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from manga_ocr_spark.operators.jpeg import MAX_PIXELS
+
 MEDIA_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -71,13 +73,6 @@ MEDIA_FEATURE_SCHEMA = StructType(
 )
 
 FEATURE_DIM = 8
-
-# dimension sanity cap shared by the image decoders: header-declared
-# w*h bounds the allocations, so a crafted header must be rejected
-# before any buffer exists. 25 MP (~75 MB RGB) is far beyond crawled
-# thumbnails; genuinely larger images degrade to the stub tier, which
-# is the uniform oversize contract.
-_MAX_PIXELS = 25_000_000
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -233,7 +228,7 @@ def decode_png(data: bytes) -> tuple[int, int, list[float]]:
     w, h, depth, color, _comp, _filt, interlace = ihdr
     if interlace not in (0, 1) or color not in (0, 2, 3, 4, 6):
         raise ValueError("unsupported PNG variant")
-    if w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         # header-declared dims bound every allocation below — reject
         # crafted headers BEFORE allocating (a worker OOM is not
         # recoverable by the per-row except in _decode)
@@ -360,7 +355,7 @@ def decode_bmp(data: bytes) -> tuple[int, int, list[float]]:
     h = abs(h)
     if header_size < 40 or bpp not in (8, 24, 32) or compression != 0:
         raise ValueError("unsupported BMP variant")
-    if w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise ValueError("BMP dimensions out of bounds")
     nch = bpp // 8
     stride = (w * nch + 3) & ~3  # rows padded to 4 bytes
@@ -561,7 +556,7 @@ def decode_gif(data: bytes) -> tuple[int, int, list[float]]:
             raise ValueError("unexpected GIF block")
         w = int.from_bytes(data[pos + 5 : pos + 7], "little")
         h = int.from_bytes(data[pos + 7 : pos + 9], "little")
-        if w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
+        if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
             raise ValueError("GIF dimensions out of bounds")
         iflags = data[pos + 9]
         pos += 10
@@ -800,7 +795,7 @@ def decode_tiff(data: bytes) -> tuple[int, int, list[float]]:
         return v[0]
 
     w, h = one(256), one(257)
-    if w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise ValueError("TIFF dimensions out of bounds")
     compression = one(259, 1)
     photometric = one(262)

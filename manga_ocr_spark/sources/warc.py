@@ -56,14 +56,11 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from manga_ocr_spark.extraction.pdf import _INFLATE_CAP
+
 _GZIP_MAGIC = b"\x1f\x8b"
 _BATCH_PAGES = 1024  # output RecordBatch flush thresholds
 _BATCH_BYTES = 64 << 20
-# expansion cap per decompression call: a crawled server (or a crafted
-# member) can ship a decompression bomb — a few MB inflating to GBs.
-# Anything past the cap is treated like corruption: keep the bounded
-# prefix, never materialize the bomb.
-_INFLATE_CAP = 256 << 20
 
 
 def _gunzip_member_iter(data: bytes) -> Iterator[bytes]:

@@ -49,11 +49,12 @@ def run_upsert_stream(
     fails the batch unwritten.
 
     Exactly-once across restarts: merge_upsert stages the merged buckets
-    in one staging dir, marks it complete, and commits it through
-    recover_staging, which writes a commit manifest, then renames each
-    staged bucket directory into the table; the next call rolls an
-    interrupted commit forward from the manifest — a replayed micro-batch
-    re-enters recovery, so every crash window converges (see merge_upsert's protocol docstring). Rename
+    in one staging dir, publishes a manifest of its files (the one mark
+    that staging is complete) and commits it through recover_staging,
+    which renames each staged bucket directory into the table. The next
+    call rolls an interrupted commit forward from the manifest and drops
+    a staging dir without one, whose batch the stream replays — so every
+    crash window converges (see merge_upsert's protocol docstring). Rename
     is atomic per directory on local FS and HDFS, not on object stores,
     where a real deployment uses an Iceberg/Delta ``MERGE INTO``.
 

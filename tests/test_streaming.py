@@ -13,6 +13,7 @@ from pyspark.errors import StreamingQueryException
 
 from manga_ocr_spark.fixtures.pages import generate_pages
 from manga_ocr_spark.streaming.watch import run_upsert_stream
+from tests.test_upsert import _publish_manifest
 
 
 def _write_batch(spark, pdf: pd.DataFrame, path: str) -> None:
@@ -331,7 +332,7 @@ def test_upsert_stream_recovers_before_bootstrap_probe(spark, tmp_path):
     # interrupted rename commit
     staging = f"{table}__staging_merge"
     shutil.copytree(table, staging)
-    assert any(p.name == "_SUCCESS" for p in (tmp_path / "out" / "extracted").iterdir())
+    _publish_manifest(spark, staging)
     shutil.rmtree(table)
 
     # next batch arrives and the stream replays/continues

@@ -7,10 +7,14 @@ exactly the new text, no duplicates, and rewrites only affected buckets."""
 from __future__ import annotations
 
 import glob
+import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import Row, functions as F
 
+from manga_ocr_spark.jobs import extract as E, session as S, upsert as U
 from manga_ocr_spark.jobs.upsert import latest_wins, merge_upsert
 
 
@@ -21,6 +25,13 @@ def _write_table(spark, path: str, rows, num_buckets: int = 4):
     )
     df.write.mode("overwrite").partitionBy("bucket").parquet(path)
     return df
+
+
+def _publish_manifest(spark, staging: str) -> None:
+    """Mark a hand-built ``staging`` dir complete the way merge_upsert
+    does: publish the manifest of its staged listing."""
+    manifest = json.dumps(U._staged_manifest(spark, staging), sort_keys=True)
+    S.write_file(spark, f"{staging}/{U.MANIFEST}", manifest.encode())
 
 
 def test_merge_replaces_matched_inserts_new(spark, tmp_path):
@@ -143,8 +154,6 @@ def test_merge_over_a_corrupt_live_bucket_raises_and_leaves_the_table(spark, tmp
     # the live buckets a batch touches are read, never probed: a corrupt
     # file there must fail the merge before any commit step, not read as
     # "no rows" and let the staged bucket replace the live one
-    import pytest
-
     path = str(tmp_path / "tbl")
     _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(20)])
     (bucket,) = [r.bucket for r in spark.read.parquet(path).filter("url = 'u5'").collect()]
@@ -156,7 +165,33 @@ def test_merge_over_a_corrupt_live_bucket_raises_and_leaves_the_table(spark, tmp
     with pytest.raises(Exception):
         merge_upsert(spark, path, updates, num_buckets=4)
     assert _live_files(path) == before
-    assert not os.path.exists(f"{path}__staging_merge/_SUCCESS")
+    assert not os.path.exists(f"{path}__staging_merge/{U.MANIFEST}")
+
+
+def test_merge_publishes_one_driver_file_and_no_success_marker(spark, tmp_path, monkeypatch):
+    # the manifest is the merge's one commit marker: a merge into an
+    # existing table writes it and no other driver file, and leaves no
+    # _SUCCESS in the table or in staging
+    path = str(tmp_path / "tbl")
+    staging = f"{path}__staging_merge"
+    _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(20)])
+    os.remove(f"{path}/_SUCCESS")  # the setup write's own marker
+    written: list[str] = []
+    real_write_file = S.write_file
+
+    def write_file(spark_, p, data):
+        written.append(p)
+        real_write_file(spark_, p, data)
+
+    for module in (S, U, E):  # every module that writes driver files
+        monkeypatch.setattr(module, "write_file", write_file)
+    updates = spark.createDataFrame([Row(url="u3", text="NEW3"), Row(url="u99", text="ins99")])
+    assert merge_upsert(spark, path, updates, num_buckets=4)
+    assert written == [f"{staging}/{U.MANIFEST}"]
+    assert not glob.glob(f"{path}/**/_SUCCESS", recursive=True)
+    assert not os.path.exists(staging)
+    out = {r.url: r.text for r in spark.read.parquet(path).collect()}
+    assert len(out) == 21 and out["u3"] == "NEW3" and out["u99"] == "ins99"
 
 
 def test_merge_extracts_each_batch_once(spark, tmp_path):
@@ -186,10 +221,6 @@ def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
     # deleted, the process dies, and the streaming batch replays.
     # The replayed merge must first restore from the (complete) staging
     # dir, then re-apply — no rows lost, staging cleaned up.
-    import pytest
-
-    from manga_ocr_spark.jobs import upsert as U
-
     path = str(tmp_path / "tbl")
     rows = [Row(url=f"u{i}", text=f"old{i}") for i in range(40)]
     _write_table(spark, path, rows)
@@ -200,8 +231,6 @@ def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
     def crash_mid_commit(spark_, staging, table_dir):
         # simulate the commit deleting one AFFECTED live bucket before
         # the process dies, the staged one not yet renamed into place
-        import shutil
-
         affected = sorted(os.path.basename(p) for p in glob.glob(f"{staging}/bucket=*"))
         shutil.rmtree(os.path.join(table_dir, affected[0]))
         raise RuntimeError("simulated crash mid-commit")
@@ -222,16 +251,25 @@ def test_merge_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
     assert not os.path.exists(f"{path}__staging_merge")
 
 
-def test_merge_ignores_incomplete_staging(spark, tmp_path):
-    # a crash DURING the staging write leaves staging without _SUCCESS;
+@pytest.mark.parametrize("marker", [None, "_SUCCESS"])
+def test_merge_ignores_incomplete_staging(spark, tmp_path, marker):
+    # a crash DURING the staging write leaves staging without a manifest;
     # the table was never touched — the next merge must discard the
-    # debris (not "restore" half-written data) and proceed normally
+    # debris (not "restore" half-written data) and proceed normally. A
+    # _SUCCESS marker (what an older merge wrote before its manifest)
+    # does not make staging complete: only the manifest does
     path = str(tmp_path / "tbl")
     _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(10)])
     staging = f"{path}__staging_merge"
     os.makedirs(f"{staging}/bucket=0")
     with open(f"{staging}/bucket=0/part-000.parquet", "w") as f:
-        f.write("half-written debris")  # no _SUCCESS marker
+        f.write("half-written debris")  # no manifest
+    if marker:
+        open(f"{staging}/{marker}", "w").close()
+    before = _live_files(path)
+    assert U.recover_staging(spark, path) is False
+    assert not os.path.exists(staging)
+    assert _live_files(path) == before
 
     updates = spark.createDataFrame([Row(url="u1", text="NEW1")])
     merge_upsert(spark, path, updates, num_buckets=4)
@@ -247,16 +285,11 @@ def test_recover_staging_preserves_staging_on_failed_verification(
     # self-review r3 finding: recovery must keep the staging dir (the only
     # guaranteed-good copy) when its re-commit does not verifiably land —
     # an unverified delete turns a loud commit failure into silent loss
-    import shutil
-
-    import pytest
-
-    from manga_ocr_spark.jobs import upsert as U
-
     path = str(tmp_path / "tbl")
     _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(20)])
     staging = f"{path}__staging_merge"
-    shutil.copytree(path, staging)  # complete staging (has _SUCCESS)
+    shutil.copytree(path, staging)
+    _publish_manifest(spark, staging)  # complete staging
 
     monkeypatch.setattr(U, "_commit_staging", lambda *a, **k: None)  # commit lost
     shutil.rmtree(path)  # table gone: re-commit (a no-op here) cannot land
@@ -276,16 +309,11 @@ def test_verification_catches_same_count_wrong_content(spark, tmp_path):
     # check — a commit that landed the right number of wrong rows (or a
     # stale bucket dir with a matching count) must fail verification and
     # preserve staging.
-    import shutil
-
-    import pytest
-
-    from manga_ocr_spark.jobs import upsert as U
-
     path = str(tmp_path / "tbl")
     _write_table(spark, path, [Row(url=f"u{i}", text=f"old{i}") for i in range(20)])
     staging = f"{path}__staging_merge"
     shutil.copytree(path, staging)
+    _publish_manifest(spark, staging)
 
     # corrupt one live bucket: same row count, different content
     bucket_dirs = sorted(d for d in os.listdir(path) if d.startswith("bucket="))
@@ -305,8 +333,6 @@ def test_merge_with_another_bucket_count_raises_before_writing(spark, tmp_path):
     # at 8 buckets into a 4-bucket table would put it in a second bucket
     # beside its old row. The first merge records the count; a merge with
     # another one raises before it writes anything
-    import pytest
-
     path = str(tmp_path / "tbl")
     rows = [Row(url=f"u{i}", text=f"old{i}") for i in range(20)]
     merge_upsert(spark, path, spark.createDataFrame(rows), num_buckets=4)

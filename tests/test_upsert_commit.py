@@ -45,7 +45,8 @@ def _inject_crash(monkeypatch, boundary: str, table: str, staging: str) -> None:
             "after_manifest": live_bucket and not renamed,
             "after_1_of_n_buckets": live_bucket and len(renamed) == 1,
             "after_2_of_n_buckets": live_bucket and len(renamed) == 2,
-            "after_verification": path == staging,
+            # not the delete of the absent staging on merge entry
+            "after_verification": path == staging and renamed,
         }
         if crash.get(boundary):
             raise Crash(boundary)
@@ -70,6 +71,8 @@ def _inject_crash(monkeypatch, boundary: str, table: str, staging: str) -> None:
 
 
 def _table(spark, path: str) -> dict[str, str]:
+    if not glob.glob(f"{path}/bucket=*"):
+        return {}  # a missing table reads as empty, as in merge_upsert
     rows = spark.read.parquet(path).collect()
     got = {r.url: r.text for r in rows}
     assert len(got) == len(rows), "duplicate keys in the table"
@@ -84,10 +87,12 @@ def _table(spark, path: str) -> dict[str, str]:
 def test_merge_crash_at_commit_boundary_matches_dict_model(
     spark, tmp_path, monkeypatch, boundary, missing_table
 ):
-    # the crashed merge's staging is complete, so recovery alone rolls it
-    # forward to the merged table; the streaming replay of the same batch
-    # then applies it again as a no-op, and later merges carry on. With
-    # missing_table the crash hits the first batch, the one creating it.
+    # once the manifest is published, recovery alone rolls the crashed
+    # merge forward to the merged table; before that (after_staging) it
+    # drops staging and leaves the table as it was. Either way the
+    # streaming replay of the same batch then converges, and later merges
+    # carry on. With missing_table the crash hits the first batch, the
+    # one creating it.
     rng = random.Random(11)
     path = str(tmp_path / "tbl")
     staging = f"{path}__staging_merge"
@@ -97,6 +102,7 @@ def test_merge_crash_at_commit_boundary_matches_dict_model(
     crash_step = 0 if missing_table else 1
     for step in range(3):
         batch = {f"u{rng.randrange(50)}": f"v{step}_{j}" for j in range(8)}
+        before = dict(model)
         model.update(batch)
         updates = spark.createDataFrame([Row(url=k, text=v) for k, v in batch.items()])
         if step == crash_step:
@@ -104,10 +110,12 @@ def test_merge_crash_at_commit_boundary_matches_dict_model(
             with pytest.raises(Crash):
                 merge_upsert(spark, path, updates, num_buckets=4)
             monkeypatch.undo()
-            assert os.path.exists(f"{staging}/_SUCCESS")
-            assert recover_staging(spark, path) is True
+            published = boundary != "after_staging"
+            assert os.path.exists(f"{staging}/{U.MANIFEST}") == published
+            assert recover_staging(spark, path) is published
             assert not os.path.exists(staging)
-            assert _table(spark, path) == model, f"recovery diverged at {boundary}"
+            expected = model if published else before
+            assert _table(spark, path) == expected, f"recovery diverged at {boundary}"
         merge_upsert(spark, path, updates, num_buckets=4)
         assert _table(spark, path) == model, f"diverged at step {step} ({boundary})"
 
@@ -116,7 +124,7 @@ def test_crash_between_the_batch_and_the_unchanged_rows_is_discarded(
     spark, tmp_path, monkeypatch
 ):
     # the batch is staged, the unchanged live rows are not: staging has no
-    # _SUCCESS, so recovery drops it and leaves the table as it was, and
+    # manifest, so recovery drops it and leaves the table as it was, and
     # the replayed batch then applies in full
     path = str(tmp_path / "tbl")
     staging = f"{path}__staging_merge"
@@ -137,7 +145,7 @@ def test_crash_between_the_batch_and_the_unchanged_rows_is_discarded(
         merge_upsert(spark, path, updates, num_buckets=4)
     monkeypatch.undo()
     assert glob.glob(f"{staging}/bucket=*")  # the batch is staged
-    assert not os.path.exists(f"{staging}/_SUCCESS")
+    assert not os.path.exists(f"{staging}/{U.MANIFEST}")
     assert recover_staging(spark, path) is False
     assert not os.path.exists(staging)
     assert _live_files(path) == before
