@@ -31,12 +31,16 @@ Scale posture (designed for ~10^12 rows / 100 TB, tested at sandbox scale):
 
 A commit group runs ONE Spark job, the write of extracted/ (pinned by
 tests/test_resume.py; every job and task has a fixed cost that can exceed
-the extraction's own), in ``ceil(n_in * |group| / B)`` extraction tasks
-for an input of ``n_in`` partitions (``_group_width``), not one per input
-split; a salted run first hash-partitions on url in a map-stage job. The
-UDF stays in the write's result stage (pinned by tests/test_plans.py):
-Spark applies a result task's accumulator update once, from its
-successful attempt, but re-applies a shuffle-map task's on a stage re-run.
+the extraction's own), in ``ceil(w * |group| / B)`` extraction tasks
+(``_group_width``), not one per input split. The input's width ``w``
+is its scan's partition count. An input under default parallelism x
+``spark.sql.files.maxPartitionBytes`` bytes, which Spark splits finer
+to fill the slots, is worth no more than one per maxPartitionBytes of
+its bytes; a larger one keeps the scan's count. A salted run first
+hash-partitions on url in a map-stage job. The UDF stays in the write's
+result stage (pinned by tests/test_plans.py): Spark applies a result
+task's accumulator update once, from its successful attempt, but
+re-applies a shuffle-map task's on a stage re-run.
 """
 
 from __future__ import annotations
@@ -209,8 +213,10 @@ def _make_extract_map(out_schema: StructType, sums=None):
     Python, imported here (not at module top) so the task closure stays
     tiny and the spark-submit --py-files layout is exercised.
     ``ExtractJob.run`` sizes each commit group's stage by its share of
-    the input (``_group_width``) so that floor is paid per input split's
-    worth of rows, not per fragment of one.
+    the input's width (``_group_width``), counted in scan splits but, for
+    an input Spark splits finer than ``maxPartitionBytes`` to fill the
+    slots, no more than one per ``maxPartitionBytes`` of it, so that
+    floor is paid per split's worth of bytes, not per fragment of one.
 
     ``out_schema`` is ``extract_pages``'s: a ``blocks`` field emits the
     K6 debug column, a ``bucket`` field passes the input's through, and
@@ -306,6 +312,13 @@ def input_partitions(df: DataFrame) -> int | None:
     if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         return None
     return qe.toRdd().getNumPartitions()
+
+
+def input_bytes(df: DataFrame) -> int:
+    """``df``'s size in bytes as its optimized plan estimates it, read
+    without running a Spark job: a file scan's is its files' length; an
+    RDD-backed plan's is ``spark.sql.defaultSizeInBytes`` (unknown)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _group_width(total: int, group_size: int, num_buckets: int) -> int:
@@ -416,13 +429,25 @@ class ExtractJob:
         A filter on the computed ``bucket`` keeps the scan's partition
         count, so each group's extraction stage would run one Python task
         per input split, each holding |group|/B of its rows. Each group
-        is coalesced (no shuffle) to its share of the input's ``n_in``
-        partitions instead; ``n_in`` is read once, without a Spark job,
-        and an input whose count needs one keeps the scan's width."""
+        is coalesced (no shuffle) to its share of the input's width
+        instead: its ``n_in`` partitions, but for an input under
+        default parallelism x ``spark.sql.files.maxPartitionBytes``
+        bytes no more than ``ceil(input bytes / maxPartitionBytes)``.
+        Both are read once, without a Spark job; an input whose count
+        needs one keeps the scan's width, and so does one whose byte
+        size is unknown (an RDD-backed plan's is the default size)."""
         if self.commit_group_size < 1:
             raise ValueError(f"commit_group_size must be at least 1, got {self.commit_group_size}")
         num_buckets = table_buckets(self.spark, f"{self.out_dir}/extracted", self.num_buckets)
         n_in = None if self.salt_partitions else input_partitions(pages)
+        width_in = n_in
+        if n_in is not None:
+            # below parallelism x maxPartitionBytes Spark sizes splits to
+            # fill the slots, not by bytes; a larger input keeps its width
+            split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+            size = input_bytes(pages)
+            if size < self.spark.sparkContext.defaultParallelism * split:
+                width_in = min(n_in, max(1, -(-size // split)))
         pages = with_bucket(pages, num_buckets)
         done = self.committed_buckets()
         todo = [b for b in range(num_buckets) if b not in done]
@@ -440,7 +465,7 @@ class ExtractJob:
             if self.salt_partitions:
                 salt = _group_width(self.salt_partitions, len(group), num_buckets)
             elif n_in is not None:
-                width = _group_width(n_in, len(group), num_buckets)
+                width = _group_width(width_in, len(group), num_buckets)
                 if width < n_in:
                     sub = sub.coalesce(width)
             # the extraction tasks sum the stats: nothing reads extracted/ back
@@ -452,9 +477,11 @@ class ExtractJob:
             # write itself is idempotent, lineage stays the commit marker.
             # Per-write option, NOT a session conf: mutating the session
             # would silently change later overwrite writes' semantics.
+            # no _SUCCESS: extracted/ never keeps one, and lineage is the marker
             (
                 ext.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
                 .partitionBy("bucket")
                 .parquet(f"{self.out_dir}/extracted")
             )

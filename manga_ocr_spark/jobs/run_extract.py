@@ -17,7 +17,11 @@ Resume semantics: rerunning with the same --output skips every bucket
 that already has an ok lineage row (ExtractJob, jobs/extract.py).
 
 Task widths: each commit group of G of the --buckets B runs its
-extraction in about G/B of the input's partitions. --salt P is a
+extraction in about G/B of the input's width: its partition count, but
+for an input under default parallelism x spark.sql.files.maxPartitionBytes
+bytes, which Spark splits finer to fill the slots, no more than one per
+maxPartitionBytes of its bytes (an input far below that runs one task
+per group). --salt P is a
 whole-input width too: each group repartitions to ceil(P * G / B)
 partitions, so `--buckets 2048 --commit-group 8 --salt 4096` runs 16
 extraction tasks per group, not 4096.
@@ -36,8 +40,9 @@ def main() -> None:
     p.add_argument("--buckets", type=int, default=None, help="commit/resume buckets of a new output "
                    "(default jobs.extract.NUM_BUCKETS, 2048 at scale); an output keeps its recorded count")
     p.add_argument("--commit-group", type=int, default=8, help="buckets per lineage commit")
-    p.add_argument("--salt", type=int, default=None, help="salted repartition width over the whole input (skewed hosts); "
-                   "each commit group uses its share, ceil(salt * group / buckets)")
+    p.add_argument("--salt", type=int, default=None, help="salted repartition width over the whole input (skewed hosts), "
+                   "in place of its partition and byte count; each commit group uses its share, "
+                   "ceil(salt * group / buckets)")
     p.add_argument("--master", default=None, help="override master (defaults to spark-submit's)")
     args = p.parse_args()
 
@@ -52,7 +57,7 @@ def main() -> None:
     else:
         spark = active
 
-    from manga_ocr_spark.jobs.extract import ExtractJob
+    from manga_ocr_spark.jobs.extract import STATS_SCHEMA, ExtractJob
 
     pages = spark.read.parquet(args.input)
     job = ExtractJob(
@@ -65,7 +70,8 @@ def main() -> None:
     committed = job.run(pages)
     out = {
         "committed_buckets": committed,
-        "extracted_rows": spark.read.parquet(f"{args.output}/extracted").count(),
+        # the schema it wrote: no footer-inference job
+        "extracted_rows": spark.read.schema(STATS_SCHEMA).parquet(f"{args.output}/extracted").count(),
     }
     print(json.dumps(out))
 

@@ -276,55 +276,91 @@ def test_commit_group_job_budget(spark, pages_df, tmp_path, monkeypatch):
     assert len(_job_tasks(spark, f"{tag}-rerun")) == 0
 
 
-@pytest.mark.parametrize("salt", [None, 8])
-def test_commit_group_tasks_sized_to_its_share_of_the_input(
-    spark, pages_df, tmp_path, monkeypatch, salt
-):
-    # a filter on the computed bucket keeps the scan's partition count:
-    # unsized, each group's extraction runs one Python task (~0.25 CPU-s
-    # floor) per input split. Each of 2 groups of 4 buckets must run in
-    # ceil(n_in * 2 / 4) tasks and write at most that many files per
-    # bucket; a salted run writes in its share of the salt width
-    import glob
-    import math
-
-    from manga_ocr_spark.jobs.extract import input_partitions
-
-    src = str(tmp_path / "pages")
-    pages_df.repartition(6).write.parquet(src)
-    pages = spark.read.parquet(src)
-    n_in = input_partitions(pages)
-    assert n_in == 6
-    groups = _job_group_per_commit_group(spark, monkeypatch, f"width-{tmp_path.name}")
-    out = str(tmp_path / "out")
+def _write_tasks_per_group(spark, monkeypatch, pages, out, tag, salt=None) -> list[int]:
+    """Run a 2-group ExtractJob of 4 buckets over ``pages`` into ``out``;
+    returns each group's extraction-write task count (a group's last job:
+    a salted group's shuffle precedes it)."""
+    groups = _job_group_per_commit_group(spark, monkeypatch, tag)
     job = ExtractJob(spark, out, num_buckets=4, commit_group_size=2, salt_partitions=salt)
     try:
         assert sorted(job.run(pages)) == [0, 1, 2, 3]
     finally:
         _clear_job_group(spark)
     assert len(groups) == 2
-    # the extraction write is a group's last job; a salted group's
-    # shuffle precedes it
-    writes = [_job_tasks(spark, g)[-1] for g in groups]
+    return [_job_tasks(spark, g)[-1] for g in groups]
+
+
+@pytest.mark.parametrize("salt", [None, 8])
+def test_commit_group_tasks_sized_to_its_share_of_the_input(
+    spark, pages_df, tmp_path, monkeypatch, salt
+):
+    # a filter on the computed bucket keeps the scan's partition count,
+    # and Spark splits a small input to fill the default parallelism:
+    # unsized, each group's extraction runs one Python task (~0.25 CPU-s
+    # floor) per input split. An input under default parallelism x
+    # maxPartitionBytes is worth no more tasks than it has
+    # maxPartitionBytes of bytes: a 6-file input far below 128 MB runs 1
+    # task per group and writes 1 file per bucket; a salted run writes in
+    # its share of the salt width
+    import glob
+    import math
+    import os
+
+    from manga_ocr_spark.jobs.extract import input_partitions
+
+    src = str(tmp_path / "pages")
+    pages_df.repartition(6).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert input_partitions(pages) == 6
+    out = str(tmp_path / "out")
+    writes = _write_tasks_per_group(spark, monkeypatch, pages, out, f"width-{tmp_path.name}", salt)
     files = [len(glob.glob(f"{out}/extracted/bucket={b}/*.parquet")) for b in range(4)]
     if salt is None:
-        width = math.ceil(n_in * 2 / 4)
-        assert writes == [width] * 2, writes
-        assert max(files) <= width, files
+        assert writes == [1, 1], writes
+        assert files == [1] * 4, files
     else:
         assert writes == [math.ceil(salt * 2 / 4)] * 2, writes
         # hash-partitioned on url, each bucket's rows spread over more
         # than one of the group's tasks
         assert all(1 < f <= 4 for f in files), files
     assert spark.read.parquet(f"{out}/extracted").count() == pages_df.count()
+    if salt is not None:
+        return
+    # an input of default parallelism x maxPartitionBytes or more, as at
+    # scale, keeps the scan's width: with the setting at 1/P of its bytes
+    # each group runs ceil(n_in * 2 / 4) tasks, more than the byte count
+    # alone would give
+    total = sum(os.path.getsize(f) for f in glob.glob(f"{src}/*.parquet"))
+    split = total // spark.sparkContext.defaultParallelism
+    monkeypatch.undo()  # the next run's groups wrap extract_pages afresh
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(split))
+    try:
+        pages = spark.read.parquet(src)
+        n_in = input_partitions(pages)
+        writes = _write_tasks_per_group(
+            spark, monkeypatch, pages, str(tmp_path / "out_split"), f"split-{tmp_path.name}"
+        )
+    finally:
+        spark.conf.set(conf, old)
+    width = math.ceil(n_in * 2 / 4)
+    assert math.ceil(math.ceil(total / split) * 2 / 4) < width, (total, split, n_in)
+    assert writes == [width] * 2, writes
 
 
 def test_input_partitions_runs_no_job(spark, pages_df, tmp_path):
-    # the width probe reads a planned scan's partition count and runs no
-    # Spark job: a parquet input and a driver LocalRelation answer, an
+    # the width probes read a planned scan's partition count and the
+    # optimized plan's byte estimate, and run no Spark job: a parquet
+    # input, a driver LocalRelation and an RDD-backed frame answer, an
     # input whose plan holds an exchange (AQE would materialize the
-    # shuffle to count) answers None
-    from manga_ocr_spark.jobs.extract import input_partitions
+    # shuffle to count) answers None. A file scan's bytes are its files'
+    # length, a LocalRelation's its rows' estimate; an RDD-backed frame's
+    # are unknown (the default size), so ExtractJob keeps its scan's width
+    import glob
+    import os
+
+    from manga_ocr_spark.jobs.extract import input_bytes, input_partitions
 
     sc = spark.sparkContext
     src = str(tmp_path / "pages")
@@ -334,18 +370,21 @@ def test_input_partitions_runs_no_job(spark, pages_df, tmp_path):
         "parquet": spark.read.parquet(src),
         "local": pages_df,
         "exchange": pages_df.repartition(3),
+        "rdd": spark.createDataFrame(pages_df.rdd, pages_df.schema),
     }
     sc.setJobGroup(tag, tag)
     try:
         got = {k: input_partitions(df) for k, df in inputs.items()}
+        size = {k: input_bytes(df) for k, df in inputs.items()}
     finally:
         _clear_job_group(spark)
     assert _job_tasks(spark, tag) == []
-    assert got == {
-        "parquet": 3,
-        "local": pages_df.rdd.getNumPartitions(),
-        "exchange": None,
-    }
+    n_local = pages_df.rdd.getNumPartitions()
+    assert got == {"parquet": 3, "local": n_local, "exchange": None, "rdd": n_local}
+    assert size["parquet"] == sum(os.path.getsize(f) for f in glob.glob(f"{src}/*.parquet"))
+    unknown = int(spark.conf.get("spark.sql.defaultSizeInBytes").rstrip("b"))
+    assert 0 < size["local"] < unknown
+    assert size["rdd"] == unknown
 
 
 def test_commit_outputs_match_a_direct_aggregate(spark, pages_df, tmp_path):
