@@ -20,10 +20,8 @@ from dataclasses import dataclass
 
 from manga_ocr_spark.extraction.dom import Block, parse_blocks
 from manga_ocr_spark.extraction.merge import beam_merge
-from manga_ocr_spark.extraction.normalize import decode_html, join_blocks
+from manga_ocr_spark.extraction.normalize import MAX_HTML_BYTES, decode_html, join_blocks
 from manga_ocr_spark.extraction.score import score_blocks
-
-MAX_HTML_BYTES = 2_000_000  # input-size cap (SURVEY.md §4 X7)
 
 
 @dataclass

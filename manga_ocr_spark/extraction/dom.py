@@ -5,13 +5,14 @@ extraction (/root/reference/manga_ocr/ocr.py:119-133): the noisy layout
 (an HTML page instead of a manga panel) is turned into a sequence of
 feature vectors, one per text block, that a downstream classifier scores.
 
-Design: a single streaming pass with stdlib ``html.parser.HTMLParser``
-(tolerant of malformed markup, auto-decodes character references, zero
-third-party deps — determinism matters more than parse fidelity here).
-The token stream is segmented at *block-level tag boundaries*: any open or
-close of a block-level element flushes the text accumulated since the last
-boundary as one :class:`Block`. Inline elements (``a``, ``span``, ``b``,
-``ruby`` …) do not flush, so `<p>see <a>here</a> now</p>` is one block.
+Design: one pass of a compiled-regex tokenizer (:func:`_scan`), the only
+parse path; stdlib only — determinism matters more than parse fidelity
+here. The html.parser subclass below is the tests' reference, never run
+in production. Text is segmented at *block-level tag boundaries*: any
+open or close of a block-level element flushes the text accumulated
+since the last boundary as one :class:`Block`. Inline elements (``a``,
+``span``, ``b``, ``ruby`` …) do not flush, so `<p>see <a>here</a> now</p>`
+is one block.
 
 Features per block: innermost block tag, block-nesting depth,
 whitespace-free text length, whitespace-free anchor-text length (for link
@@ -166,6 +167,9 @@ class _Segment:
 
 
 class _BlockParser(HTMLParser):
+    """Reference parser: :func:`_scan` must yield its blocks
+    (tests/test_dom.py). Never called in production."""
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.blocks: list[Block] = []
@@ -267,7 +271,7 @@ class _BlockParser(HTMLParser):
 
 
 # -- fast tokenizer ----------------------------------------------------------
-# A single C-regex scan drives the same _BlockParser callbacks ~1.7x faster
+# A single C-regex scan runs the reference's callback logic ~1.7x faster
 # than html.parser's goahead loop (which pays per-tag attribute parsing we
 # never use). Quoted attribute values may contain '>' — the alternation
 # `"[^"]*"|'[^']*'` covers that, matching html.parser. Comments, CDATA and
@@ -306,23 +310,22 @@ for _t in BLOCK_TAGS:
     _TAG_ACTION[_t] = 5 if _t in BOILERPLATE_TAGS else 4
 
 
-def _scan(html_text: str, p: _BlockParser) -> None:
+def _scan(html_text: str) -> list[Block]:
     """Flat scanner: one C-regex pass driving inlined handler logic over
     LOCAL state (no method dispatch, no attribute access in the loop) —
-    semantically identical to feeding _BlockParser, which remains the
-    fallback path; equality on the whole fixture corpus is pinned by
-    tests/test_dom.py. Results are written back into ``p``."""
+    semantically identical to feeding the html.parser reference above;
+    equality on the whole fixture corpus is pinned by tests/test_dom.py."""
     pos = 0
     n = len(html_text)
     search = _TOKEN_RE.search
     actions = _TAG_ACTION
-    blocks = p.blocks
-    parts: list[str] = list(p._seg.parts)
-    link_parts: list[str] = list(p._seg.link_parts)
-    block_stack = p._block_stack
-    suppress_depth = p._suppress_depth
-    anchor_depth = p._anchor_depth
-    boiler_depth = p._boiler_depth
+    blocks: list[Block] = []
+    parts: list[str] = []
+    link_parts: list[str] = []
+    block_stack: list[str] = []
+    suppress_depth = 0
+    anchor_depth = 0
+    boiler_depth = 0
 
     def flush() -> None:
         nonlocal parts, link_parts
@@ -415,13 +418,8 @@ def _scan(html_text: str, p: _BlockParser) -> None:
                 if act == 5:
                     boiler_depth += 1
 
-    # write state back so p._flush() (and any caller introspection)
-    # behaves exactly as if _BlockParser had processed the stream
-    p._seg.parts = parts
-    p._seg.link_parts = link_parts
-    p._suppress_depth = suppress_depth
-    p._anchor_depth = anchor_depth
-    p._boiler_depth = boiler_depth
+    flush()  # trailing text of an unclosed document
+    return blocks
 
 
 def _maybe_unescape(data: str) -> str:
@@ -434,35 +432,19 @@ def _maybe_unescape(data: str) -> str:
 
 
 def parse_blocks(html_text: str) -> list[Block]:
-    """Parse HTML text into ordered text blocks; never raises.
+    """Parse HTML text into ordered text blocks; never raises (fuzz-pinned
+    by tests/test_fuzz.py).
 
-    Fast regex scanner by default (byte-identical to the html.parser path
-    on the full fixture corpus — pinned by tests); any scanner error falls
-    back to stdlib html.parser for that row. Malformed input (unclosed
-    tags, stray closers, empty documents, replacement characters from bad
-    bytes) degrades to best-effort blocks — the bad-row tolerance the
-    reference implements with per-item try/except-and-continue
-    (run.py:207-212, SURVEY.md §4 X6).
+    Malformed input (unclosed tags, stray closers, empty documents,
+    replacement characters from bad bytes) degrades to best-effort blocks
+    — the bad-row tolerance the reference implements with per-item
+    try/except-and-continue (run.py:207-212, SURVEY.md §4 X6); the
+    per-row backstop is ``core.extract``'s.
 
     Scope note: on PATHOLOGICAL tag soup (unterminated ``<!--``, bare
-    ``<``, ``</>``, digit tags) the two paths recover differently —
-    html.parser has elaborate invalid-markup heuristics the regex
-    tokenizer does not replicate. Both are individually deterministic
-    (the golden contract), the equivalence claim is corpus-scoped, and
-    the fallback exists for exceptions, not for recovery differences.
+    ``<``, ``</>``, digit tags) the scanner recovers differently from the
+    html.parser reference, which has elaborate invalid-markup heuristics
+    the regex tokenizer does not replicate. The scanner is deterministic
+    (the golden contract) and the equivalence claim is corpus-scoped.
     """
-    parser = _BlockParser()
-    try:
-        _scan(html_text, parser)
-        parser._flush()
-        return parser.blocks
-    except Exception:
-        pass
-    # fallback: tolerant stdlib parser
-    parser = _BlockParser()
-    try:
-        parser.feed(html_text)
-        parser.close()
-    except Exception:  # never let a row kill a task
-        parser._flush()
-    return parser.blocks
+    return _scan(html_text)

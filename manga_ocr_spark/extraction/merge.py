@@ -66,9 +66,7 @@ def beam_merge(blocks: list[Block]) -> list[Block]:
             nxt.append((total + add, ids + (b.block_id,), b.block_id))
         # deterministic prune: by total desc, then earlier/smaller id tuple
         nxt.sort(key=lambda s: (-s[0], s[1]))
-        # dedupe identical states (same last id and total) keeping best ids
-        beams = nxt[: BEAM_WIDTH * 2]
-        beams = beams[:BEAM_WIDTH]
+        beams = nxt[:BEAM_WIDTH]
     best_total, best_ids, _ = beams[0]
     if best_total <= 0.0 or not best_ids:
         return []

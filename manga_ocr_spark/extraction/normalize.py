@@ -118,6 +118,8 @@ def join_blocks(blocks: list[str]) -> str:
     return "\n".join(b for b in blocks if b)
 
 
+MAX_HTML_BYTES = 2_000_000  # input-size cap (SURVEY.md §4 X7)
+
 # WHATWG-ish encoding label aliases -> Python codecs. iso-8859-1 maps to
 # windows-1252 DELIBERATELY (the WHATWG encoding standard's rule: web
 # servers claiming latin-1 ship cp1252 bytes — 0x80-0x9F are smart quotes,
@@ -163,7 +165,7 @@ def sniff_charset(payload: bytes) -> str | None:
     return None
 
 
-def decode_html(payload: bytes | bytearray | None, max_bytes: int = 2_000_000) -> str:
+def decode_html(payload: bytes | bytearray | None, max_bytes: int = MAX_HTML_BYTES) -> str:
     """Decode an html payload to str; never raises.
 
     - ``None``/empty -> "".

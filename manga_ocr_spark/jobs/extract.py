@@ -212,11 +212,7 @@ def _make_extract_map(out_schema: StructType, sums=None):
     tasks, not this closure, sets it. The extraction core is pure
     Python, imported here (not at module top) so the task closure stays
     tiny and the spark-submit --py-files layout is exercised.
-    ``ExtractJob.run`` sizes each commit group's stage by its share of
-    the input's width (``_group_width``), counted in scan splits but, for
-    an input Spark splits finer than ``maxPartitionBytes`` to fill the
-    slots, no more than one per ``maxPartitionBytes`` of it, so that
-    floor is paid per split's worth of bytes, not per fragment of one.
+    ``ExtractJob.run`` sets how many tasks each commit group runs.
 
     ``out_schema`` is ``extract_pages``'s: a ``blocks`` field emits the
     K6 debug column, a ``bucket`` field passes the input's through, and

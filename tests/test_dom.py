@@ -108,33 +108,42 @@ def test_block_ids_are_document_order() -> None:
     assert [b.block_id for b in blocks] == [0, 1, 2]
 
 
-def test_fast_scanner_matches_stdlib_parser_on_corpus():
-    # the fast regex scanner must stay byte-identical to the html.parser
-    # fallback path — goldens depend on parse semantics
-    from manga_ocr_spark.extraction import dom as D
+def _corpus_texts() -> list[tuple[str, str]]:
     from manga_ocr_spark.extraction.normalize import decode_html
     from manga_ocr_spark.fixtures.pages import generate_pages
 
-    def via_std(t: str):
-        p = D._BlockParser()
-        try:
-            p.feed(t)
-            p.close()
-        except Exception:
-            p._flush()
-        return p.blocks
-
     pages = generate_pages(210, seed=99)
-    for r in pages.itertuples(index=False):
-        t = decode_html(r.html)
-        fast = [(b.tag, b.text, b.link_text_len, b.in_boilerplate) for b in D.parse_blocks(t)]
-        std = [(b.tag, b.text, b.link_text_len, b.in_boilerplate) for b in via_std(t)]
-        assert fast == std, r.url
+    return [(r.url, decode_html(r.html)) for r in pages.itertuples(index=False)]
+
+
+def test_fast_scanner_matches_stdlib_parser_on_corpus():
+    # the fast regex scanner must stay byte-identical to the html.parser
+    # reference — goldens depend on parse semantics
+    for url, t in _corpus_texts():
+        assert _via_fast_sig(t) == _via_std_sig(t), url
+
+
+def test_parse_blocks_never_builds_the_reference_parser(monkeypatch):
+    # one parse path: production never constructs the html.parser
+    # reference, so making it unbuildable changes no page's blocks
+    from manga_ocr_spark.extraction import dom as D
+
+    corpus = _corpus_texts()
+    before = [D.parse_blocks(t) for _, t in corpus]
+
+    class _Unbuildable:
+        def __init__(self, *args, **kwargs) -> None:
+            raise AssertionError("parse_blocks built the reference parser")
+
+    monkeypatch.setattr(D, "_BlockParser", _Unbuildable)
+    for (url, t), blocks in zip(corpus, before):
+        assert D.parse_blocks(t) == blocks, url
 
 
 def test_fast_scanner_matches_stdlib_on_adversarial_wellformed_pages():
     # beyond the generated corpus: handcrafted well-formed-but-nasty pages
-    # (the kind real crawls contain) must parse identically on both paths.
+    # (the kind real crawls contain) must parse identically to the
+    # html.parser reference.
     # Pathological INVALID soup is explicitly out of contract (see
     # parse_blocks docstring) — these are all legal-enough documents.
     from manga_ocr_spark.extraction import dom as D
@@ -170,7 +179,7 @@ def test_fast_scanner_matches_stdlib_on_adversarial_wellformed_pages():
         # doctype + conditional-comment-looking comment + pre with markup-ish text
         "<!DOCTYPE html><!--[if IE]><p>ie only</p><![endif]--><pre>code < notag > here</pre>",
         # processing instructions: terminated PIs drop (html.parser's
-        # handle_pi), an unterminated <? at EOF stays text — both paths
+        # handle_pi), an unterminated <? at EOF stays text — both parsers
         # must agree (found via the PDF-preamble work, round 3)
         "<?xml version='1.0'?><p>after xml decl</p><?php echo 1; ?><p>after php</p>",
         "<p>before</p><?broken pi with no close",
